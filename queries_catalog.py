@@ -1741,8 +1741,8 @@ def q_events_rollup(spark, sf_dir):
 @_q(
     "q_multimodal_stats",
     # 'bytes' section: binary-column plumbing — byte length + md5 checksum
-    # + boundary bytes of the payloads, decoded via Arrow-batched
-    # mapInPandas.  'pixels' section (round 10): the REAL pure-Python PPM
+    # + boundary bytes of the payloads (byte_stats, native column
+    # expressions).  'pixels' section (round 10): the REAL pure-Python PPM
     # decoder (operators/multimodal.py decode_image) over JVM-built
     # synthetic P6 payloads whose every pixel is (id%256, id*7%256,
     # id*13%256) — so the exact integer channel sums are predictable SQL
@@ -2232,21 +2232,23 @@ def q_events_rollup(spark, sf_dir):
 )
 def q_multimodal_stats(spark, sf_dir):
     from woe_monotonic_binning_spark.operators.multimodal import (
+        byte_stats,
         decode_audio,
         decode_image,
-        fake_decode_stats,
         media_from_documents,
         resize_image,
+        probe_media,
+    )
+    from tests.media_fixtures import (
+        synthetic_avi_media,
+        synthetic_flac_lpc_media,
+        synthetic_flac_media,
         synthetic_jpeg_420_media,
         synthetic_jpeg_422_media,
         synthetic_jpeg_exif_media,
         synthetic_jpeg_media,
-        probe_media,
-        synthetic_avi_media,
-        synthetic_flac_lpc_media,
-        synthetic_flac_media,
-        synthetic_mp4_media,
         synthetic_jpeg_progressive_media,
+        synthetic_mp4_media,
         synthetic_png_interlaced_media,
         synthetic_png_media,
         synthetic_png_palette_media,
@@ -2263,7 +2265,7 @@ def q_multimodal_stats(spark, sf_dir):
         null_i.alias("n_frames"), null_l.alias("duration_ms"),
         null_l.alias("sum_pcm"),
     ]
-    base = fake_decode_stats(media).select(
+    base = byte_stats(media).select(
         F.lit("bytes").alias("section"),
         "media_id", "kind", "n_bytes", "checksum", "first_byte", "last_byte",
         F.lit(None).cast("string").alias("fmt"),
@@ -2340,10 +2342,8 @@ def q_multimodal_stats(spark, sf_dir):
     # round 16): decode_text over the mixed-encoding fixture WITH the
     # per-row Content-Type hints — decoded-text md5 rides checksum, the
     # codec rides fmt, had_bom rides orientation, raw size rides n_bytes
-    from woe_monotonic_binning_spark.operators.multimodal import (
-        decode_text,
-        synthetic_text_media,
-    )
+    from woe_monotonic_binning_spark.operators.multimodal import decode_text
+    from tests.media_fixtures import synthetic_text_media
 
     text = decode_text(
         synthetic_text_media(docs), hint_col="charset_hint"
@@ -2366,10 +2366,8 @@ def q_multimodal_stats(spark, sf_dir):
     # per stored frame; frame_idx rides the n_frames column and the
     # avih-derived timestamp rides duration_ms — sums are the baseline
     # JPEG arithmetic with dc keyed on (id + frame)
-    from woe_monotonic_binning_spark.operators.multimodal import (
-        decode_frames,
-        synthetic_avi_mjpeg_media,
-    )
+    from woe_monotonic_binning_spark.operators.multimodal import decode_frames
+    from tests.media_fixtures import synthetic_avi_mjpeg_media
 
     frames = decode_frames(synthetic_avi_mjpeg_media(docs)).select(
         F.lit("frames").alias("section"),
@@ -2388,10 +2386,8 @@ def q_multimodal_stats(spark, sf_dir):
     # every bit is the closed-form comparison); the band-array md5 rides
     # checksum and the planted-duplicate count (same full hash, groups
     # of 4 seeds) rides n_pixels
-    from woe_monotonic_binning_spark.operators.multimodal import (
-        dhash_images,
-        synthetic_gradient_ppm_media,
-    )
+    from woe_monotonic_binning_spark.operators.multimodal import dhash_images
+    from tests.media_fixtures import synthetic_gradient_ppm_media
 
     dh = dhash_images(synthetic_gradient_ppm_media(docs, dup_every=4))
     dh_counts = dh.groupBy("dhash_bands").agg(F.count("*").alias("__n"))
@@ -2422,10 +2418,8 @@ def q_multimodal_stats(spark, sf_dir):
     # x exactly 2 samples, so every energy is a two-term closed form);
     # band md5 rides checksum, planted-duplicate count rides n_pixels,
     # sample count rides n_frames
-    from woe_monotonic_binning_spark.operators.multimodal import (
-        ahash_audio,
-        synthetic_tone_wav_media,
-    )
+    from woe_monotonic_binning_spark.operators.multimodal import ahash_audio
+    from tests.media_fixtures import synthetic_tone_wav_media
 
     ah = ahash_audio(synthetic_tone_wav_media(docs, dup_every=4))
     ah_counts = ah.groupBy("ahash_bands").agg(F.count("*").alias("__n"))
@@ -2541,8 +2535,8 @@ def q_frame_sample(spark, sf_dir):
     from woe_monotonic_binning_spark.operators.multimodal import (
         media_from_documents,
         sample_frames,
-        synthetic_avi_mjpeg_media,
     )
+    from tests.media_fixtures import synthetic_avi_mjpeg_media
 
     docs = _docs(spark, sf_dir)
     null_s = F.lit(None).cast("string")
@@ -3088,9 +3082,9 @@ def q_score_stream(spark, sf_dir):
 
 @_q("q_media_features")
 def q_media_features(spark, sf_dir):
-    """Multimodal feature extraction (mapInPandas batch shape) feeding the
-    similarity stack; deterministic fake embedding => rows-only check, with
-    determinism and composition asserted in tests/test_operators.py."""
+    """Multimodal feature extraction (a native byte histogram) feeding the
+    similarity stack; float vectors => rows-only check, with determinism,
+    unit norm and composition asserted in tests/test_operators.py."""
     from woe_monotonic_binning_spark.operators.multimodal import (
         extract_features,
         media_from_documents,
@@ -5535,10 +5529,8 @@ def q_dedup_lines(spark, sf_dir):
     # back to the SAME closed-form bytes the oracle md5s — leaving
     # chunk framing in, skipping a gzip layer, or mislabeling the
     # encoding columns breaks the hash.
-    from woe_monotonic_binning_spark.sources.warc import (
-        explode_warc_column,
-        synthetic_warc_blobs,
-    )
+    from woe_monotonic_binning_spark.sources.warc import explode_warc_column
+    from tests.media_fixtures import synthetic_warc_blobs
 
     warc_sec = explode_warc_column(
         synthetic_warc_blobs(_docs(spark, sf_dir))

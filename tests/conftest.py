@@ -54,3 +54,15 @@ def sf0001_dir():
 @pytest.fixture(scope="session")
 def sf001_dir():
     return SF001
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Say so when the reference library is missing: every reference-parity
+    golden test then skips, which a green summary line would hide."""
+    from tests._reference import load_reference
+
+    if load_reference() is None:
+        terminalreporter.write_line(
+            "reference library not available: the reference-parity golden "
+            "tests were skipped"
+        )

@@ -1965,9 +1965,7 @@ def test_curate_corpus_image_dedup_gate(spark):
     """curate_corpus(image_dedup=): docs sharing a perceptually-equal
     image collapse to the min-id doc before the text stages; docs
     without a media row (or with undecodable payloads) pass through."""
-    from woe_monotonic_binning_spark.operators.multimodal import (
-        synthetic_gradient_ppm_media,
-    )
+    from tests.media_fixtures import synthetic_gradient_ppm_media
     from woe_monotonic_binning_spark.pipeline import curate_corpus
 
     docs = spark.createDataFrame(
@@ -2010,9 +2008,7 @@ def test_curate_corpus_audio_dedup_gate(spark):
     """curate_corpus(audio_dedup=): docs whose audio is a perceptual
     near-dup (incl. a WAV-vs-identical-tone pair) collapse to the min-id
     doc; docs without audio pass through."""
-    from woe_monotonic_binning_spark.operators.multimodal import (
-        synthetic_tone_wav_media,
-    )
+    from tests.media_fixtures import synthetic_tone_wav_media
     from woe_monotonic_binning_spark.pipeline import curate_corpus
 
     docs = spark.createDataFrame(

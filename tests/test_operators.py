@@ -696,12 +696,12 @@ def test_multimodal_decode_roundtrip(spark):
     import hashlib
 
     from woe_monotonic_binning_spark.operators.multimodal import (
-        fake_decode_stats,
+        byte_stats,
         media_from_documents,
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    stats = fake_decode_stats(media_from_documents(docs)).collect()
+    stats = byte_stats(media_from_documents(docs)).collect()
     texts = {r.doc_id: r.text for r in docs.collect()}
     assert len(stats) == len(texts)
     for r in stats[:20]:
@@ -715,10 +715,8 @@ def test_decode_image_ppm_real_pixels(spark):
     """decode_image is a REAL decoder (round 10): synthetic JVM-built P6
     payloads decode to the exact per-channel integer sums; malformed and
     NULL payloads yield NULL-fmt rows instead of killing the worker."""
-    from woe_monotonic_binning_spark.operators.multimodal import (
-        decode_image,
-        synthetic_ppm_media,
-    )
+    from woe_monotonic_binning_spark.operators.multimodal import decode_image
+    from tests.media_fixtures import synthetic_ppm_media
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     out = {r.media_id: r for r in decode_image(synthetic_ppm_media(docs)).collect()}
@@ -941,11 +939,8 @@ def test_decode_image_png_palette_jvm_fixture(spark):
     """synthetic_png_palette_media (JVM-built, zeroed checksums) decodes
     to the id%3 arithmetic the catalog 'palette' oracle section encodes —
     the local twin of the driver-hash certification."""
-    from woe_monotonic_binning_spark.operators.multimodal import (
-        _PALETTE,
-        decode_image,
-        synthetic_png_palette_media,
-    )
+    from woe_monotonic_binning_spark.operators.multimodal import decode_image
+    from tests.media_fixtures import _PALETTE, synthetic_png_palette_media
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(64)
     rows = {
@@ -966,11 +961,8 @@ def test_decode_image_png_jvm_fixture_matches_ppm(spark):
     """synthetic_png_media (JVM-built stored-DEFLATE payloads, zeroed
     checksums) decodes byte-for-byte to the same channel sums as the PPM
     fixture for the same ids — the catalog 'png' section's local twin."""
-    from woe_monotonic_binning_spark.operators.multimodal import (
-        decode_image,
-        synthetic_png_media,
-        synthetic_ppm_media,
-    )
+    from woe_monotonic_binning_spark.operators.multimodal import decode_image
+    from tests.media_fixtures import synthetic_png_media, synthetic_ppm_media
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(64)
     png = {r.media_id: r for r in decode_image(synthetic_png_media(docs)).collect()}
@@ -1285,10 +1277,8 @@ def test_synthetic_flac_media_certifies_decoder(spark):
     with fmt 'flac', and a corrupted CRC-16 rejects to the NULL row."""
     from pyspark.sql import functions as F
 
-    from woe_monotonic_binning_spark.operators.multimodal import (
-        decode_audio,
-        synthetic_flac_media,
-    )
+    from woe_monotonic_binning_spark.operators.multimodal import decode_audio
+    from tests.media_fixtures import synthetic_flac_media
 
     docs = spark.createDataFrame([(i,) for i in range(23)], "doc_id long")
     rows = {
@@ -1315,10 +1305,8 @@ def test_synthetic_flac_lpc_media_certifies_decoder(spark):
     checksum gate."""
     from pyspark.sql import functions as F
 
-    from woe_monotonic_binning_spark.operators.multimodal import (
-        decode_audio,
-        synthetic_flac_lpc_media,
-    )
+    from woe_monotonic_binning_spark.operators.multimodal import decode_audio
+    from tests.media_fixtures import synthetic_flac_lpc_media
 
     docs = spark.createDataFrame([(i,) for i in range(20)], "doc_id long")
     rows = {
@@ -1340,8 +1328,8 @@ def test_probe_media_all_containers(spark):
     """probe_media (round 14): header-only container identification +
     metadata across every fixture family, plus rejects (garbage, NULL,
     truncated MP4, SOS-before-SOF JPEG) to the NULL-container row."""
-    from woe_monotonic_binning_spark.operators.multimodal import (
-        probe_media,
+    from woe_monotonic_binning_spark.operators.multimodal import probe_media
+    from tests.media_fixtures import (
         synthetic_avi_media,
         synthetic_flac_media,
         synthetic_jpeg_media,
@@ -1398,8 +1386,8 @@ def test_jpeg_fill_bytes_tolerated_by_both_walks(spark):
     from woe_monotonic_binning_spark.operators.multimodal import (
         _parse_jpeg,
         probe_media,
-        synthetic_jpeg_media,
     )
+    from tests.media_fixtures import synthetic_jpeg_media
 
     docs = spark.createDataFrame([(3,)], "doc_id long")
     base = bytes(synthetic_jpeg_media(docs).collect()[0].content)
@@ -1477,10 +1465,8 @@ def test_decode_frames_mjpeg_avi(spark):
     per stored '00dc' chunk with the closed-form JPEG sums, avih-derived
     timestamps, honest rejects for NULL/non-AVI payloads and for video
     chunks the JPEG decoder cannot parse."""
-    from woe_monotonic_binning_spark.operators.multimodal import (
-        decode_frames,
-        synthetic_avi_mjpeg_media,
-    )
+    from woe_monotonic_binning_spark.operators.multimodal import decode_frames
+    from tests.media_fixtures import synthetic_avi_mjpeg_media
 
     docs = spark.createDataFrame([(i,) for i in range(4)], "doc_id long")
     rows = decode_frames(synthetic_avi_mjpeg_media(docs)).collect()
@@ -1550,8 +1536,8 @@ def test_sample_frames_decode_true_samples_covering_frame(spark):
     from woe_monotonic_binning_spark.operators.multimodal import (
         decode_frames,
         sample_frames,
-        synthetic_avi_mjpeg_media,
     )
+    from tests.media_fixtures import synthetic_avi_mjpeg_media
 
     docs = spark.createDataFrame([(i,) for i in range(3)], "doc_id long")
     media = synthetic_avi_mjpeg_media(docs)
@@ -1763,10 +1749,8 @@ def test_decode_audio_wav_real_samples(spark):
     import struct
     import wave
 
-    from woe_monotonic_binning_spark.operators.multimodal import (
-        decode_audio,
-        synthetic_wav_media,
-    )
+    from woe_monotonic_binning_spark.operators.multimodal import decode_audio
+    from tests.media_fixtures import synthetic_wav_media
 
     samples = [(100, -50), (-32768, 32767), (0, 7), (1234, -999)]
     buf = io.BytesIO()
@@ -1965,13 +1949,12 @@ def test_max_distinct_auto_resolves_to_constant(spark):
     assert auto == rows(None)  # sf0.001 distincts < cap -> guard is a no-op
 
 
-def test_media_feature_extraction_composes_with_similarity(spark):
+def test_media_feature_extraction_composes_with_similarity(spark, sf0001_dir):
     from pyspark.sql import functions as F
 
     from woe_monotonic_binning_spark.operators.multimodal import (
         extract_features,
         media_from_documents,
-        resize_media,
     )
     from woe_monotonic_binning_spark.operators.similarity import brute_force_topk
 
@@ -1981,20 +1964,25 @@ def test_media_feature_extraction_composes_with_similarity(spark):
     assert feats.count() == docs.count()
     # deterministic: two runs produce identical vectors
     again = {r["media_id"]: r["feature"] for r in extract_features(media, dim=8).collect()}
+    payloads = {
+        r.doc_id: r.text.encode("utf-8")
+        for r in spark.read.parquet(f"{sf0001_dir}/documents.parquet").collect()
+    }
     for r in feats.collect():
         assert again[r["media_id"]] == r["feature"]
         norm = sum(x * x for x in r["feature"]) ** 0.5
         assert norm == pytest.approx(1.0, abs=1e-9) or norm == 0.0
+        # bit-equal to a numpy reference histogram (counts are exact
+        # integers, so the sum of squares has no ordering error)
+        hist = np.bincount(
+            np.frombuffer(payloads[r["media_id"]], dtype=np.uint8) % 8, minlength=8
+        ).astype(float)
+        n = np.linalg.norm(hist)
+        assert r["feature"] == list(hist / n if n > 0 else hist)
     # composes with the similarity operators unchanged
     emb = feats.select(F.col("media_id").alias("vec_id"), F.col("feature").alias("embedding"))
     top = brute_force_topk(emb, emb.limit(3), k=5)
     assert top.groupBy("query_id").count().filter("count != 5").count() == 0
-
-    resized = resize_media(media, 224, 224)
-    row = resized.select("meta.width", "meta.height", "meta.mime").first()
-    assert (row["width"], row["height"]) == (224, 224)
-    assert row["mime"] == "application/x-fake-resized"
-    assert resized.count() == docs.count()
 
 
 def test_winnowing_fingerprints_detect_local_overlap(spark):
@@ -2673,30 +2661,48 @@ def test_curate_corpus_jaccard_requires_block_cols(spark):
 
 
 def test_multimodal_kernels_tolerate_null_payloads(spark):
-    """Round-8 review: NULL binary payloads killed every mapInPandas
-    kernel with a worker-side TypeError; they now yield NULL features."""
+    """NULL payloads yield NULL stats and a NULL vector (round-8 review:
+    they once killed the worker).  An empty payload gets the -1 byte
+    sentinels and an all-zero vector; a 0xff byte reads unsigned (255)."""
     from woe_monotonic_binning_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
+        byte_stats,
         extract_features,
-        fake_decode_stats,
-        resize_media,
     )
 
     rows = [
         (1, "image", bytearray(b"abc"), ("m", 1, 1, 1000)),
         (2, "image", None, None),
+        (3, "image", bytearray(b""), None),
+        (4, "image", bytearray(b"\xff\x00\x80"), None),
     ]
-    media = spark.createDataFrame(
-        rows,
-        "media_id long, kind string, content binary, "
-        "meta struct<mime: string, width: int, height: int, duration_ms: int>",
-    )
-    stats = {r.media_id: r for r in fake_decode_stats(media).collect()}
+    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
+    stats = {r.media_id: r for r in byte_stats(media).collect()}
     assert stats[1].n_bytes == 3 and stats[1].checksum is not None
     assert stats[2].n_bytes is None and stats[2].checksum is None
+    assert (stats[3].n_bytes, stats[3].first_byte, stats[3].last_byte) == (0, -1, -1)
+    assert (stats[4].first_byte, stats[4].last_byte) == (255, 128)
     feats = {r.media_id: r.feature for r in extract_features(media, dim=4).collect()}
     assert feats[1] is not None and feats[2] is None
-    resized = {r.media_id: r.meta for r in resize_media(media, 8, 8).collect()}
-    assert resized[1]["width"] == 8 and resized[2] is None
+    assert feats[3] == [0.0, 0.0, 0.0, 0.0]
+
+
+def test_product_package_exports_no_fixtures():
+    """Payload generators are test fixtures (tests/media_fixtures.py): no
+    module of the package exports a public ``synthetic_*`` or ``fake_*``
+    name."""
+    import importlib
+    import pkgutil
+
+    import woe_monotonic_binning_spark as pkg
+
+    leaked = [
+        f"{info.name}.{name}"
+        for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + ".")
+        for name in vars(importlib.import_module(info.name))
+        if name.startswith(("synthetic_", "fake_"))
+    ]
+    assert leaked == []
 
 
 def test_sample_frames_covers_partial_interval_and_skips_empty(spark):
@@ -3564,10 +3570,8 @@ def test_parse_jpeg_fill_bytes_and_scan_validation():
 def test_synthetic_jpeg_media_certifies_decoder(spark):
     """JVM-built JPEG fixture end-to-end: decoded sums equal the
     closed-form 64*(257+2*dc1) for every row, fmt/dims pinned."""
-    from woe_monotonic_binning_spark.operators.multimodal import (
-        decode_image,
-        synthetic_jpeg_media,
-    )
+    from woe_monotonic_binning_spark.operators.multimodal import decode_image
+    from tests.media_fixtures import synthetic_jpeg_media
 
     docs = spark.createDataFrame([(i,) for i in range(23)], "doc_id long")
     rows = {r.media_id: r for r in decode_image(synthetic_jpeg_media(docs)).collect()}
@@ -3673,11 +3677,8 @@ def test_synthetic_jpeg_422_and_crop_fixtures(spark):
     """Round-14 fixtures: the 4:2:2 color twin decodes every pixel to
     exactly (Y-1, Y, Y+2), and the width-12 variant of the baseline
     fixture decodes-then-crops (only 4 columns of block 2 survive)."""
-    from woe_monotonic_binning_spark.operators.multimodal import (
-        decode_image,
-        synthetic_jpeg_422_media,
-        synthetic_jpeg_media,
-    )
+    from woe_monotonic_binning_spark.operators.multimodal import decode_image
+    from tests.media_fixtures import synthetic_jpeg_422_media, synthetic_jpeg_media
 
     docs = spark.createDataFrame([(i,) for i in range(19)], "doc_id long")
     rows = {
@@ -3825,8 +3826,8 @@ def test_resize_image_accepts_jpeg_source(spark):
     from woe_monotonic_binning_spark.operators.multimodal import (
         decode_image,
         resize_image,
-        synthetic_jpeg_media,
     )
+    from tests.media_fixtures import synthetic_jpeg_media
 
     docs = spark.createDataFrame([(5,)], "doc_id long")
     resized = resize_image(synthetic_jpeg_media(docs), 4, 2)
@@ -4197,10 +4198,8 @@ def test_progressive_real_files_decode():
 def test_synthetic_jpeg_progressive_media_certifies_decoder(spark):
     """JVM-built PROGRESSIVE fixture end-to-end: two-scan successive
     approximation decodes to the closed-form 64*(258+2*dc1) sums."""
-    from woe_monotonic_binning_spark.operators.multimodal import (
-        decode_image,
-        synthetic_jpeg_progressive_media,
-    )
+    from woe_monotonic_binning_spark.operators.multimodal import decode_image
+    from tests.media_fixtures import synthetic_jpeg_progressive_media
 
     docs = spark.createDataFrame([(i,) for i in range(23)], "doc_id long")
     rows = {
@@ -4255,10 +4254,8 @@ def test_parse_jpeg_dc_predictor_overflow_rejects():
 def test_synthetic_jpeg_420_media_certifies_color_path(spark):
     """JVM-built 4:2:0 COLOR fixture end-to-end: interleaved MCU decode +
     chroma upsampling + YCbCr->RGB give exactly (Y-1, Y, Y+2) per pixel."""
-    from woe_monotonic_binning_spark.operators.multimodal import (
-        decode_image,
-        synthetic_jpeg_420_media,
-    )
+    from woe_monotonic_binning_spark.operators.multimodal import decode_image
+    from tests.media_fixtures import synthetic_jpeg_420_media
 
     docs = spark.createDataFrame([(i,) for i in range(23)], "doc_id long")
     rows = {
@@ -4384,10 +4381,8 @@ def test_decode_text_stream_equals_batch(spark, tmp_path):
     """decode_text (incl. hints + cp1252, round 16) is a stateless Arrow
     projection: the SAME call on a Structured Streaming source decodes
     byte-identically to the batch run."""
-    from woe_monotonic_binning_spark.operators.multimodal import (
-        decode_text,
-        synthetic_text_media,
-    )
+    from woe_monotonic_binning_spark.operators.multimodal import decode_text
+    from tests.media_fixtures import synthetic_text_media
 
     docs = spark.range(54).withColumnRenamed("id", "doc_id")
     media = synthetic_text_media(docs).select(

@@ -706,10 +706,10 @@ def test_png_palette_index_offset_is_caught(spark, con, monkeypatch):
     itself runs in the Arrow worker where a driver monkeypatch cannot
     reach).  The 'palette' oracle section's id%3 arithmetic must
     disagree."""
-    import woe_monotonic_binning_spark.operators.multimodal as mm
+    import tests.media_fixtures as mf
 
-    rotated = mm._PALETTE[1:] + mm._PALETTE[:1]
-    monkeypatch.setattr(mm, "_PALETTE", rotated)
+    rotated = mf._PALETTE[1:] + mf._PALETTE[:1]
+    monkeypatch.setattr(mf, "_PALETTE", rotated)
     assert_caught(
         spark,
         con,
@@ -825,9 +825,9 @@ def test_jpeg_entropy_byte_corruption_is_caught(spark, con, monkeypatch):
     dc1=21 regardless of doc_id.  The oracle's closed-form sums vary with
     doc_id, so the worker-side Huffman decode of the corrupted bytes must
     produce mismatching sums for 15 of every 16 ids."""
-    import woe_monotonic_binning_spark.operators.multimodal as mm
+    import tests.media_fixtures as mf
 
-    orig = mm.synthetic_jpeg_media
+    orig = mf.synthetic_jpeg_media
 
     def mutated(docs, id_col="doc_id", width=16):
         out = orig(docs, id_col, width)
@@ -838,7 +838,7 @@ def test_jpeg_entropy_byte_corruption_is_caught(spark, con, monkeypatch):
             ),
         )
 
-    monkeypatch.setattr(mm, "synthetic_jpeg_media", mutated)
+    monkeypatch.setattr(mf, "synthetic_jpeg_media", mutated)
     assert_caught(
         spark, con, "q_multimodal_stats",
         qc.SPARK_QUERIES["q_multimodal_stats"](spark, SF),
@@ -850,9 +850,9 @@ def test_mp4_timescale_ignored_is_caught(spark, con, monkeypatch):
     timescale division: halving the fixture's timescale (500 instead of
     1000) without touching the duration field must double every probed
     duration_ms — the oracle's 5000 + id%97 rejects all rows."""
-    import woe_monotonic_binning_spark.operators.multimodal as mm
+    import tests.media_fixtures as mf
 
-    orig = mm.synthetic_mp4_media
+    orig = mf.synthetic_mp4_media
     # mvhd timescale bytes sit at: ftyp(16) + moov hdr(8) + mvhd hdr(8)
     # + version/flags(4) + creation/mod(8) -> offset 44, 1-based 45
     def mutated(docs, id_col="doc_id"):
@@ -862,7 +862,7 @@ def test_mp4_timescale_ignored_is_caught(spark, con, monkeypatch):
             F.overlay(F.col("content"), F.unhex(F.lit("000001f4")), 45),
         )
 
-    monkeypatch.setattr(mm, "synthetic_mp4_media", mutated)
+    monkeypatch.setattr(mf, "synthetic_mp4_media", mutated)
     assert_caught(
         spark, con, "q_multimodal_stats",
         qc.SPARK_QUERIES["q_multimodal_stats"](spark, SF),
@@ -876,8 +876,9 @@ def test_flac_sample_byte_corruption_is_caught(spark, con, monkeypatch):
     makes every payload decode to the same sum, which the oracle's
     id-varying 192*(1000+37*(id%16)) rejects for 15 of every 16 ids."""
     import woe_monotonic_binning_spark.operators.multimodal as mm
+    import tests.media_fixtures as mf
 
-    orig = mm.synthetic_flac_media
+    orig = mf.synthetic_flac_media
     # keep the frame CRC-valid: recompute it for the constant 1200 so the
     # mismatch comes from the decoded samples, not a checksum reject
     fh = bytes([0xFF, 0xF8, 0x14, 0x08, 0x00])
@@ -895,7 +896,7 @@ def test_flac_sample_byte_corruption_is_caught(spark, con, monkeypatch):
             ),
         )
 
-    monkeypatch.setattr(mm, "synthetic_flac_media", mutated)
+    monkeypatch.setattr(mf, "synthetic_flac_media", mutated)
     assert_caught(
         spark, con, "q_multimodal_stats",
         qc.SPARK_QUERIES["q_multimodal_stats"](spark, SF),
@@ -909,8 +910,9 @@ def test_flac_lpc_coefficient_corruption_is_caught(spark, con, monkeypatch):
     into geometric growth — every decoded sum disagrees with the
     oracle's 16*v."""
     import woe_monotonic_binning_spark.operators.multimodal as mm
+    import tests.media_fixtures as mf
 
-    orig = mm.synthetic_flac_lpc_media
+    orig = mf.synthetic_flac_lpc_media
     fh = bytes([0xFF, 0xF8, 0x64, 0x08, 0x00, 0x0F])
     fh += bytes([mm._crc8(fh)])
     tail_m = bytes([0x30, 0x1F, 0x80, 0x0F, 0xFF, 0xC0])  # coef0 2 -> 3
@@ -937,7 +939,7 @@ def test_flac_lpc_coefficient_corruption_is_caught(spark, con, monkeypatch):
             ),
         )
 
-    monkeypatch.setattr(mm, "synthetic_flac_lpc_media", mutated)
+    monkeypatch.setattr(mf, "synthetic_flac_lpc_media", mutated)
     assert_caught(
         spark, con, "q_multimodal_stats",
         qc.SPARK_QUERIES["q_multimodal_stats"](spark, SF),
@@ -949,9 +951,9 @@ def test_jpeg_exif_orientation_corruption_is_caught(spark, con, monkeypatch):
     the orientation value byte (offset 31 in the fixture layout) with a
     constant 5 makes every payload report orientation 5 — the oracle's
     1 + id%8 must mismatch for 7 of every 8 ids."""
-    import woe_monotonic_binning_spark.operators.multimodal as mm
+    import tests.media_fixtures as mf
 
-    orig = mm.synthetic_jpeg_exif_media
+    orig = mf.synthetic_jpeg_exif_media
 
     def mutated(docs, id_col="doc_id"):
         out = orig(docs, id_col)
@@ -959,7 +961,7 @@ def test_jpeg_exif_orientation_corruption_is_caught(spark, con, monkeypatch):
             "content", F.overlay(F.col("content"), F.unhex(F.lit("05")), 31)
         )
 
-    monkeypatch.setattr(mm, "synthetic_jpeg_exif_media", mutated)
+    monkeypatch.setattr(mf, "synthetic_jpeg_exif_media", mutated)
     assert_caught(
         spark, con, "q_multimodal_stats",
         qc.SPARK_QUERIES["q_multimodal_stats"](spark, SF),
@@ -971,9 +973,9 @@ def test_jpeg_422_entropy_byte_corruption_is_caught(spark, con, monkeypatch):
     overwrite the per-id DC byte (5th from last) with a constant so every
     payload decodes to the same Y — the oracle's id-varying sums must
     mismatch for 15 of every 16 ids."""
-    import woe_monotonic_binning_spark.operators.multimodal as mm
+    import tests.media_fixtures as mf
 
-    orig = mm.synthetic_jpeg_422_media
+    orig = mf.synthetic_jpeg_422_media
 
     def mutated(docs, id_col="doc_id"):
         out = orig(docs, id_col)
@@ -984,7 +986,7 @@ def test_jpeg_422_entropy_byte_corruption_is_caught(spark, con, monkeypatch):
             ),
         )
 
-    monkeypatch.setattr(mm, "synthetic_jpeg_422_media", mutated)
+    monkeypatch.setattr(mf, "synthetic_jpeg_422_media", mutated)
     assert_caught(
         spark, con, "q_multimodal_stats",
         qc.SPARK_QUERIES["q_multimodal_stats"](spark, SF),
@@ -996,14 +998,14 @@ def test_jpeg_crop_width_ignored_is_caught(spark, con, monkeypatch):
     ignores the declared width (full 16-wide frame, the output of a
     decoder that pads instead of cropping) must fail the oracle's
     12-wide crop arithmetic on width, n_pixels AND sums."""
-    import woe_monotonic_binning_spark.operators.multimodal as mm
+    import tests.media_fixtures as mf
 
-    orig = mm.synthetic_jpeg_media
+    orig = mf.synthetic_jpeg_media
 
     def mutated(docs, id_col="doc_id", width=16):
         return orig(docs, id_col, 16)
 
-    monkeypatch.setattr(mm, "synthetic_jpeg_media", mutated)
+    monkeypatch.setattr(mf, "synthetic_jpeg_media", mutated)
     assert_caught(
         spark, con, "q_multimodal_stats",
         qc.SPARK_QUERIES["q_multimodal_stats"](spark, SF),
@@ -1056,9 +1058,9 @@ def test_mjpeg_frame_entropy_corruption_is_caught(spark, con, monkeypatch):
     constant, so frame 2 of every payload decodes to dc1=21 regardless of
     (doc_id + 2) % 16.  The oracle's closed-form per-frame sums vary with
     the id, so 15 of every 16 rows of that frame mismatch."""
-    import woe_monotonic_binning_spark.operators.multimodal as mm
+    import tests.media_fixtures as mf
 
-    orig = mm.synthetic_avi_mjpeg_media
+    orig = mf.synthetic_avi_mjpeg_media
 
     def mutated(docs, id_col="doc_id", n_frames=3):
         out = orig(docs, id_col, n_frames)
@@ -1069,7 +1071,7 @@ def test_mjpeg_frame_entropy_corruption_is_caught(spark, con, monkeypatch):
             ),
         )
 
-    monkeypatch.setattr(mm, "synthetic_avi_mjpeg_media", mutated)
+    monkeypatch.setattr(mf, "synthetic_avi_mjpeg_media", mutated)
     assert_caught(
         spark, con, "q_multimodal_stats",
         qc.SPARK_QUERIES["q_multimodal_stats"](spark, SF),
@@ -1081,20 +1083,16 @@ def test_mjpeg_frame_order_corruption_is_caught(spark, con, monkeypatch):
     math: a walker that emitted frames in reverse (an index-table sorted
     descending, say) pairs frame 0's timestamp with frame 2's pixels —
     simulated by remapping id so the per-frame dc sequence reverses."""
-    import woe_monotonic_binning_spark.operators.multimodal as mm
+    import tests.media_fixtures as mf
 
-    orig = mm.synthetic_avi_mjpeg_media
+    orig = mf.synthetic_avi_mjpeg_media
 
     def mutated(docs, id_col="doc_id", n_frames=3):
         out = orig(docs, id_col, n_frames)
         # swap frame 0 and frame 2's entropy bytes: payload layout is
         # [... chunk0 ... b0 6f ffd9 (pad) chunk1 ... chunk2 ... b2 6f ffd9 (pad)]
         # byte b_f sits 4 from each chunk end; chunks are equal-length.
-        from woe_monotonic_binning_spark.operators.multimodal import (
-            _jpeg_fixture_prefix_hex,
-        )
-
-        jpeg_len = len(_jpeg_fixture_prefix_hex(16)) // 2 + 4
+        jpeg_len = len(mf._jpeg_fixture_prefix_hex(16)) // 2 + 4
         step = 8 + jpeg_len + (jpeg_len & 1)
         last = F.length("content") - 3 - (jpeg_len & 1)
         first = last - 2 * step
@@ -1105,7 +1103,7 @@ def test_mjpeg_frame_order_corruption_is_caught(spark, con, monkeypatch):
             F.overlay(F.overlay(F.col("content"), b2, first), b0, last),
         )
 
-    monkeypatch.setattr(mm, "synthetic_avi_mjpeg_media", mutated)
+    monkeypatch.setattr(mf, "synthetic_avi_mjpeg_media", mutated)
     assert_caught(
         spark, con, "q_multimodal_stats",
         qc.SPARK_QUERIES["q_multimodal_stats"](spark, SF),

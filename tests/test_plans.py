@@ -649,6 +649,8 @@ def test_perceptual_hash_plans_are_map_side(spark):
     from woe_monotonic_binning_spark.operators.multimodal import (
         ahash_audio,
         dhash_images,
+    )
+    from tests.media_fixtures import (
         synthetic_gradient_ppm_media,
         synthetic_tone_wav_media,
     )
@@ -665,9 +667,7 @@ def test_perceptual_hash_plans_are_map_side(spark):
 def test_tar_read_plan_is_one_pass(spark, tmp_path):
     """read_tar_shards is a binaryFile scan + one Arrow stage: zero
     exchanges — shard count IS the parallelism (round 16)."""
-    from woe_monotonic_binning_spark.operators.multimodal import (
-        synthetic_ppm_media,
-    )
+    from tests.media_fixtures import synthetic_ppm_media
     from woe_monotonic_binning_spark.sources.webdataset import (
         read_tar_shards,
         write_tar_shards,
@@ -689,3 +689,17 @@ def test_tar_read_plan_is_one_pass(spark, tmp_path):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan, plan[:1500]
+
+
+def test_byte_kernels_have_no_python_crossing(spark):
+    """byte_stats and extract_features are native column expressions:
+    neither plan holds a Python evaluation node."""
+    from woe_monotonic_binning_spark.operators.multimodal import (
+        byte_stats,
+        extract_features,
+        media_from_documents,
+    )
+
+    media = media_from_documents(spark.read.parquet(f"{SF}/documents.parquet"))
+    assert python_eval_count(byte_stats(media)) == 0
+    assert python_eval_count(extract_features(media, dim=16)) == 0

@@ -419,10 +419,8 @@ def test_tar_shards_feed_multimodal_and_stream(spark, tmp_path):
     """The intended composition: tar shards -> decode_image on the
     member bytes; and the SAME reader runs as a Structured Streaming
     source (binaryFile) with identical output."""
-    from woe_monotonic_binning_spark.operators.multimodal import (
-        decode_image,
-        synthetic_ppm_media,
-    )
+    from woe_monotonic_binning_spark.operators.multimodal import decode_image
+    from tests.media_fixtures import synthetic_ppm_media
     from woe_monotonic_binning_spark.sources.webdataset import (
         read_tar_shards,
         write_tar_shards,

@@ -65,7 +65,7 @@ def main() -> None:
         minhash_dedup_pairs,
         semantic_dedup,
     )
-    from woe_monotonic_binning_spark.operators.multimodal import (
+    from tests.media_fixtures import (
         synthetic_gradient_ppm_media,
         synthetic_tone_wav_media,
     )
@@ -319,19 +319,15 @@ def main() -> None:
     results: dict[str, dict[str, float]] = {}
     try:
         from woe_monotonic_binning_spark.langid import train_language_id
-        from woe_monotonic_binning_spark.operators.multimodal import (
-            decode_text,
-            synthetic_text_media,
-        )
+        from woe_monotonic_binning_spark.operators.multimodal import decode_text
+        from tests.media_fixtures import synthetic_text_media
         from woe_monotonic_binning_spark.operators.sampling import (
             mix_sources,
             temperature_weights,
         )
         from woe_monotonic_binning_spark.perplexity import train_ngram_lm
-        from woe_monotonic_binning_spark.sources.warc import (
-            explode_warc_column,
-            synthetic_warc_blobs,
-        )
+        from woe_monotonic_binning_spark.sources.warc import explode_warc_column
+        from tests.media_fixtures import synthetic_warc_blobs
 
         for label, d in (("uniform", uniform), ("skew", skew)):
             ctx = {

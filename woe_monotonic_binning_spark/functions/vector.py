@@ -46,12 +46,3 @@ def cosine_from_norms(a: Column, b: Column, n_a: Column, n_b: Column) -> Column:
     per-row hoist)."""
     return F.try_divide(dot(a, b), n_a * n_b)
 
-
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )

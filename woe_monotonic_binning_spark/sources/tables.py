@@ -27,19 +27,6 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
 
 def _nanos_fields(path: str) -> list[str]:
     if os.path.isdir(path):
@@ -129,8 +116,3 @@ def microsecond_parquet_copy(sf_dir: str, name: str, out_root: str = "/tmp/wmb_u
         open(marker, "w").close()
     return out_dir
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all driver tables as temp views (SQL entry surface)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

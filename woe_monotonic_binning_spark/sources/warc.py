@@ -70,7 +70,6 @@ __all__ = [
     "WARC_RECORD_SCHEMA",
     "read_warc",
     "explode_warc_column",
-    "synthetic_warc_blobs",
 ]
 
 WARC_RECORD_SCHEMA = (
@@ -282,106 +281,6 @@ def read_warc(
     return files.mapInPandas(
         _explode_kernel(http_payload), schema=WARC_RECORD_SCHEMA
     )
-
-
-def synthetic_warc_blobs(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """One closed-form single-record WARC blob per row, built ENTIRELY
-    JVM-side — the oracle-predictable fixture certifying the record
-    walk + HTTP body decoding end to end (the q_dedup_lines 'warc'
-    section; also the skew-smoke arm).  Body framing rotates on
-    ``id % 4``: 0 plain, 1 ``Transfer-Encoding: chunked`` (two real
-    hex-size chunks), 2 ``Content-Encoding: gzip`` — a VALID gzip
-    member assembled in SQL from a stored-mode deflate block +
-    ``F.crc32`` + ISIZE, so ``gzip.decompress`` verifies every byte —
-    3 raw-stream deflate (the zlib-fallback path).  Every variant
-    decodes back to the same closed-form ``'warc body <id> café'``
-    bytes.  Returns ``(id_col, content binary)``."""
-
-    def byte(c):  # one byte (binary) from an int column in 0..255
-        return F.encode(F.char(c), "ISO-8859-1")
-
-    def le16(c):  # little-endian uint16
-        return F.concat(byte(c % 256), byte(F.floor(c / 256).cast("long")))
-
-    did = F.col(id_col)
-    uri = F.concat(
-        F.lit("http://w"), F.pmod(did, F.lit(7)).cast("string"),
-        F.lit(".example.org/p/"), did.cast("string"),
-    )
-    ctype = F.lit("text/plain; charset=UTF-8")
-    variant = F.pmod(did, F.lit(4))
-    body = F.encode(
-        F.concat(F.lit("warc body "), did.cast("string"), F.lit(" café")),
-        "UTF-8",
-    )
-    blen = F.octet_length(body)
-    # raw DEFLATE of body as one stored (uncompressed) block:
-    # BFINAL|BTYPE byte 0x01, LEN le16, NLEN = LEN ^ 0xFFFF le16, bytes
-    deflate = F.concat(
-        F.lit(b"\x01"), le16(blen), le16(65535 - blen), body
-    )
-    crc = F.crc32(body)
-    gz = F.concat(
-        F.lit(b"\x1f\x8b\x08\x00\x00\x00\x00\x00\x00\x03"),
-        deflate,
-        byte(crc % 256),
-        byte(F.floor(crc / 256).cast("long") % 256),
-        byte(F.floor(crc / 65536).cast("long") % 256),
-        byte(F.floor(crc / 16777216).cast("long") % 256),
-        le16(blen), F.lit(b"\x00\x00"),  # ISIZE (blen < 65536)
-    )
-    # chunked framing: 'warc body ' (10 bytes, size line 'a') + the rest
-    part2 = F.encode(
-        F.concat(did.cast("string"), F.lit(" café")), "UTF-8"
-    )
-    chunked = F.concat(
-        F.encode(F.lit("a\r\n"), "UTF-8"),
-        F.encode(F.lit("warc body "), "UTF-8"),
-        F.encode(F.lit("\r\n"), "UTF-8"),
-        F.encode(
-            F.concat(F.lower(F.hex(F.octet_length(part2))), F.lit("\r\n")),
-            "UTF-8",
-        ),
-        part2,
-        F.encode(F.lit("\r\n0\r\n\r\n"), "UTF-8"),
-    )
-    extra_hdr = (
-        F.when(variant == 1, F.lit("Transfer-Encoding: chunked\r\n"))
-        .when(variant == 2, F.lit("Content-Encoding: gzip\r\n"))
-        .when(variant == 3, F.lit("Content-Encoding: deflate\r\n"))
-        .otherwise(F.lit(""))
-    )
-    wire_body = (
-        F.when(variant == 1, chunked)
-        .when(variant == 2, gz)
-        .when(variant == 3, deflate)
-        .otherwise(body)
-    )
-    block = F.concat(
-        F.encode(
-            F.concat(F.lit("HTTP/1.1 200 OK\r\nContent-Type: "), ctype,
-                     F.lit("\r\n"), extra_hdr, F.lit("\r\n")),
-            "UTF-8",
-        ),
-        wire_body,
-    )
-    blob = F.concat(
-        F.encode(
-            F.concat(
-                F.lit("WARC/1.0\r\nWARC-Type: response\r\n"
-                      "WARC-Target-URI: "), uri,
-                F.lit("\r\nContent-Length: "),
-                F.octet_length(block).cast("string"),
-                F.lit("\r\n\r\n"),
-            ),
-            "UTF-8",
-        ),
-        block,
-        F.encode(F.lit("\r\n\r\n"), "UTF-8"),
-    )
-    return docs.select(did.alias(id_col), blob.alias("content"))
 
 
 def explode_warc_column(
