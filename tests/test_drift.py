@@ -231,6 +231,18 @@ def test_histogram_plan_single_shuffle_no_python(spark):
     hist = bin_histogram(li, [("l_extendedprice", [0.0, 20000.0, 60000.0], [0, 0])])
     assert exchange_count(hist) == 1
     assert python_eval_count(hist) == 0
+    # both PSI forms go through the same histogram: one aggregation
+    # shuffle plus the per-variable total window
+    bins = bins_table(
+        "l_extendedprice", cuts=(0.0, 20000.0, 40000.0, 60000.0), woes=(-0.3, 0.1, 0.4)
+    )
+    pred = F.col("l_returnflag") == "R"
+    for detail in (
+        psi_report(li, li.filter(pred), bins),
+        psi_report(li, None, bins, actual_filter=pred),
+    ):
+        assert exchange_count(detail) == 2
+        assert python_eval_count(detail) == 0
 
 
 # --- quantile-grid PSI (score deciles, no fitted bins) --------------------
@@ -591,7 +603,7 @@ def test_period_col_name_validation_is_loud(spark):
     df = (
         spark.createDataFrame([(0.5, 1, "a")], "x double, target int, p string")
     )
-    for bad in ("variable", "bin", "count", "frac", "__tot", "a.b", "a`b"):
+    for bad in ("variable", "bin", "count", "frac", "__tot", "__pair", "a.b", "a`b"):
         with pytest.raises(ValueError, match="period_col"):
             stability_over_periods(df, bins, bad)
         with pytest.raises(ValueError, match="period_col"):
@@ -599,11 +611,15 @@ def test_period_col_name_validation_is_loud(spark):
     # the histogram's measure column is reserved too
     with pytest.raises(ValueError, match="period_col"):
         characteristic_stability(df, bins, "target", period_col="sum_target")
-    # a benign name still works end-to-end
+    # benign names still work end-to-end, including the single letter the
+    # histogram melt once used as its struct alias
     out = stability_over_periods(
         df.withColumn("month", F.lit("2024-01")), bins, "month"
     )
     assert out.count() == 1
+    assert stability_over_periods(df, bins, "p").count() == 1
+    char = characteristic_stability(df, bins, "target", period_col="p")
+    assert char.filter(F.col("n") > 0).count() == 1
 
 
 def test_psi_report_actual_filter_matches_two_frame(spark):

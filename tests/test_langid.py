@@ -157,6 +157,10 @@ def test_duckdb_twin_parity(spark):
         (3, None),
         (4, "xy"),
         (5, "naïve café über straße œuvre"),
+        (6, "der schnelle fuchs am ufer"),
+        (7, "the quick fox ashore"),
+        (8, "naïve café über"),
+        (9, ""),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     mine = {
@@ -274,10 +278,9 @@ def test_curate_corpus_lang_gate(spark):
 
 
 def test_predict_plan_is_map_side(spark):
-    """Serving is one fused map-side pass on both folds: zero Exchange,
-    zero joins; the expr fold is additionally zero-Python (the model
-    lives in single array-Literal nodes), so at 100 TB both fuse into
-    the corpus scan."""
+    """Serving is one fused map-side pass: zero Exchange, zero joins and
+    zero Python (the model lives in single array-Literal nodes), so at
+    100 TB it fuses into the corpus scan."""
     from woe_monotonic_binning_spark.plans import (
         exchange_count,
         python_eval_count,
@@ -285,35 +288,8 @@ def test_predict_plan_is_map_side(spark):
 
     m = train_language_id(_fixture_df(spark), buckets=64)
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for method in ("arrow", "expr"):
-        plan_df = m.predict(docs, method=method)
-        assert exchange_count(plan_df) == 0, method
-    assert python_eval_count(m.predict(docs, method="expr")) == 0
-
-
-def test_arrow_and_expr_predict_identical(spark):
-    """The two physical folds are one semantics: identical bigint
-    scores and argmax on every probe, including NULL/gram-less text
-    and multi-byte chars."""
-    m = train_language_id(_fixture_df(spark), buckets=64)
-    probe = spark.createDataFrame(
-        [(0, "der schnelle fuchs am ufer"), (1, "the quick fox ashore"),
-         (2, None), (3, "xy"), (4, "naïve café über")],
-        "doc_id long, text string",
-    )
-    cols = ["doc_id", "lang_pred"] + [
-        f"lang_score_{l}" for l in m.languages
-    ]
-    a = sorted(tuple(r) for r in m.predict(
-        probe, method="expr"
-    ).select(*cols).collect())
-    b = sorted(tuple(r) for r in m.predict(
-        probe, method="arrow"
-    ).select(*cols).collect())
-    assert a == b
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="method"):
-        m.predict(probe, method="gpu")
+    assert exchange_count(m.predict(docs)) == 0
+    assert python_eval_count(m.predict(docs)) == 0
 
 
 def test_mixed_ngram_lengths(spark):

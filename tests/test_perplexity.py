@@ -141,6 +141,10 @@ def test_duckdb_twin_parity(spark):
         (2, None),
         (3, "the the the"),
         (4, "Dog, TREE; hill!"),
+        (5, "the quick fox jumps"),
+        (6, "unseen zz qq"),
+        (7, ""),
+        (8, "the the over under the"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     mine = {
@@ -247,58 +251,25 @@ def test_curate_corpus_perplexity_gate(spark):
 
 
 def test_score_plan_shape(spark):
-    """Serving is a map-side pass on both folds: zero shuffle Exchange
-    (the arrow kernel ships the tables in the closure; the expr fold's
-    one-row model frame is a broadcast, not a shuffle), so at 100 TB
-    both fuse into the corpus scan."""
-    from woe_monotonic_binning_spark.plans import (
-        exchange_count,
-        python_eval_count,
-    )
+    """Serving is a map-side pass: zero shuffle Exchange (the Arrow
+    kernel ships the tables in the closure), so at 100 TB it fuses into
+    the corpus scan."""
+    from woe_monotonic_binning_spark.plans import exchange_count
 
     m = train_ngram_lm(_trusted_df(spark), min_count=1)
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for method in ("arrow", "expr"):
-        plan_df = m.score(docs, keep_threshold=40.0, method=method)
-        assert exchange_count(plan_df) == 0, method
-    assert python_eval_count(
-        m.score(docs, keep_threshold=40.0, method="expr")
-    ) == 0
-
-
-def test_arrow_and_expr_folds_are_identical(spark):
-    """The two physical folds are one semantics: identical bigint
-    log-mass, counts, gate and NULL posture on every probe row —
-    including <unk>-mapped and token-less text."""
-    m = train_ngram_lm(_trusted_df(spark), min_count=1)
-    probe = spark.createDataFrame(
-        [(0, "the quick fox jumps"), (1, "unseen zz qq"), (2, None),
-         (3, ""), (4, "the the over under the")],
-        "doc_id long, text string",
-    )
-    cols = ["doc_id", "ppl_logmass", "ppl_n", "ppl", "ppl_keep"]
-    a = sorted(tuple(r) for r in m.score(
-        probe, keep_threshold=40.0, method="expr"
-    ).select(*cols).collect())
-    b = sorted(tuple(r) for r in m.score(
-        probe, keep_threshold=40.0, method="arrow"
-    ).select(*cols).collect())
-    assert a == b
-    with pytest.raises(ValueError, match="method"):
-        m.score(probe, method="vectorized")
+    assert exchange_count(m.score(docs, keep_threshold=40.0)) == 0
 
 
 def test_method_dispatch_and_big_table_parity(spark):
-    """'auto' is the Arrow kernel (the measured-fastest path at every
-    table size); 'expr' is the explicit zero-Python variant — visible
-    in the plan.  A 20k-padded table scores in-vocab rows identically
-    (the padding keys never fire)."""
+    """Scoring is the Arrow kernel — visible in the plan.  A 20k-padded
+    table scores in-vocab rows identically (the padding keys never
+    fire)."""
     from woe_monotonic_binning_spark.plans import python_eval_count
 
     m = train_ngram_lm(_trusted_df(spark), min_count=1)
     probe = spark.createDataFrame([(0, "the fox")], "doc_id long, text string")
-    assert python_eval_count(m.score(probe)) > 0  # auto == arrow
-    assert python_eval_count(m.score(probe, method="expr")) == 0
+    assert python_eval_count(m.score(probe)) > 0
     big_bi = dict(m.bigram_logp)
     for i in range(20_001):
         big_bi[f"zz{i} qq{i}"] = -5_000_000

@@ -26,7 +26,9 @@ Scale posture (the 100 TB read):
   whole-stage-codegen CASE chain as the encoder, melted to
   ``(variable, bin)`` pairs and partially aggregated map-side, so the one
   shuffle carries at most ``tasks x variables x (bins+2)`` count rows —
-  never data rows.
+  never data rows.  Every histogram here is :func:`bin_histogram`; PSI
+  feeds it rows tagged expected/actual (a union of two frames, or one
+  scan with a filter predicate), so both sides share one aggregation.
 - Everything after the histograms is arithmetic on ``variables x bins``
   rows (hundreds), done with tiny DataFrame joins — no collect of data,
   no Python on the data path.
@@ -97,6 +99,7 @@ _RESERVED_COLS = frozenset(
         "__k",
         "__bad_tot",
         "__good_tot",
+        "__pair",
     }
 )
 
@@ -198,9 +201,9 @@ def bin_histogram(
                 for v, cuts, _ in specs
             ]
         )
-    ).alias("p")
+    ).alias("__pair")
     melted = df.select(*extra_cols, *sum_cols, pairs).select(
-        "p.variable", "p.bin", *extra_cols, *sum_cols
+        "__pair.variable", "__pair.bin", *extra_cols, *sum_cols
     )
     return melted.groupBy("variable", "bin", *extra_cols).agg(
         F.count(F.lit(1)).alias("count"),
@@ -225,36 +228,27 @@ def _scaffold(spark, specs) -> DataFrame:
     )
 
 
-def _fractions(hist: DataFrame, scaffold: DataFrame, prefix: str) -> DataFrame:
-    # Totals as a WINDOW over the scaffold-joined frame, not a second
-    # aggregation of `hist`: hist's lineage is a full corpus scan, and a
-    # separate groupBy+join would re-evaluate it — two scans per frame
-    # (four per psi_report), caught in the round-7 plan audit.  The window
-    # runs over variables x (bins+2) rows; the scaffold is exhaustive, so
-    # every hist row matches exactly one scaffold row and the window sum
-    # IS the frame total.
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("variable")
-    joined = scaffold.join(hist, ["variable", "bin"], "left").withColumn(
-        "__cnt", F.coalesce(F.col("count"), F.lit(0))
-    )
-    return joined.select(
-        "variable",
-        "bin",
-        "interval_lo",
-        "interval_hi",
-        F.col("__cnt").alias(f"{prefix}_count"),
-        (
-            F.col("__cnt") / F.greatest(F.sum("__cnt").over(w), F.lit(1))
-        ).alias(f"{prefix}_frac"),
-    )
-
-
 def _psi_component(e: Column, a: Column, min_frac: float) -> Column:
     ec = F.greatest(e, F.lit(float(min_frac)))
     ac = F.greatest(a, F.lit(float(min_frac)))
     return (ac - ec) * F.log(ac / ec)
+
+
+def _gated_specs(
+    bins, iv_threshold, bin_threshold, remove_100_corr, variables=None
+) -> list:
+    """The deployed variable set: ``compile_bin_exprs`` under the encoder's
+    gates, optionally restricted to ``variables``.  An empty set raises —
+    there is nothing to monitor."""
+    specs = compile_bin_exprs(
+        _bins_to_pandas(bins), iv_threshold, bin_threshold, remove_100_corr
+    )
+    if variables is not None:
+        keep = set(variables)
+        specs = [s for s in specs if s[0] in keep]
+    if not specs:
+        raise ValueError("no variables survive the bin gates; nothing to monitor")
+    return specs
 
 
 def psi_report(
@@ -280,37 +274,29 @@ def psi_report(
     expected_frac, actual_frac, psi_component`` — feed to
     :func:`psi_summary` for the per-variable index.
 
-    ``actual_filter`` (keyword-only, round 18, guide §6): when the actual
-    population is a FILTER of the expected one — the standard
-    recent-window-vs-development monitoring shape — pass the predicate
-    here (with ``actual=None``) instead of a second DataFrame.  Both
-    histograms then ride ONE scan of ``expected``: the actual-side count
-    becomes ``count(rows where predicate)`` inside the same aggregation,
-    which is integer-exactly the count the two-frame form produces
-    (``filter(p)`` keeps exactly the rows where ``p`` is TRUE, and
-    ``count(when(p, 1))`` counts exactly those rows — NULL/FALSE fall out
-    of both identically).  Value parity is pinned by
+    ``actual_filter`` (keyword-only): when the actual population is a
+    FILTER of the expected one — the standard recent-window-vs-development
+    monitoring shape — pass the predicate here (with ``actual=None``)
+    instead of a second DataFrame.  Both histograms then ride ONE scan of
+    ``expected``: the actual-side count becomes the sum of
+    ``coalesce(predicate, false)`` inside the same aggregation, which is
+    integer-exactly the count the two-frame form produces (``filter(p)``
+    keeps exactly the rows where ``p`` is TRUE — NULL/FALSE fall out of
+    both identically).  Value parity is pinned by
     tests/test_drift.py::test_psi_report_actual_filter_matches_two_frame.
     """
-    specs = compile_bin_exprs(
-        _bins_to_pandas(bins), iv_threshold, bin_threshold, remove_100_corr
+    specs = _gated_specs(
+        bins, iv_threshold, bin_threshold, remove_100_corr, variables
     )
-    if variables is not None:
-        keep = set(variables)
-        specs = [s for s in specs if s[0] in keep]
-    if not specs:
-        raise ValueError("no variables survive the bin gates; nothing to monitor")
-    if actual_filter is not None:
-        if actual is not None:
-            raise ValueError(
-                "pass either a second DataFrame (actual) or actual_filter, "
-                "not both"
-            )
-        return _psi_detail_one_scan(expected, specs, min_frac, actual_filter)
-    if actual is None:
+    if actual_filter is not None and actual is not None:
+        raise ValueError(
+            "pass either a second DataFrame (actual) or actual_filter, "
+            "not both"
+        )
+    if actual_filter is None and actual is None:
         raise ValueError("psi_report needs an actual population: a second "
                          "DataFrame or actual_filter=<predicate>")
-    return _psi_detail_from_specs(expected, actual, specs, min_frac)
+    return _psi_detail(expected, actual, specs, min_frac, actual_filter)
 
 
 def psi_report_quantile(
@@ -351,107 +337,64 @@ def psi_report_quantile(
             )
         cuts = [float("-inf"), *inner, float("inf")]
         specs.append((col, cuts, [0.0] * (len(cuts) - 1)))
-    return _psi_detail_from_specs(expected, actual, specs, min_frac)
+    return _psi_detail(expected, actual, specs, min_frac)
 
 
-def _psi_detail_from_specs(
-    expected: DataFrame, actual: DataFrame, specs, min_frac: float
+def _psi_detail(
+    expected: DataFrame,
+    actual: DataFrame | None,
+    specs,
+    min_frac: float,
+    actual_filter: Column | str | None = None,
 ) -> DataFrame:
-    # Fused two-population histogram (round 17, guide §2.3/§2.4): the two
-    # frames are side-tagged and unioned so ONE partial/final aggregation
-    # produces both count columns keyed on (variable, bin) — one Exchange
-    # where the former per-side bin_histogram pair had two, and the
-    # expected-vs-actual equi-join disappears outright (plus one of the
-    # two scaffold joins).  Each input is still scanned exactly once (the
-    # union's children), scan tasks are side-pure so map-side partial
-    # aggregation collapses exactly as before, and the per-(variable, bin)
-    # counts — and everything derived from them — are value-identical to
-    # the two-pass form.
-    from pyspark.sql.window import Window
-
-    scaffold = _scaffold(expected.sparkSession, specs)
+    # The one PSI histogram path: every row carries two 0/1 side tags,
+    # __e (expected) and __a (actual), and bin_histogram sums both in ONE
+    # partial/final aggregation keyed on (variable, bin).  Two frames are
+    # tagged (1, 0) and (0, 1) and unioned: each input is still scanned
+    # once and scan tasks are side-pure, so map-side partial aggregation
+    # collapses per side.  A filter of `expected` tags one scan
+    # (1, coalesce(predicate, false)) — the actual sum counts exactly the
+    # rows `filter(predicate)` keeps, so both forms give the same counts.
     names = [v for v, _, _ in specs]
-    tagged = (
-        expected.select(*[F.col(v).cast("double").alias(v) for v in names])
-        .withColumn("__side", F.lit(0))
-        .unionByName(
-            actual.select(*[F.col(v).cast("double").alias(v) for v in names])
-            .withColumn("__side", F.lit(1))
-        )
-    )
-    pairs = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(v).alias("variable"),
-                    _bin_index_expr(F.col(v), cuts).alias("bin"),
-                )
-                for v, cuts, _ in specs
-            ]
-        )
-    ).alias("p")
-    hist = (
-        tagged.select("__side", pairs)
-        .select("p.variable", "p.bin", "__side")
-        .groupBy("variable", "bin")
-        .agg(
-            F.count(F.when(F.col("__side") == 0, F.lit(1))).alias("__ec"),
-            F.count(F.when(F.col("__side") == 1, F.lit(1))).alias("__ac"),
-        )
-    )
-    return _psi_finish(scaffold, hist, min_frac)
 
+    def tag(df: DataFrame, e: Column, a: Column) -> DataFrame:
+        return df.select(
+            *[F.col(v).cast("double").alias(v) for v in names],
+            e.alias("__e"),
+            a.alias("__a"),
+        )
 
-def _psi_detail_one_scan(
-    source: DataFrame, specs, min_frac: float, actual_filter
-) -> DataFrame:
-    # Shared-scan twin of _psi_detail_from_specs (round 18, guide §6): when
-    # the actual population is a filter of the expected one, one scan of
-    # the source feeds BOTH count columns — the expected count is every
-    # row, the actual count is `count(when(predicate, 1))` in the same
-    # partial/final aggregation.  Counts are integers, so the detail is
-    # value-identical to the two-frame form, with half the scan+explode
-    # work and no union.
-    pred = F.expr(actual_filter) if isinstance(actual_filter, str) else actual_filter
-    scaffold = _scaffold(source.sparkSession, specs)
-    names = [v for v, _, _ in specs]
-    proj = source.select(
-        *[F.col(v).cast("double").alias(v) for v in names],
-        pred.alias("__in_actual"),
-    )
-    pairs = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(v).alias("variable"),
-                    _bin_index_expr(F.col(v), cuts).alias("bin"),
-                )
-                for v, cuts, _ in specs
-            ]
+    if actual_filter is None:
+        tagged = tag(expected, F.lit(1), F.lit(0)).unionByName(
+            tag(actual, F.lit(0), F.lit(1))
         )
-    ).alias("p")
-    hist = (
-        proj.select("__in_actual", pairs)
-        .select("p.variable", "p.bin", "__in_actual")
-        .groupBy("variable", "bin")
-        .agg(
-            F.count(F.lit(1)).alias("__ec"),
-            F.count(F.when(F.col("__in_actual"), F.lit(1))).alias("__ac"),
+    else:
+        pred = F.expr(actual_filter) if isinstance(actual_filter, str) else actual_filter
+        tagged = tag(
+            expected, F.lit(1), F.coalesce(pred, F.lit(False)).cast("int")
         )
-    )
-    return _psi_finish(scaffold, hist, min_frac)
+    hist = bin_histogram(tagged, specs, sum_cols=("__e", "__a"))
+    return _psi_finish(_scaffold(expected.sparkSession, specs), hist, min_frac)
 
 
 def _psi_finish(scaffold: DataFrame, hist: DataFrame, min_frac: float) -> DataFrame:
-    """Scaffold join + per-variable fractions + PSI component — the shared
-    tail of the two-frame and one-scan detail paths."""
+    """Scaffold join + per-variable fractions + PSI component over the
+    side-tagged histogram of :func:`_psi_detail`.
+
+    Totals are a WINDOW over the scaffold-joined frame, not a second
+    aggregation of ``hist``: hist's lineage is a full corpus scan, and a
+    separate groupBy+join would re-evaluate it (two scans per frame,
+    caught in the round-7 plan audit).  The window runs over
+    ``variables x (bins+2)`` rows; the scaffold is exhaustive, so every
+    hist row matches exactly one scaffold row and the window sum IS the
+    frame total."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("variable")
     joined = (
         scaffold.join(hist, ["variable", "bin"], "left")
-        .withColumn("expected_count", F.coalesce(F.col("__ec"), F.lit(0)))
-        .withColumn("actual_count", F.coalesce(F.col("__ac"), F.lit(0)))
+        .withColumn("expected_count", F.coalesce(F.col("sum___e"), F.lit(0)))
+        .withColumn("actual_count", F.coalesce(F.col("sum___a"), F.lit(0)))
         .withColumn(
             "expected_frac",
             F.col("expected_count")
@@ -491,19 +434,20 @@ def baseline_fractions(
     ``(variable, bin, expected_frac)`` pandas frame a serving-time monitor
     (``streaming.drift.streaming_psi_monitor``) compares every micro-batch
     against — the same train-time-statistics-at-serve-time pattern as the
-    precomputed median fill values.  One histogram pass over ``expected``;
-    the returned frame is ``variables x (bins+2)`` rows."""
-    specs = compile_bin_exprs(
-        _bins_to_pandas(bins), iv_threshold, bin_threshold, remove_100_corr
-    )
-    if variables is not None:
-        keep = set(variables)
-        specs = [s for s in specs if s[0] in keep]
-    if not specs:
-        raise ValueError("no variables survive the bin gates; nothing to pin")
-    scaffold = _scaffold(expected.sparkSession, specs)
+    precomputed median fill values.  One histogram pass over ``expected``
+    (the :func:`psi_report` detail with an empty actual side); the
+    returned frame is ``variables x (bins+2)`` rows."""
     return (
-        _fractions(bin_histogram(expected, specs), scaffold, "expected")
+        psi_report(
+            expected,
+            None,
+            bins,
+            iv_threshold,
+            bin_threshold,
+            remove_100_corr,
+            variables=variables,
+            actual_filter=F.lit(False),
+        )
         .select("variable", "bin", "expected_frac")
         .toPandas()
     )
@@ -538,11 +482,7 @@ def stability_over_periods(
     ``(variable, bin, period)``; everything downstream is arithmetic on
     ``variables x bins x periods`` rows."""
     _check_period_col(period_col)
-    specs = compile_bin_exprs(
-        _bins_to_pandas(bins), iv_threshold, bin_threshold, remove_100_corr
-    )
-    if not specs:
-        raise ValueError("no variables survive the bin gates; nothing to monitor")
+    specs = _gated_specs(bins, iv_threshold, bin_threshold, remove_100_corr)
     hist = bin_histogram(df, specs, extra_cols=(period_col,)).persist()
     try:
         if baseline_period is None:
@@ -653,11 +593,7 @@ def characteristic_stability(
         # the histogram also emits sum_<target>; a period column of that
         # name would collide with the measure column
         _check_period_col(period_col, also_reserved=(f"sum_{target}",))
-    specs = compile_bin_exprs(
-        _bins_to_pandas(bins), iv_threshold, bin_threshold, remove_100_corr
-    )
-    if not specs:
-        raise ValueError("no variables survive the bin gates; nothing to audit")
+    specs = _gated_specs(bins, iv_threshold, bin_threshold, remove_100_corr)
     spark = df.sparkSession
     extra = (period_col,) if period_col else ()
     hist = bin_histogram(df, specs, extra_cols=extra, sum_cols=(target,))
@@ -699,7 +635,7 @@ def characteristic_stability(
     # class totals as WINDOWS over the grid-joined frame (variables x bins
     # x periods rows), not a groupBy+self-join — the latter re-evaluates
     # `hist`'s corpus-scan lineage a second time (round-7 plan audit, same
-    # fix as _fractions)
+    # fix as _psi_finish)
     from pyspark.sql.window import Window
 
     tw = Window.partitionBy(*tot_keys)

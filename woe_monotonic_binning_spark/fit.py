@@ -81,17 +81,13 @@ def _melt_features_indexed(df: DataFrame, target: str, columns: Sequence[str]) -
     shape.  Value-parity pinned by
     tests/test_fit_parity.py::test_fit_indexed_melt_matches_names.
     """
-    casted = df.select(
-        F.col(target).cast("double").alias("__target"),
-        *[
-            F.expr(f"try_cast(`{c}` as double)").alias(str(i))
-            for i, c in enumerate(columns)
-        ],
+    # rename the target in the same projection: an index key like "1" must
+    # not collide with a target column named "1"
+    renamed = df.select(
+        F.col(target).alias("__target"),
+        *[F.col(f"`{c}`").alias(str(i)) for i, c in enumerate(columns)],
     )
-    long = casted.unpivot("__target", [str(i) for i in range(len(columns))], "variable", "value")
-    return long.withColumn(
-        "value", F.when(F.isnan("value"), F.lit(None).cast("double")).otherwise(F.col("value"))
-    )
+    return melt_features(renamed, "__target", [str(i) for i in range(len(columns))])
 
 
 def summarize(long: DataFrame) -> DataFrame:

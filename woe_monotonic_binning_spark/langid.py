@@ -43,8 +43,6 @@ from __future__ import annotations
 import json
 import math
 
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .operators.text import WS_CHARS
@@ -176,60 +174,26 @@ class LanguageIDModel:
         text_col: str = "text",
         out_col: str = "lang_pred",
         keep_scores: bool = True,
-        method: str = "auto",
     ) -> DataFrame:
         """Add ``out_col`` (the argmax language code, ``'und'`` for
         gram-less/NULL text) and, with ``keep_scores``, one
         ``lang_score_<code>`` bigint per language.  Stateless either
         way: batch and Structured Streaming score identically.
 
-        ``method`` picks the physical fold — identical integer outputs
-        (parity test-pinned):
-
-        - ``'expr'`` (the ``'auto'`` default) — pure column
-          expressions, zero Python; the certified SQL twins mirror
-          this shape.  Unlike ``perplexity.score`` — whose map-column
-          lookups are linear scans and whose Arrow kernel is ~10x
-          faster — langid's fold indexes ARRAYS (O(1) per element)
-          and its wall cost is the md5 bucket hashing, which both
-          folds share JVM-side: measured 12.0 s (expr) vs 12.5 s
-          (arrow) over 50k sf1 docs, so the zero-Python path wins.
-        - ``'arrow'`` — a pandas kernel folding the JVM-computed
-          bucket arrays against a numpy weight matrix; kept for
-          experimentation and as the escape hatch if a future change
-          makes the expression fold the bottleneck."""
+        The fold is pure column expressions, zero Python; the certified
+        SQL twins mirror this shape.  Unlike ``perplexity.score`` —
+        whose map-column lookups are linear scans — langid's fold
+        indexes ARRAYS (O(1) per element) and its wall cost is the md5
+        bucket hashing: measured 12.0 s over 50k sf1 docs, against
+        12.5 s for a pandas kernel folding the same bucket arrays."""
         bcol = f"__{out_col}_buckets"
         staged = df.withColumn(
             bcol, _bucket_column(F.col(text_col), self.n, self.buckets)
         )
-        if method == "auto":
-            method = "expr"
-        if method == "arrow":
-            staged = self._predict_arrow(staged, bcol, out_col)
-        elif method == "expr":
-            staged = self._predict_expr(staged, bcol, out_col)
-        else:
-            raise ValueError(
-                f"method must be 'auto', 'expr' or 'arrow': {method!r}"
-            )
-        out = staged.drop(bcol)
-        if not keep_scores:
-            out = out.drop(
-                *[f"lang_score_{lang}" for lang in self.languages]
-            )
-        return out
-
-    def _predict_expr(
-        self, staged: DataFrame, bcol: str, out_col: str
-    ) -> DataFrame:
-        scores = {
-            lang: self.score_column(lang, F.col(bcol))
-            for lang in self.languages
-        }
         staged = staged.select(
             "*",
             *[
-                scores[lang].alias(f"lang_score_{lang}")
+                self.score_column(lang, F.col(bcol)).alias(f"lang_score_{lang}")
                 for lang in self.languages
             ],
         )
@@ -241,57 +205,12 @@ class LanguageIDModel:
             pred = pred.when(
                 F.col(f"lang_score_{lang}") == best, F.lit(lang)
             )
-        return staged.withColumn(out_col, pred)
-
-    def _predict_arrow(
-        self, staged: DataFrame, bcol: str, out_col: str
-    ) -> DataFrame:
-        """Numpy fold: W[lang] @ bucket histogram, argmax with the same
-        smallest-code tie-break."""
-        import numpy as np
-
-        langs = list(self.languages)
-        W = np.array(
-            [self.weights[lang] for lang in langs], dtype=np.int64
-        )
-        priors = np.array(
-            [self.log_priors[lang] for lang in langs], dtype=np.int64
-        )
-
-        @F.pandas_udf(
-            "struct<scores: array<long>, pred: string>"
-        )
-        def fold(buckets: pd.Series) -> pd.DataFrame:
-            scores_out, pred_out = [], []
-            for bs in buckets:
-                if bs is None:
-                    scores_out.append(None)
-                    pred_out.append(None)
-                    continue
-                if len(bs) == 0:
-                    scores_out.append(priors.tolist())
-                    pred_out.append("und")
-                    continue
-                idx = np.asarray(bs, dtype=np.int64)
-                s = priors + W[:, idx].sum(axis=1)
-                scores_out.append(s.tolist())
-                # argmax, ties to the smallest code: np.argmax returns
-                # the FIRST max and langs is sorted
-                pred_out.append(langs[int(np.argmax(s))])
-            return pd.DataFrame({"scores": scores_out, "pred": pred_out})
-
-        scol = f"__{out_col}_s"
-        staged = staged.withColumn(scol, fold(F.col(bcol)))
-        staged = staged.select(
-            "*",
-            *[
-                F.element_at(F.col(f"{scol}.scores"), i + 1).alias(
-                    f"lang_score_{lang}"
-                )
-                for i, lang in enumerate(langs)
-            ],
-        )
-        return staged.withColumn(out_col, F.col(f"{scol}.pred")).drop(scol)
+        out = staged.withColumn(out_col, pred).drop(bcol)
+        if not keep_scores:
+            out = out.drop(
+                *[f"lang_score_{lang}" for lang in self.languages]
+            )
+        return out
 
     # -- persistence -----------------------------------------------------
     def save(self, path: str) -> None:

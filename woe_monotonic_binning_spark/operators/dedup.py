@@ -374,13 +374,19 @@ def minhash_dedup_pairs(
     max_bucket: int = 1_000,
 ) -> DataFrame:
     """End-to-end MinHash-LSH near-dup pipeline: shingle -> sign -> band ->
-    bucket-join -> exact-Jaccard verify.
+    bucket-join -> Jaccard verify over 31-bit hashed shingle sets.
+
+    **APPROXIMATION NOTE:** the verify step computes Jaccard over each
+    document's set of 31-bit shingle hashes, not over the shingle strings.
+    It can differ from string-set Jaccard when two distinct shingles of a
+    pair collide in the 31-bit space — the same collisions the signatures
+    and bands already conflate.
 
     ``max_bucket`` is the skew guard (previously hardcoded): an LSH band
     bucket holding k documents emits O(k^2) candidate pairs, so one hot
     near-dup cluster of 10k docs is a 50M-pair task on one key.  Buckets
     larger than ``max_bucket`` degrade to O(k) star candidates around the
-    bucket's min-id anchor (verified by exact Jaccard like any candidate),
+    bucket's min-id anchor (verified by Jaccard like any candidate),
     so a mutually-similar mega-cluster still collapses through its anchor
     under connected components instead of escaping dedup entirely; zipfian
     corpora tune this down (the round-9 skew smoke measures the effect:
@@ -389,7 +395,7 @@ def minhash_dedup_pairs(
     **RECALL NOTE (default 10_000 -> 1_000 in round 9):** buckets of
     1_001–10_000 docs now emit anchor-star candidates only — pairs whose
     members are both dissimilar to the bucket anchor are missed, and can
-    split a component when the anchor edge fails exact verification.
+    split a component when the anchor edge fails verification.
     ``max_bucket=10_000`` restores the previous recall at the previous
     quadratic cost; see ``lsh_candidate_pairs`` for the full trade.
 

@@ -18,14 +18,12 @@ Architecture (the ``langid.py`` asymmetric split):
   mapping happens INSIDE the token array via a one-row broadcast map
   (no per-token join); ``<s>`` starts every document.
 - **Serving** (:meth:`NGramLMModel.score`): one map-side pass, no
-  shuffle, no join.  The default fold is an Arrow-batched pandas
-  kernel over the JVM-pre-tokenized stream with the tables in the UDF
-  closure — O(1) dict lookups, measured FLAT in table size (a per-
-  token join would shuffle the corpus; an expression-tree literal
-  would blow codegen at real vocabulary sizes).  A pure-JVM ``'expr'``
-  fold exists for Python-less environments, but Spark's map-column
-  lookups are linear scans, so it is the compatibility path, not the
-  fast one (see :meth:`NGramLMModel.score`).  Per transition:
+  shuffle, no join.  The fold is an Arrow-batched pandas kernel over
+  the JVM-pre-tokenized stream with the tables in the UDF closure —
+  O(1) dict lookups, measured FLAT in table size (a per-token join
+  would shuffle the corpus; an expression-tree literal would blow
+  codegen at real vocabulary sizes; Spark's map-column lookups are
+  linear scans).  Per transition:
   ``coalesce(bigram[h ' ' w], miss[h])`` minus the ``<unk>`` penalty.
 
 **Integer scores by construction** (the ``langid`` lesson): log-
@@ -114,144 +112,30 @@ class NGramLMModel:
         return set(self.miss_logp) - {_BOS, _UNK}
 
     # -- serving ---------------------------------------------------------
-    def _model_row(self, spark) -> DataFrame:
-        from pyspark.sql.types import (
-            LongType, MapType, StringType, StructField, StructType,
-        )
-
-        schema = StructType([
-            StructField("__lm_bi", MapType(StringType(), LongType())),
-            StructField("__lm_miss", MapType(StringType(), LongType())),
-        ])
-        return spark.createDataFrame(
-            [(self.bigram_logp, self.miss_logp)], schema
-        )
-
-
     def score(
         self,
         df: DataFrame,
         text_col: str = "text",
         keep_threshold: float | None = None,
         prefix: str = "ppl_",
-        method: str = "auto",
     ) -> DataFrame:
         """Add ``ppl_logmass`` (bigint micro-nats, exact), ``ppl_n``
         (transition count = token count), ``ppl`` (double perplexity,
         telemetry) and — when ``keep_threshold`` is given — the
         integer-domain ``ppl_keep`` gate (NULL for token-less/NULL
-        text: nothing to judge, the honest-reject posture).
+        text: nothing to judge, the honest-reject posture).  Stateless:
+        stream == batch.
 
-        ``method`` picks the physical fold — both produce IDENTICAL
-        integer outputs (parity test-pinned), both stateless (stream ==
-        batch):
-
-        - ``'arrow'`` (the ``'auto'`` default) — JVM pre-tokenization
-          + an Arrow-batched pandas kernel folding with O(1) dict
-          lookups (the ``tokenize_bpe`` serving shape).  Measured
-          FLAT in table size (0.7 s for 50k sf1 docs at 1.4k AND 100k
-          entries) and faster than the expression fold even at the
-          pinned 176-entry certification model (2.0 s vs 5.0 s): the
-          production path at every scale.
-        - ``'expr'`` — one broadcast cross join of the one-row model
-          frame + a pure-JVM ``aggregate`` fold.  Zero Python workers
-          — kept for environments that cannot run them — but NOT the
-          fast path: Spark evaluates each map-column lookup as a
-          linear scan (GetMapValue over ArrayBasedMapData) inside an
-          interpreted HOF, so cost grows with the table (measured
-          unusable at 100k entries) and trails the kernel even on tiny
-          ones.
+        The fold is JVM pre-tokenization + an Arrow-batched pandas
+        kernel walking the transition stream with O(1) dict lookups
+        (the ``tokenize_bpe`` serving shape); the tables ride the UDF
+        closure, pickled once per executor.  Measured FLAT in table size
+        (0.7 s for 50k sf1 docs at 1.4k AND 100k entries) and faster
+        than a pure-JVM ``aggregate`` fold over broadcast map columns
+        even at the pinned 176-entry certification model (2.0 s vs
+        5.0 s): Spark evaluates each map-column lookup as a linear scan,
+        so that fold's cost grows with the table.
         """
-        if method == "auto":
-            method = "arrow"
-        if method == "expr":
-            out = self._score_expr(df, text_col, prefix)
-        elif method == "arrow":
-            out = self._score_arrow(df, text_col, prefix)
-        else:
-            raise ValueError(
-                f"method must be 'auto', 'expr' or 'arrow': {method!r}"
-            )
-        lm = F.col(f"{prefix}logmass")
-        nn = F.col(f"{prefix}n")
-        out = out.withColumn(
-            prefix.rstrip("_"),
-            F.round(F.exp(-lm / F.lit(float(_SCALE)) / nn), 6),
-        )
-        if keep_threshold is not None:
-            thr_micro = round(math.log(float(keep_threshold)) * _SCALE)
-            # ppl < thr  <=>  -logmass/(1e6 n) < ln(thr)
-            #            <=>  logmass >= -n * thr_micro   (integer domain;
-            # >= vs > differs only when exactly equal, pinned this way)
-            out = out.withColumn(
-                f"{prefix}keep",
-                F.when(nn > 0, lm >= -nn * F.lit(thr_micro)),
-            )
-        return out
-
-    def _score_expr(
-        self, df: DataFrame, text_col: str, prefix: str
-    ) -> DataFrame:
-        """The pure-JVM fold (see :meth:`score`)."""
-        spark = df.sparkSession
-        staged = df.crossJoin(F.broadcast(self._model_row(spark)))
-        toks = _tokens(F.col(text_col))
-        mapped = F.transform(
-            toks,
-            lambda t: F.when(
-                F.element_at(F.col("__lm_miss"), t).isNotNull(), t
-            ).otherwise(F.lit(_UNK)),
-        )
-        tcol, hcol = f"__{prefix}t", f"__{prefix}h"
-        staged = staged.withColumn(
-            tcol,
-            F.when(F.col(text_col).isNotNull(), mapped),
-        ).withColumn(
-            hcol,
-            F.concat(
-                F.array(F.lit(_BOS)),
-                F.slice(
-                    F.col(tcol), 1,
-                    F.greatest(F.size(F.col(tcol)) - 1, F.lit(0)),
-                ),
-            ),
-        )
-        pen = F.lit(self.unk_penalty).cast("long")
-        step = lambda acc, i: acc + F.coalesce(  # noqa: E731
-            F.element_at(
-                F.col("__lm_bi"),
-                F.concat_ws(
-                    " ",
-                    F.element_at(F.col(hcol), i),
-                    F.element_at(F.col(tcol), i),
-                ),
-            ),
-            F.element_at(
-                F.col("__lm_miss"), F.element_at(F.col(hcol), i)
-            ),
-        ) - F.when(
-            F.element_at(F.col(tcol), i) == _UNK, pen
-        ).otherwise(F.lit(0).cast("long"))
-        logmass = F.aggregate(
-            F.sequence(F.lit(1), F.size(F.col(tcol))),
-            F.lit(0).cast("long"),
-            step,
-        )
-        n = F.size(F.col(tcol))
-        return (
-            staged.withColumn(f"{prefix}logmass", F.when(n > 0, logmass))
-            .withColumn(f"{prefix}n", F.when(n > 0, n))
-            .drop("__lm_bi", "__lm_miss", tcol, hcol)
-        )
-
-    def _score_arrow(
-        self, df: DataFrame, text_col: str, prefix: str
-    ) -> DataFrame:
-        """The Arrow kernel fold (see :meth:`score`): JVM tokenization
-        stays the one split source of truth; the kernel walks the
-        transition stream with dict lookups.  The tables ride the UDF
-        closure (pickled once per executor — the ``tokenize_bpe``
-        broadcast posture)."""
         bigram = dict(self.bigram_logp)
         miss = dict(self.miss_logp)
         pen = self.unk_penalty
@@ -277,14 +161,29 @@ class NGramLMModel:
                 ns.append(len(ws))
             return pd.DataFrame({"lm": lms, "n": ns})
 
-        res = fold(_tokens(F.col(text_col)))
         scol = f"__{prefix}s"
-        return (
-            df.withColumn(scol, res)
+        out = (
+            df.withColumn(scol, fold(_tokens(F.col(text_col))))
             .withColumn(f"{prefix}logmass", F.col(f"{scol}.lm"))
             .withColumn(f"{prefix}n", F.col(f"{scol}.n"))
             .drop(scol)
         )
+        lm = F.col(f"{prefix}logmass")
+        nn = F.col(f"{prefix}n")
+        out = out.withColumn(
+            prefix.rstrip("_"),
+            F.round(F.exp(-lm / F.lit(float(_SCALE)) / nn), 6),
+        )
+        if keep_threshold is not None:
+            thr_micro = round(math.log(float(keep_threshold)) * _SCALE)
+            # ppl < thr  <=>  -logmass/(1e6 n) < ln(thr)
+            #            <=>  logmass >= -n * thr_micro   (integer domain;
+            # >= vs > differs only when exactly equal, pinned this way)
+            out = out.withColumn(
+                f"{prefix}keep",
+                F.when(nn > 0, lm >= -nn * F.lit(thr_micro)),
+            )
+        return out
 
     # -- persistence -----------------------------------------------------
     def save(self, path: str) -> None:

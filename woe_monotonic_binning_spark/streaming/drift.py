@@ -128,7 +128,7 @@ def streaming_psi_monitor(
         )
         # batch total as a window over the baseline-joined frame — a
         # groupBy+join of `hist` would evaluate the batch-scan lineage
-        # twice per micro-batch (same single-scan fix as drift._fractions)
+        # twice per micro-batch (same single-scan fix as drift._psi_finish)
         w = Window.partitionBy("variable")
         joined = (
             base.join(hist, ["variable", "bin"], "left")
@@ -143,14 +143,15 @@ def streaming_psi_monitor(
                 ),
             )
         )
-        ec = F.greatest(F.col("expected_frac"), F.lit(float(min_frac)))
-        ac = F.greatest(F.col("actual_frac"), F.lit(float(min_frac)))
+        component = _drift._psi_component(
+            F.col("expected_frac"), F.col("actual_frac"), min_frac
+        )
         metrics = (
             joined.filter(F.col("n_rows") > 0)  # empty batch: no signal
             .groupBy("variable")
             .agg(
                 F.max("n_rows").alias("n_rows"),
-                F.sum((ac - ec) * F.log(ac / ec)).alias("psi"),
+                F.sum(component).alias("psi"),
             )
             .select(
                 F.lit(batch_id).alias("batch_id"),
