@@ -2936,15 +2936,17 @@ def q_events_sessionize_stateful(spark, sf_dir):
     event-time timeout).  Non-SQL-expressible => rows-only; stream==batch
     parity asserted in tests/test_streaming_stateful.py."""
     from woe_monotonic_binning_spark.sources.tables import microsecond_parquet_copy
-    from woe_monotonic_binning_spark.streaming.events import read_events_stream
-    from woe_monotonic_binning_spark.streaming.stateful import (
-        run_append_available_now,
-        sessionize_stream,
+    from woe_monotonic_binning_spark.streaming.events import (
+        read_events_stream,
+        run_available_now,
     )
+    from woe_monotonic_binning_spark.streaming.stateful import sessionize_stream
 
     stream = read_events_stream(spark, microsecond_parquet_copy(sf_dir, "events"))
-    return run_append_available_now(
-        sessionize_stream(stream), "q_events_sessionize_stateful_sink"
+    return run_available_now(
+        sessionize_stream(stream),
+        "q_events_sessionize_stateful_sink",
+        output_mode="append",
     )
 
 

@@ -69,6 +69,19 @@ def test_simhash_bucket_cap_degrades_to_star_not_drop(spark, docs_with_dups):
     # true planted dups still found
     for d in range(3):
         assert (d, d + 100000) in capped_pairs
+    # at the boundary (max_bucket == k) the bucket is NOT over the cap:
+    # the full quadratic cluster, every pair at hamming 0
+    at_cap = simhash_near_pairs(poisoned, "text", "doc_id", max_hamming=3, max_bucket=k)
+    at_cap_junk = {
+        (p.id_a, p.id_b): p.hamming
+        for p in at_cap.collect()
+        if p.id_a >= 900000 and p.id_b >= 900000
+    }
+    assert len(at_cap_junk) == k * (k - 1) // 2
+    assert set(at_cap_junk) == {
+        (900000 + i, 900000 + j) for i in range(k) for j in range(i + 1, k)
+    }
+    assert set(at_cap_junk.values()) == {0}
 
 
 def test_minhash_bucket_cap_degrades_to_star_not_drop(spark):
@@ -102,6 +115,14 @@ def test_minhash_bucket_cap_degrades_to_star_not_drop(spark):
     kept = dedup_keep_canonical(docs, pairs, "doc_id")
     kept_ids = {r.doc_id for r in kept.collect()}
     assert kept_ids == {0, 500}
+    # at the boundary (max_bucket == k) the buckets are NOT over the cap:
+    # the full quadratic cluster
+    at_cap = minhash_dedup_pairs(docs, "text", "doc_id", threshold=0.7, max_bucket=k)
+    at_cap_pairs = {
+        (p.id_a, p.id_b) for p in at_cap.collect() if p.id_a < 500 and p.id_b < 500
+    }
+    assert len(at_cap_pairs) == k * (k - 1) // 2
+    assert at_cap_pairs == {(i, j) for i in range(k) for j in range(i + 1, k)}
 
 
 @pytest.mark.certification  # slow battery; see pytest.ini (round 18)
@@ -2138,6 +2159,14 @@ def test_srp_bucket_cap_degrades_to_star_not_drop(spark):
     # semantics produced the EMPTY set here
     assert cluster_pairs == {(0, i) for i in range(1, k)}
     assert all(got[p] == 1.0 for p in cluster_pairs)
+    # at the boundary (max_bucket == k) the buckets are NOT over the cap:
+    # the full quadratic cluster, every pair at cosine 1.0
+    at_cap = srp_threshold_pairs(emb, threshold=0.99, n_bits=32, n_bands=8, max_bucket=k)
+    at_cap_got = {(r.id_a, r.id_b): r.cosine for r in at_cap.collect()}
+    at_cap_pairs = {p for p in at_cap_got if p[0] < 1000 and p[1] < 1000}
+    assert len(at_cap_pairs) == k * (k - 1) // 2
+    assert at_cap_pairs == {(i, j) for i in range(k) for j in range(i + 1, k)}
+    assert all(at_cap_got[p] == 1.0 for p in at_cap_pairs)
 
 
 def test_srp_bits_for_threshold_adaptive_defaults():
@@ -2386,13 +2415,6 @@ def test_pipelines_leave_no_sql_cache_entries(spark):
     assert srp_threshold_pairs(emb, threshold=0.35).count() >= 0
     assert decontaminate(docs, docs.filter(F.col("doc_id") % 50 == 0), n=8).count() >= 0
     assert cm.isEmpty(), "a pipeline left cached entries behind"
-
-    # opt-out: cleanup=False returns the lazy plan and the caller owns the
-    # cache lifecycle (the documented composition escape hatch)
-    lazy = minhash_dedup_pairs(docs, "text", "doc_id", threshold=0.5, cleanup=False)
-    assert lazy.count() >= 0
-    assert not cm.isEmpty()
-    spark.catalog.clearCache()
 
 
 # ---------------------------------------------------------------------------

@@ -477,46 +477,70 @@ def test_curate_corpus_simhash_path_stays_jvm_side(spark):
 
 
 def test_srp_candidate_dedup_shuffles_id_pairs_only(spark):
-    """Round-9 scale fix pin: srp_threshold_pairs must carry 16-byte id
-    tuples — not the embedding vectors — through the band cache and the
-    candidate-dedup exchange.  The pre-fix plan shuffled two 64-dim
-    vectors per candidate (~1 KB/row) and the cache held n_bands copies
-    of every vector; vectors may appear only in the scans and the final
-    verify join."""
-    from pyspark.sql import functions as F
+    """Round-9 scale fix pin, generalised to every generator on the shared
+    capped-bucket core (dedup._bucket_pairs): the band cache and the
+    candidate-dedup exchange carry id tuples only — never the embedding
+    vectors (SRP) or the SimHash band arrays.  The pre-fix SRP plan
+    shuffled two 64-dim vectors per candidate (~1 KB/row) and cached
+    n_bands copies of every vector; the SimHash plan used to cache and
+    shuffle both 4-band arrays per candidate.  Payload columns may appear
+    only in the scans and the final verify re-join."""
+    import re
 
+    from woe_monotonic_binning_spark.operators.dedup import (
+        _banded_near_pairs,
+        simhash_fingerprints,
+    )
     from woe_monotonic_binning_spark.operators.similarity import (
-        srp_threshold_pairs,
+        _srp_threshold_pairs_lazy,
+        srp_bits_for_threshold,
+        srp_hyperplanes,
     )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
-    import re
-
-    out = srp_threshold_pairs(emb, threshold=0.5, cleanup=False)
-    plan = formatted_plan(out)
-    # the persisted band relation holds (id, band_idx, band_val) only —
-    # read the cached column list from the detail block, not the tree
-    mem_args = re.findall(
-        r"\(\d+\) InMemoryRelation\nArguments: \[([^\]]*)\]", plan
+    # srp_threshold_pairs' default band geometry at threshold 0.5
+    planes = srp_hyperplanes(
+        len(emb.first()["embedding"]), srp_bits_for_threshold(0.5) * 16, 42
     )
-    assert mem_args, "expected the band cache in the plan"
-    assert all("v_a" not in a and "embedding" not in a for a in mem_args), (
-        "band cache carries vectors again:\n" + "\n".join(mem_args)
-    )
-    # the candidate-dedup exchange partitions on (id_a, id_b) and its
-    # input is exactly those two columns
-    dedup_exchanges = re.findall(
-        r"\(\d+\) Exchange\nInput \[(\d+)\]: \[([^\]]*)\]\n"
-        r"Arguments: hashpartitioning\(id_a[^)]*id_b",
-        plan,
-    )
-    assert dedup_exchanges, "expected the (id_a, id_b) dedup exchange"
-    for n_cols, cols in dedup_exchanges:
-        assert int(n_cols) == 2 and "v_a" not in cols, (
-            f"dedup exchange widened to [{cols}]"
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    lazy_plans = {
+        "srp": _srp_threshold_pairs_lazy(
+            emb, "embedding", "vec_id", 0.5, planes, 16, 1_000
+        )[0],
+        "simhash": _banded_near_pairs(
+            simhash_fingerprints(docs, "text", "doc_id"),
+            "sim_bands",
+            "doc_id",
+            3,
+            1_000,
+        )[0],
+    }
+    payload = {"v_a", "embedding", "__bands", "sim_bands", "ba", "bb"}
+    for name, out in lazy_plans.items():
+        plan = formatted_plan(out)
+        # the persisted band relation holds (id, band, bucket key) only —
+        # read the cached column list from the detail block, not the tree
+        mem_args = re.findall(
+            r"\(\d+\) InMemoryRelation\nArguments: \[([^\]]*)\]", plan
         )
+        assert mem_args, f"{name}: expected the band cache in the plan"
+        for a in mem_args:
+            cols = {c.split("#")[0].strip() for c in a.split(",")}
+            assert not cols & payload, (
+                f"{name}: band cache carries payload again: [{a}]"
+            )
+        # the candidate-dedup exchange partitions on (id_a, id_b) and its
+        # input is exactly those two columns
+        dedup_exchanges = re.findall(
+            r"\(\d+\) Exchange\nInput \[(\d+)\]: \[([^\]]*)\]\n"
+            r"Arguments: hashpartitioning\(id_a[^)]*id_b",
+            plan,
+        )
+        assert dedup_exchanges, f"{name}: expected the (id_a, id_b) dedup exchange"
+        for n_cols, cols in dedup_exchanges:
+            assert int(n_cols) == 2, f"{name}: dedup exchange widened to [{cols}]"
 
 
 def test_asof_nearest_single_exchange(spark):

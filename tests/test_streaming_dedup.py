@@ -796,7 +796,7 @@ def test_query_token_colon_in_relative_path_is_not_a_uri(monkeypatch, tmp_path):
     assert _query_token("file:/data/ckpt") == _query_token("/data/ckpt")
 
 
-def test_out_layout_guard_rejects_pre_upgrade_append_files(tmp_path):
+def test_out_layout_guard_rejects_pre_upgrade_append_files(spark, tmp_path):
     """Round-8 review: an out_path holding root-level parquet files from
     the pre-_commit_id append-mode sink would fail partition discovery
     only at READ time — the guard fails at query start with the
@@ -806,14 +806,14 @@ def test_out_layout_guard_rejects_pre_upgrade_append_files(tmp_path):
     from woe_monotonic_binning_spark.streaming.dedup import _check_out_layout
 
     out = tmp_path / "out"
-    _check_out_layout(str(out))  # absent dir: fine
+    _check_out_layout(str(out), spark)  # absent dir: fine
     out.mkdir()
-    _check_out_layout(str(out))  # empty dir: fine
+    _check_out_layout(str(out), spark)  # empty dir: fine
     (out / "_commit_id=abc-0").mkdir()
-    _check_out_layout(str(out))  # partitioned layout: fine
+    _check_out_layout(str(out), spark)  # partitioned layout: fine
     (out / "part-00000.parquet").write_bytes(b"")
     with pytest.raises(ValueError, match="_commit_id=legacy-0"):
-        _check_out_layout(str(out))
+        _check_out_layout(str(out), spark)
 
 
 def test_query_token_handles_uri_checkpoints(monkeypatch, tmp_path):
@@ -848,7 +848,8 @@ def test_out_layout_guard_covers_hadoop_fs_paths(spark, tmp_path):
     """Round-8 advice: with a SparkSession the layout guard lists through
     the Hadoop FileSystem API, so URI-style out_paths (where the mixed
     layout is most likely in production) are covered — exercised here
-    with a file: URI the os-path fallback would treat as nonexistent."""
+    with a file: URI, which a plain os-path listing would treat as
+    nonexistent."""
     import pytest
 
     from woe_monotonic_binning_spark.streaming.dedup import _check_out_layout
@@ -862,9 +863,6 @@ def test_out_layout_guard_covers_hadoop_fs_paths(spark, tmp_path):
     (out / "part-00000.parquet").write_bytes(b"")
     with pytest.raises(ValueError, match="_commit_id=legacy-0"):
         _check_out_layout(uri, spark)
-    # the os fallback (no session) cannot see a file: URI — documented
-    # local-only scope — but the session path above is what the public
-    # entry points use
 
 
 def test_simhash_caps_seed_does_not_double_count_seeding_batch(spark, tmp_path):

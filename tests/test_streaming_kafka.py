@@ -93,9 +93,11 @@ def test_malformed_values_route_to_nulls(spark, tmp_path):
     d = str(tmp_path / "t2")
     spark.createDataFrame(rows, KAFKA_WIRE_SCHEMA).write.parquet(d)
     parsed = parse_json_value(kafka_shaped_file_stream(spark, d), PAYLOAD_DDL)
-    from woe_monotonic_binning_spark.streaming.stateful import run_append_available_now
+    from woe_monotonic_binning_spark.streaming.events import run_available_now
 
-    out = run_append_available_now(parsed, "kafka_dead_letter_sink").toPandas()
+    out = run_available_now(
+        parsed, "kafka_dead_letter_sink", output_mode="append"
+    ).toPandas()
     assert len(out) == 2
     ok = out[out["event_id"].notna()]
     bad = out[out["event_id"].isna()]

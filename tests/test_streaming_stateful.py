@@ -7,11 +7,11 @@ from pyspark.sql import functions as F
 
 from woe_monotonic_binning_spark.operators.windows import session_agg
 from woe_monotonic_binning_spark.sources.tables import load_table, microsecond_parquet_copy
-from woe_monotonic_binning_spark.streaming.events import read_events_stream
-from woe_monotonic_binning_spark.streaming.stateful import (
-    run_append_available_now,
-    sessionize_stream,
+from woe_monotonic_binning_spark.streaming.events import (
+    read_events_stream,
+    run_available_now,
 )
+from woe_monotonic_binning_spark.streaming.stateful import sessionize_stream
 
 SF = "/root/testdata/sf0.001"
 
@@ -32,7 +32,9 @@ def _keyed(df, start_col="session_start"):
 
 def test_stream_sessions_match_batch(spark, events_path):
     stream = read_events_stream(spark, events_path)
-    out = run_append_available_now(sessionize_stream(stream), "t_sessions").cache()
+    out = run_available_now(
+        sessionize_stream(stream), "t_sessions", output_mode="append"
+    ).cache()
     batch = session_agg(load_table(spark, SF, "events")).cache()
 
     n_stream, n_batch = out.count(), batch.count()
@@ -153,14 +155,18 @@ def test_terminal_event_splits_sessions(spark, events_path):
     ev = load_table(spark, SF, "events")
     etype = ev.groupBy("event_type").count().orderBy(F.desc("count")).first()[0]
     stream = read_events_stream(spark, events_path)
-    out = run_append_available_now(
-        sessionize_stream(stream, terminal_event=etype), "t_sessions_term"
+    out = run_available_now(
+        sessionize_stream(stream, terminal_event=etype),
+        "t_sessions_term",
+        output_mode="append",
     ).cache()
     by = {r["closed_by"]: r["count"] for r in out.groupBy("closed_by").count().collect()}
     assert by.get("terminal", 0) > 0
     # terminal sessions end ON a terminal event; total event coverage holds
-    plain = run_append_available_now(
-        sessionize_stream(read_events_stream(spark, events_path)), "t_sessions_plain"
+    plain = run_available_now(
+        sessionize_stream(read_events_stream(spark, events_path)),
+        "t_sessions_plain",
+        output_mode="append",
     )
     assert out.agg(F.sum("n_events")).first()[0] >= plain.agg(F.sum("n_events")).first()[0]
 

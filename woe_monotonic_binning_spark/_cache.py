@@ -22,9 +22,7 @@ Trade-off: the result computes at call time (eager), not at first action.
 For these operators that is the honest shape anyway — every caller's next
 step (verify, cluster, keep) consumes the full pair table — and the
 alternative (returning a lazy plan over cached intermediates nobody owns)
-is exactly the leak.  Callers composing something unusual can pass
-``cleanup=False`` on the pipeline functions to get the lazy plan back,
-taking ownership of ``unpersist``.
+is exactly the leak.
 """
 
 from __future__ import annotations

@@ -218,6 +218,60 @@ def _signatures_from_hashes(
     return hash_df.select(F.col(id_col), F.expr(sig).alias("signature"))
 
 
+def _bucket_pairs(
+    rows: DataFrame, keys: list[str], id_col: str, max_bucket: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(lazy distinct pairs ``(id_a, id_b)``, id_a < id_b; persisted band
+    rows; persisted bucket counts) — the one capped-bucket pair core of
+    MinHash LSH, the SimHash / dHash / aHash pigeonhole and SRP.  ``rows``
+    holds one ``(id, *keys)`` row per document and band; a bucket is one
+    distinct ``keys`` value.  The caller verifies every candidate exactly
+    and releases both persisted tables after its final materialization.
+
+    Both tables are persisted because each is read three times (the
+    counts by both self-join sides and the star; the rows by the counts
+    and both sides) and Spark shares no subtrees across join branches:
+    the rows would recompute the caller's signature lineage per read,
+    the counts would re-run their shuffle aggregation (measured 2.22 ->
+    2.03 s on the sf0.1 minhash end-to-end).  min(id) rides the count
+    pass (round 17, guide §2.4), so the star needs no aggregation of its
+    own.  Footprints: ~24 bytes x docs x bands, one row per bucket.
+
+    Buckets of at most ``max_bucket`` rows self-join in full.  Over-cap
+    buckets degrade to STAR candidates around the bucket's min-id anchor
+    — O(k) pairs instead of O(k^2) — rather than being dropped (round-9
+    skew smoke: one 2,500-doc hot cluster UNDER the old 10k cap cost 25x
+    wall-clock in quadratic pair generation, and tuning the cap down then
+    ZEROED recall for exactly that cluster).  A mutually-similar
+    mega-cluster stays one connected component through its anchor; only
+    non-transitive stragglers (similar to a member but not to the
+    anchor) are missed."""
+    banded = rows.persist()
+    counts = banded.groupBy(*keys).agg(
+        F.count("*").alias("n"), F.min(id_col).alias("__anchor")
+    ).persist()
+    banded_ok = banded.join(
+        counts.filter(F.col("n") <= max_bucket).select(*keys), keys
+    )
+    left = banded_ok.alias("l")
+    right = banded_ok.alias("r")
+    pairs = left.join(
+        right,
+        [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+        + [F.col(f"l.{id_col}") < F.col(f"r.{id_col}")],
+    ).select(
+        F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
+    )
+    star = (
+        banded.join(
+            counts.filter(F.col("n") > max_bucket).select(*keys, "__anchor"), keys
+        )
+        .filter(F.col(id_col) != F.col("__anchor"))
+        .select(F.col("__anchor").alias("id_a"), F.col(id_col).alias("id_b"))
+    )
+    return pairs.unionByName(star).distinct(), banded, counts
+
+
 def _lsh_candidate_pairs_lazy(
     sig_df: DataFrame,
     id_col: str,
@@ -227,9 +281,11 @@ def _lsh_candidate_pairs_lazy(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(lazy candidate-pair plan, persisted band table, persisted bucket
     counts) — the shared core of ``lsh_candidate_pairs`` and
-    ``minhash_dedup_pairs``.  Returning the cache handles lets the composed
-    pipeline release them after ITS final materialization instead of paying
-    an extra eager localCheckpoint here (round-6 VERDICT item 3: two eager
+    ``minhash_dedup_pairs``: slice each signature into ``bands`` band
+    hashes and hand the ``(id, band, bh)`` rows to ``_bucket_pairs``.
+    Returning the cache handles lets the composed pipeline release them
+    after ITS final materialization instead of paying an extra eager
+    localCheckpoint here (round-6 VERDICT item 3: two eager
     materializations per ``minhash_dedup_pairs`` call)."""
     if bands <= 0 or num_hashes % bands != 0:
         # a remainder silently ignored trailing signature rows, and
@@ -242,7 +298,7 @@ def _lsh_candidate_pairs_lazy(
             f"({num_hashes}) so every signature row lands in exactly one band"
         )
     rows_per_band = num_hashes // bands
-    banded_src = sig_df.select(
+    banded = sig_df.select(
         F.col(id_col),
         F.explode(
             F.expr(
@@ -252,58 +308,7 @@ def _lsh_candidate_pairs_lazy(
             )
         ).alias("e"),
     ).select(id_col, F.col("e.band").alias("band"), F.col("e.bh").alias("bh"))
-    # Persist the (band, bh, id) tuples: they feed three consumers (the
-    # bucket-size counts and both sides of the self-join) and each re-read
-    # would otherwise recompute the full MinHash signature lineage.  The
-    # persisted footprint is ~24 bytes x docs x bands — tiny next to the text.
-    banded = banded_src.persist()
-    # One aggregation serves both the bucket-size cap and the hot-bucket
-    # anchor (round 17, guide §2.4): min(id) rides the same partial/final
-    # count pass, so the star path below no longer needs its own
-    # groupBy + join over the hot rows — two operators and one pass of
-    # the hot slice removed, byte-identical pair output.  The counts table
-    # itself is persisted (round 17, guide §2.4): it is referenced three
-    # times (the ok-filter on EACH self-join side plus the hot filter), and
-    # Spark shares no subtrees across join branches, so without the persist
-    # the groupBy re-executed per reference — three shuffle aggregations of
-    # the band table where one suffices (measured 2.22 -> 2.03 s on the
-    # sf0.1 minhash end-to-end).  Footprint: one narrow row per distinct
-    # bucket, bounded by the band table it is persisted next to.
-    counts = banded.groupBy("band", "bh").agg(
-        F.count("*").alias("n"), F.min(id_col).alias("__anchor")
-    ).persist()
-    banded_ok = banded.join(
-        counts.filter(F.col("n") <= max_bucket).select("band", "bh"), ["band", "bh"]
-    )
-    left = banded_ok.alias("l")
-    right = banded_ok.alias("r")
-    pairs = left.join(
-        right,
-        (F.col("l.band") == F.col("r.band"))
-        & (F.col("l.bh") == F.col("r.bh"))
-        & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-    ).select(
-        F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
-    )
-    # Over-cap buckets degrade to STAR candidates around the bucket's
-    # min-id anchor — O(k) pairs instead of O(k^2) — rather than being
-    # dropped outright (round-9 skew smoke: one 2,500-doc hot near-dup
-    # cluster sat UNDER the old 10k cap and cost 25x wall-clock in
-    # quadratic pair generation; tuning the cap down then ZEROED recall
-    # for exactly the cluster that matters most).  A mutually-similar
-    # mega-cluster stays one connected component through its anchor, so
-    # connected-components dedup still collapses it; only non-transitive
-    # stragglers (similar to a member but not to the anchor) are missed —
-    # strictly better than the empty set the drop produced.
-    star = (
-        banded.join(
-            counts.filter(F.col("n") > max_bucket).select("band", "bh", "__anchor"),
-            ["band", "bh"],
-        )
-        .filter(F.col(id_col) != F.col("__anchor"))
-        .select(F.col("__anchor").alias("id_a"), F.col(id_col).alias("id_b"))
-    )
-    return pairs.unionByName(star).distinct(), banded, counts
+    return _bucket_pairs(banded, ["band", "bh"], id_col, max_bucket)
 
 
 def lsh_candidate_pairs(
@@ -312,15 +317,12 @@ def lsh_candidate_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     max_bucket: int = 1_000,
-    cleanup: bool = True,
 ) -> DataFrame:
     """Banded LSH: equal band-slices -> candidate id pairs (id_a < id_b).
 
     Shuffles only (band, band_hash, id); buckets larger than ``max_bucket``
     degrade to O(k) STAR candidates around the bucket's min-id anchor (a
-    10^6-doc bucket would otherwise create 10^12 pairs; the pre-round-9
-    behavior of dropping the bucket zeroed recall for exactly the hottest
-    clusters — see _lsh_candidate_pairs_lazy).
+    10^6-doc bucket would otherwise create 10^12 pairs).
 
     **RECALL NOTE — default changed in round 9 (10_000 -> 1_000):**
     buckets of 1_001–10_000 docs that previously emitted the full
@@ -331,19 +333,15 @@ def lsh_candidate_pairs(
     components rather than merging through the anchor.  Pass
     ``max_bucket=10_000`` to restore the previous recall at the previous
     O(k²)-per-bucket cost (the round-9 skew smoke measured 25.7x wall on
-    one 2,500-doc hot cluster under the old default).
+    one 2,500-doc hot cluster under the old default).  Star mechanics:
+    ``_bucket_pairs``.
 
-    ``cleanup=True`` (default) eagerly materializes the pair table and
-    unpersists the internal band and bucket-count tables (see _cache.py);
-    pass False for a lazy plan whose cached bands/counts the caller must
-    release.
+    The pair table is eagerly materialized and the internal band and
+    bucket-count tables are unpersisted before returning (see _cache.py).
     """
-    pairs, banded, counts = _lsh_candidate_pairs_lazy(
-        sig_df, id_col, num_hashes, bands, max_bucket
+    return materialize_and_release(
+        *_lsh_candidate_pairs_lazy(sig_df, id_col, num_hashes, bands, max_bucket)
     )
-    if cleanup:
-        return materialize_and_release(pairs, banded, counts)
-    return pairs
 
 
 def jaccard_verify(
@@ -370,7 +368,6 @@ def minhash_dedup_pairs(
     bands: int = 16,
     shingle_n: int = 3,
     shingle_unit: str = "word",
-    cleanup: bool = True,
     max_bucket: int = 1_000,
 ) -> DataFrame:
     """End-to-end MinHash-LSH near-dup pipeline: shingle -> sign -> band ->
@@ -382,38 +379,31 @@ def minhash_dedup_pairs(
     pair collide in the 31-bit space — the same collisions the signatures
     and bands already conflate.
 
-    ``max_bucket`` is the skew guard (previously hardcoded): an LSH band
-    bucket holding k documents emits O(k^2) candidate pairs, so one hot
-    near-dup cluster of 10k docs is a 50M-pair task on one key.  Buckets
-    larger than ``max_bucket`` degrade to O(k) star candidates around the
-    bucket's min-id anchor (verified by Jaccard like any candidate),
-    so a mutually-similar mega-cluster still collapses through its anchor
-    under connected components instead of escaping dedup entirely; zipfian
-    corpora tune this down (the round-9 skew smoke measures the effect:
-    2,500-doc hot cluster, 243 s quadratic vs 7 s capped at sf1).
+    ``max_bucket`` is the skew guard: an LSH band bucket holding k
+    documents emits O(k^2) candidate pairs, so larger buckets degrade to
+    Jaccard-verified anchor-star candidates; zipfian corpora tune it down
+    (round-9 skew smoke: 2,500-doc hot cluster, 243 s quadratic vs 7 s
+    capped at sf1).
 
     **RECALL NOTE (default 10_000 -> 1_000 in round 9):** buckets of
     1_001–10_000 docs now emit anchor-star candidates only — pairs whose
     members are both dissimilar to the bucket anchor are missed, and can
     split a component when the anchor edge fails verification.
     ``max_bucket=10_000`` restores the previous recall at the previous
-    quadratic cost; see ``lsh_candidate_pairs`` for the full trade.
+    quadratic cost; see ``lsh_candidate_pairs`` for the full trade and
+    ``_bucket_pairs`` for the star mechanics.
 
     The input is repartitioned to the session default parallelism before the
     shingle/signature HOFs: document corpora often arrive as a few large
     parquet files, and without the repartition the CPU-bound signature stage
     runs on as few cores as there are input splits.
 
-    ``cleanup=True`` (default) eagerly materializes the verified pair table
-    and unpersists the shingle/band caches before returning, so repeated
-    calls in a long-lived session accumulate no SQL-cache storage (see
-    _cache.py); ``cleanup=False`` returns the lazy plan and the caller owns
-    the caches.  The whole pipeline pays exactly ONE eager materialization
-    (the verified pair table) — the band cache is threaded out of the lazy
-    LSH core and released together with the shingle cache, instead of the
-    candidate table ALSO being localCheckpoint-ed on the way through
-    (round-6 VERDICT item 3: the double eager materialization was the one
-    avoidable constant factor in the dedup_minhash headline).
+    The verified pair table is eagerly materialized and the shingle/band
+    caches are unpersisted before returning, so repeated calls in a
+    long-lived session accumulate no SQL-cache storage (see _cache.py).
+    That is the pipeline's ONLY eager materialization: the band caches are
+    threaded out of ``_lsh_candidate_pairs_lazy`` and released with the
+    shingle cache (round-6 VERDICT item 3).
     """
     sc = df.sparkSession.sparkContext
     narrow = df.select(id_col, text_col)
@@ -435,9 +425,7 @@ def minhash_dedup_pairs(
         sigs, id_col, num_hashes, bands, max_bucket=max_bucket
     )
     verified = jaccard_verify(cands, sh, id_col, threshold)
-    if cleanup:
-        return materialize_and_release(verified, sh, banded, counts)
-    return verified
+    return materialize_and_release(verified, sh, banded, counts)
 
 
 def ngram_jaccard_pairs(
@@ -523,37 +511,32 @@ def simhash_near_pairs(
     id_col: str,
     max_hamming: int = 3,
     max_bucket: int = 1_000,
-    cleanup: bool = True,
 ) -> DataFrame:
     """Near-dup pairs at hamming distance <= max_hamming (pigeonhole on 4
     bands: any pair within distance 3 shares at least one exact band).
 
-    ``cleanup=True`` (default) eagerly materializes the pair table and
-    unpersists the fingerprint/band caches before returning (_cache.py).
+    The pair table is eagerly materialized and the fingerprint/band caches
+    are unpersisted before returning (_cache.py).
 
-    Band buckets larger than ``max_bucket`` degrade to O(k) star candidates
-    around the bucket's min-id anchor (verified by the exact hamming
-    distance like any candidate) — same guard-with-fallback as the MinHash
-    sibling (_lsh_candidate_pairs_lazy): one degenerate 16-bit band value
-    shared by k docs (e.g. every empty/near-empty text hashes its bands to
-    0) would otherwise create k^2 join rows on a single reducer, while
-    DROPPING the bucket (the pre-round-9 behavior) zeroed recall for the
-    hottest clusters.
+    Band buckets larger than ``max_bucket`` degrade to hamming-verified
+    anchor-star candidates, as in MinHash: one degenerate 16-bit band
+    value shared by k docs (every empty text hashes its bands to 0) would
+    otherwise create k^2 join rows on a single reducer.
 
     **RECALL NOTE (default 10_000 -> 1_000 in round 9):** band buckets of
     1_001–10_000 docs now emit anchor-star candidates only — a pair at
     hamming <= ``max_hamming`` whose members are both further than that
     from the bucket anchor is missed; ``max_bucket=10_000`` restores the
-    previous recall at the previous quadratic cost.
+    previous recall at the previous quadratic cost (star mechanics:
+    ``_bucket_pairs``).
     """
     sc = df.sparkSession.sparkContext
     narrow = df.select(id_col, text_col)
     if narrow.rdd.getNumPartitions() < sc.defaultParallelism:
         narrow = narrow.repartition(sc.defaultParallelism)
     fp = simhash_fingerprints(narrow, text_col, id_col).cache()
-    return _banded_near_pairs(
-        fp, "sim_bands", id_col, max_hamming, max_bucket, cleanup,
-        extra_caches=(fp,),
+    return materialize_and_release(
+        *_banded_near_pairs(fp, "sim_bands", id_col, max_hamming, max_bucket), fp
     )
 
 
@@ -563,86 +546,36 @@ def _banded_near_pairs(
     id_col: str,
     max_hamming: int,
     max_bucket: int,
-    cleanup: bool,
-    extra_caches: tuple = (),
-) -> DataFrame:
-    """The shared pigeonhole band-join core behind ``simhash_near_pairs``
-    and ``image_neardup_pairs`` (round 16): ``fp`` is (id, bands) with
-    ``bands_col`` an array of equal-width band values whose concatenation
-    is the fingerprint; any pair within hamming distance < n_bands shares
-    at least one exact band.  Exact-bucket self-join under ``max_bucket``,
-    anchor-star degradation above it, exact hamming verification of every
-    candidate — identical plan shape and guards as documented on
-    ``simhash_near_pairs``."""
-    banded_src = fp.select(
-        F.col(id_col),
-        F.col(bands_col).alias("__bands"),
-        F.posexplode(bands_col).alias("band", "bh"),
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(lazy verified pairs, persisted band rows, persisted bucket counts)
+    — the pigeonhole core of ``simhash_near_pairs``, ``image_neardup_pairs``
+    and ``audio_neardup_pairs``: ``fp`` is (id, bands) with ``bands_col``
+    an array of equal-width band values whose concatenation is the
+    fingerprint, so any pair within hamming distance < n_bands shares at
+    least one exact band.  Id-only ``(id, band, bh)`` rows go through
+    ``_bucket_pairs``, then the fingerprints join back once per side by id
+    for the exact hamming verify (the ``jaccard_verify`` / SRP shape), so
+    neither the band cache nor the candidate-dedup shuffle carries band
+    arrays.  The caller owns ``fp``'s cache and releases all three."""
+    cand, banded, counts = _bucket_pairs(
+        fp.select(F.col(id_col), F.posexplode(bands_col).alias("band", "bh")),
+        ["band", "bh"],
+        id_col,
+        max_bucket,
     )
-    # persisted: feeds the bucket-size counts and both sides of the self-join
-    banded_all = banded_src.persist()
-    # One aggregation serves the cap, the hot-bucket anchor AND the
-    # anchor's band array (round 17, guide §2.4): min(id)/min_by ride the
-    # same partial/final count pass, so the star path below needs neither
-    # its own groupBy nor the anchor-row re-join — three operators and
-    # two passes of the hot slice removed, byte-identical pair output.
-    # Each id appears at most once per (band, bh) (posexplode emits one
-    # row per band position), so min_by is deterministic.
-    # Persisted for the same reason as the band table: three references
-    # (ok-filter on each self-join side + hot filter) would otherwise
-    # re-execute the aggregation per reference (guide §2.4; see
-    # _lsh_candidate_pairs_lazy).  One narrow row per distinct bucket.
-    counts = banded_all.groupBy("band", "bh").agg(
-        F.count("*").alias("n"),
-        F.min(id_col).alias("__anchor"),
-        F.min_by("__bands", F.col(id_col)).alias("__anchor_bands"),
-    ).persist()
-    banded = banded_all.join(
-        counts.filter(F.col("n") <= max_bucket).select("band", "bh"), ["band", "bh"]
-    )
-    l, r = banded.alias("l"), banded.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bh") == F.col("r.bh"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            F.col("l.__bands").alias("ba"),
-            F.col("r.__bands").alias("bb"),
-        )
-    )
-    # over-cap buckets: star candidates around the min-id anchor (see
-    # docstring) — id_a < id_b holds because the anchor IS the minimum
-    star = (
-        banded_all.join(
-            counts.filter(F.col("n") > max_bucket).select(
-                "band", "bh", "__anchor", "__anchor_bands"
-            ),
-            ["band", "bh"],
-        )
-        .filter(F.col(id_col) != F.col("__anchor"))
-        .select(
-            F.col("__anchor").alias("id_a"),
-            F.col(id_col).alias("id_b"),
-            F.col("__anchor_bands").alias("ba"),
-            F.col("__bands").alias("bb"),
-        )
-    )
-    cand = cand.unionByName(star).distinct()
+    fa = fp.select(F.col(id_col).alias("id_a"), F.col(bands_col).alias("ba"))
+    fb = fp.select(F.col(id_col).alias("id_b"), F.col(bands_col).alias("bb"))
     # hamming distance via popcount of per-band xor
     hamming = F.expr(
         "aggregate(zip_with(ba, bb, (x, y) -> bit_count(x ^ y)), 0, (acc, v) -> acc + v)"
     )
-    out = cand.select("id_a", "id_b", hamming.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
+    out = (
+        cand.join(fa, "id_a")
+        .join(fb, "id_b")
+        .select("id_a", "id_b", hamming.alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
     )
-    if cleanup:
-        return materialize_and_release(out, *extra_caches, banded_all, counts)
-    return out
+    return out, banded, counts
 
 
 def image_neardup_pairs(
@@ -650,7 +583,6 @@ def image_neardup_pairs(
     id_col: str = "media_id",
     max_hamming: int = 3,
     max_bucket: int = 1_000,
-    cleanup: bool = True,
     codec=None,
 ) -> DataFrame:
     """Perceptual image near-duplicate pairs (round 16, verdict item 2):
@@ -677,9 +609,8 @@ def image_neardup_pairs(
         .select(id_col, "dhash_bands")
         .cache()
     )
-    return _banded_near_pairs(
-        fp, "dhash_bands", id_col, max_hamming, max_bucket, cleanup,
-        extra_caches=(fp,),
+    return materialize_and_release(
+        *_banded_near_pairs(fp, "dhash_bands", id_col, max_hamming, max_bucket), fp
     )
 
 
@@ -688,7 +619,6 @@ def audio_neardup_pairs(
     id_col: str = "media_id",
     max_hamming: int = 3,
     max_bucket: int = 1_000,
-    cleanup: bool = True,
 ) -> DataFrame:
     """Perceptual AUDIO near-duplicate pairs (round 16): the 64-bit
     energy-envelope hash of ``multimodal.ahash_audio`` banded through
@@ -705,9 +635,8 @@ def audio_neardup_pairs(
         .select(id_col, "ahash_bands")
         .cache()
     )
-    return _banded_near_pairs(
-        fp, "ahash_bands", id_col, max_hamming, max_bucket, cleanup,
-        extra_caches=(fp,),
+    return materialize_and_release(
+        *_banded_near_pairs(fp, "ahash_bands", id_col, max_hamming, max_bucket), fp
     )
 
 

@@ -29,6 +29,7 @@ from pyspark.sql.window import Window
 
 from .._cache import materialize_and_release
 from ..functions.vector import cosine_from_norms, dot, norm
+from .dedup import _bucket_pairs
 
 
 def brute_force_topk(
@@ -591,7 +592,6 @@ def srp_threshold_pairs(
     seed: int = 42,
     max_bucket: int = 1_000,
     dim: int | None = None,
-    cleanup: bool = True,
 ) -> DataFrame:
     """All corpus pairs with cosine >= ``threshold`` via SRP-LSH blocking —
     the ``approxSimilarityJoin`` shape, and the 100 TB path for embedding
@@ -621,14 +621,12 @@ def srp_threshold_pairs(
     RECALL/SCALE NOTE (the sibling note of ``minhash_dedup_pairs``):
     ``max_bucket`` (default 1_000 since round 11, unified with every
     sibling cap in this library — was 10_000) is the zipfian skew guard.
-    Band buckets larger than the cap degrade to O(k) STAR candidates
-    around the bucket's min-id anchor (exact-cosine verified like any
-    candidate) — a degenerate bucket (zero vectors, a constant-embedding
-    spam cluster) would otherwise contribute O(bucket²) join rows on one
-    reducer, while DROPPING it (the pre-round-9 behavior) zeroed recall
-    for exactly the hottest cluster: a mutually-similar mega-cluster
-    stays one connected component through its anchor at linear pair cost,
-    but a pair whose members are both dissimilar to the anchor is missed.
+    Band buckets larger than the cap degrade to exact-cosine verified
+    anchor-star candidates — a degenerate bucket (zero vectors, a
+    constant-embedding spam cluster) would otherwise contribute
+    O(bucket²) join rows on one reducer — so a pair whose members are
+    both dissimilar to the bucket anchor is missed (star mechanics:
+    ``dedup._bucket_pairs``).
     Under adaptive banding the cap only fires on genuine mass duplication
     at near-dup thresholds; at LOOSE thresholds on corpora past
     ~16k x 1_000 rows, healthy buckets themselves exceed the cap — there
@@ -638,6 +636,10 @@ def srp_threshold_pairs(
     passing a tighter threshold) is the explicit opt-in to quadratic
     cost.  Measured at sf1 on the hot-vector skew arm in BASELINE.md
     (round 11).
+
+    The pair table is eagerly materialized and the band and bucket-count
+    caches are unpersisted before returning (_cache.py) — same lifecycle
+    as ``minhash_dedup_pairs``.
     """
     if n_bits is None:
         n_bits = srp_bits_for_threshold(threshold, n_bands) * n_bands
@@ -650,48 +652,35 @@ def srp_threshold_pairs(
             )
         dim = len(first[0])
     planes = srp_hyperplanes(dim, n_bits, seed)
-    # Compute the n_bits dot products once: the band table feeds three
-    # consumers (bucket-size count, both join sides), so it is persisted —
-    # projected down to (id, band_idx, band_val) so the cache holds 16-byte
-    # tuples, not n_bands copies of every vector.  With cleanup=True
-    # (default) the pair table is eagerly materialized and the band cache
-    # released before returning (_cache.py) — same lifecycle as
-    # minhash_dedup_pairs.
-    bands = (
+    return materialize_and_release(
+        *_srp_threshold_pairs_lazy(
+            df, vec_col, id_col, threshold, planes, n_bands, max_bucket
+        )
+    )
+
+
+def _srp_threshold_pairs_lazy(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    threshold: float,
+    planes: list[list[float]],
+    n_bands: int,
+    max_bucket: int,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(lazy verified pairs, persisted band rows, persisted bucket counts)
+    — ``srp_threshold_pairs`` after its band geometry is fixed and before
+    its eager materialization; the caller releases both caches."""
+    # Compute the n_bits dot products once, projected down to (id,
+    # band_idx, band_val) so the persisted band rows hold 16-byte tuples,
+    # not n_bands copies of every vector.
+    ids, bands, sizes = _bucket_pairs(
         _srp_bands(df, planes, n_bands, vec_col, id_col, "id_a", "v_a", "n_a")
-        .select("id_a", "band_idx", "band_val")
-        .persist()
+        .select("id_a", "band_idx", "band_val"),
+        ["band_idx", "band_val"],
+        "id_a",
+        max_bucket,
     )
-    a = bands
-    b = bands.select(F.col("id_a").alias("id_b"), "band_idx", "band_val")
-    # One aggregation serves both the bucket-size cap and the hot-bucket
-    # anchor (round 17, guide §2.4): min(id) rides the same partial/final
-    # count pass, so the star path below no longer needs its own
-    # groupBy + join over the hot rows — identical pair output.  Persisted
-    # (round 17): the ok filter is referenced on BOTH sides of the bucket
-    # self-join plus the hot filter, and Spark shares no subtrees across
-    # join branches, so the aggregation would otherwise run three times.
-    sizes = a.groupBy("band_idx", "band_val").agg(
-        F.count("*").alias("__bn"), F.min("id_a").alias("__anchor")
-    ).persist()
-    ok = sizes.filter(F.col("__bn") <= max_bucket).select("band_idx", "band_val")
-    cand = (
-        a.join(ok, ["band_idx", "band_val"])
-        .join(b.join(ok, ["band_idx", "band_val"]), ["band_idx", "band_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    # Over-cap buckets: STAR candidates around the min-id anchor (see
-    # docstring) — id_a < id_b holds because the anchor IS the minimum.
-    hot = sizes.filter(F.col("__bn") > max_bucket).select(
-        "band_idx", "band_val", "__anchor"
-    )
-    star = (
-        a.join(hot, ["band_idx", "band_val"])
-        .filter(F.col("id_a") != F.col("__anchor"))
-        .select(F.col("__anchor").alias("id_a"), F.col("id_a").alias("id_b"))
-    )
-    ids = cand.unionByName(star).dropDuplicates(["id_a", "id_b"])
     va = df.select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("v_a"),
@@ -717,6 +706,4 @@ def srp_threshold_pairs(
         )
         .filter(F.col("cosine") >= threshold)
     )
-    if cleanup:
-        return materialize_and_release(out, bands, sizes)
-    return out
+    return out, bands, sizes

@@ -279,7 +279,7 @@ def curate_corpus(
     guaranteed by in-plan Generate barriers (see ``_expr_barrier``)
     instead of storage, so ``cache_survivors=False`` no longer pays the
     regex re-inlining blow-up either.  The default ``near_dup='minhash'``
-    stage (and ``'simhash'``, same cleanup contract) runs eagerly at call
+    stage (and ``'simhash'``, same eager contract) runs eagerly at call
     time and fills the caches before this function returns; ``'semantic'``
     trains its centroids at call time but pairs lazily; the
     ``'jaccard'``/``None`` paths are fully lazy, so there
@@ -504,10 +504,10 @@ def curate_corpus(
         # once any eager action has populated ``uniq`` the gate cache owes
         # nothing more — holding survivor-sized rows through the rest of
         # the pipeline is pure memory pressure at scale.  Only called on
-        # paths whose pair table is eagerly materialized (minhash/simhash
-        # cleanup=True), which is what guarantees ``uniq`` is populated;
-        # a later eviction of ``uniq`` recomputes through the unpersisted
-        # lineage — slower, still correct.
+        # paths whose pair table is eagerly materialized (minhash and
+        # simhash always are), which is what guarantees ``uniq`` is
+        # populated; a later eviction of ``uniq`` recomputes through the
+        # unpersisted lineage — slower, still correct.
         nonlocal gate_cache
         if gate_cache is not None:
             gate_cache.unpersist()

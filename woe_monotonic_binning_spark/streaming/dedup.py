@@ -113,7 +113,7 @@ def _query_token(checkpoint_dir: str | None) -> str:
     return uuid.uuid4().hex[:12]
 
 
-def _check_out_layout(out_path: str, spark=None) -> None:
+def _check_out_layout(out_path: str, spark) -> None:
     """Refuse an ``out_path`` holding PRE-partitioned survivor files at
     its root (written by the append-mode sink this library shipped before
     the ``_commit_id`` layout): parquet partition discovery over a mix of
@@ -122,43 +122,23 @@ def _check_out_layout(out_path: str, spark=None) -> None:
     loudly at query START instead, with the migration step (round-8
     review).
 
-    With a SparkSession the listing goes through the Hadoop FileSystem
-    API, so object-store / hdfs:// out_paths — where production mixed
-    layouts are most likely — are covered too (round-8 advice); without
-    one it falls back to ``os`` and covers local paths only."""
-    import os
-
-    if spark is not None:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(out_path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(jpath) or not fs.getFileStatus(jpath).isDirectory():
-            return
-        root_files = []
-        for st in fs.listStatus(jpath):
-            name = st.getPath().getName()
-            if (
-                st.isFile()
-                and name.endswith(".parquet")
-                and not name.startswith(("_", "."))
-            ):
-                root_files.append(name)
-        if root_files:
-            raise ValueError(
-                f"out_path {out_path!r} holds {len(root_files)} root-level "
-                "parquet files from the pre-_commit_id append-mode sink; "
-                "partition discovery cannot mix them with _commit_id= "
-                "directories.  Migrate once: move the old files into "
-                f"{out_path}/_commit_id=legacy-0/ and retry"
-            )
+    The listing goes through the session's Hadoop FileSystem API, so
+    local paths and object-store / hdfs:// out_paths — where production
+    mixed layouts are most likely — are covered alike (round-8 advice)."""
+    jvm = spark._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(out_path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath) or not fs.getFileStatus(jpath).isDirectory():
         return
-    if not os.path.isdir(out_path):
-        return
-    root_files = [
-        f
-        for f in os.listdir(out_path)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    ]
+    root_files = []
+    for st in fs.listStatus(jpath):
+        name = st.getPath().getName()
+        if (
+            st.isFile()
+            and name.endswith(".parquet")
+            and not name.startswith(("_", "."))
+        ):
+            root_files.append(name)
     if root_files:
         raise ValueError(
             f"out_path {out_path!r} holds {len(root_files)} root-level "
@@ -192,6 +172,33 @@ def _write_survivors_idempotent(
         .partitionBy("_commit_id")
         .parquet(out_path)
     )
+
+
+def _merge_caps(
+    caps: DataFrame | None, add: DataFrame, keys: list[str], caps_table: str
+) -> None:
+    """Fold one batch's per-bucket increment ``add`` (``keys``, ``n``,
+    representative columns) into the incremental caps side table of a
+    near-dup store and overwrite ``caps_table`` with the result.
+
+    Full-outer merge on the bucket ``keys``: counts add up, and every
+    other non-key column (the bucket representative) keeps the EXISTING
+    value — the earliest-posted representative wins, so it is stable
+    across batches and replays.  ``caps=None`` (no caps table yet) writes
+    ``add`` as is.  localCheckpoint cuts the lineage reading
+    ``caps_table`` so the overwrite of the same table is legal."""
+    if caps is not None:
+        c, a = caps.alias("__c"), add.alias("__a")
+        reps = [x for x in add.columns if x not in keys and x != "n"]
+        add = c.join(a, keys, "full_outer").select(
+            *keys,
+            (
+                F.coalesce(F.col("__c.n"), F.lit(0))
+                + F.coalesce(F.col("__a.n"), F.lit(0))
+            ).alias("n"),
+            *[F.coalesce(F.col(f"__c.{x}"), F.col(f"__a.{x}")).alias(x) for x in reps],
+        )
+    add.localCheckpoint(eager=True).write.mode("overwrite").saveAsTable(caps_table)
 
 
 def streaming_dedup_against_store(
@@ -395,7 +402,7 @@ def streaming_simhash_dedup_against_store(
     (``rep_id``/``rep_bands``), and an over-cap bucket probes against
     that single stored row — O(batch) join cost instead of O(batch x k),
     the streaming face of the batch operators' anchor-star fallback
-    (operators/dedup._lsh_candidate_pairs_lazy).  Only stragglers near a
+    (operators/dedup._bucket_pairs).  Only stragglers near a
     non-representative member of a saturated bucket are missed, strictly
     better than the empty probe the drop produced.
     Compaction: ``sources.io.compact_bucketed_table(spark, store_table,
@@ -446,7 +453,7 @@ def streaming_simhash_dedup_against_store(
             else:
                 # Materialize the seed EAGERLY, before this batch's
                 # postings are appended below: a lazy seed would be
-                # re-evaluated at the merged.localCheckpoint AFTER the
+                # re-evaluated at the caps merge's localCheckpoint AFTER the
                 # append, counting this batch's postings once in the seed
                 # and again in `add` — the inflated counts persist in the
                 # caps table, so touched buckets cross max_bucket early
@@ -515,36 +522,13 @@ def streaming_simhash_dedup_against_store(
         # append and this overwrite undercounts by one batch — the safe
         # direction: an undercounted bucket probes in full, never
         # representative-only.)  The bucket REPRESENTATIVE is the
-        # earliest-posted min-id doc — existing rep wins the merge, so it
-        # is stable across batches and replays.  localCheckpoint cuts the
-        # lineage reading caps_table so the overwrite of the same table
-        # is legal.
+        # earliest-posted min-id doc (see _merge_caps).
         add = postings.groupBy("band", "bh").agg(
             F.count(F.lit(1)).alias("n"),
             F.min(id_col).alias("rep_id"),
             F.min_by("sim_bands", F.col(id_col)).alias("rep_bands"),
         )
-        if caps is not None:
-            c, a = caps.alias("__c"), add.alias("__a")
-            merged = c.join(a, ["band", "bh"], "full_outer").select(
-                "band",
-                "bh",
-                (
-                    F.coalesce(F.col("__c.n"), F.lit(0))
-                    + F.coalesce(F.col("__a.n"), F.lit(0))
-                ).alias("n"),
-                F.coalesce(F.col("__c.rep_id"), F.col("__a.rep_id")).alias(
-                    "rep_id"
-                ),
-                F.coalesce(
-                    F.col("__c.rep_bands"), F.col("__a.rep_bands")
-                ).alias("rep_bands"),
-            )
-        else:
-            merged = add
-        merged.localCheckpoint(eager=True).write.mode("overwrite").saveAsTable(
-            caps_table
-        )
+        _merge_caps(caps, add, ["band", "bh"], caps_table)
         fresh.unpersist()
         fp.unpersist()
 
@@ -786,24 +770,7 @@ def streaming_srp_dedup_against_store(
         add = new_postings.groupBy("band_idx", "band_val").agg(
             F.count(F.lit(1)).alias("n"), F.min(id_col).alias("rep_id")
         )
-        if caps is not None:
-            c, a = caps.alias("__c"), add.alias("__a")
-            merged = c.join(a, ["band_idx", "band_val"], "full_outer").select(
-                "band_idx",
-                "band_val",
-                (
-                    F.coalesce(F.col("__c.n"), F.lit(0))
-                    + F.coalesce(F.col("__a.n"), F.lit(0))
-                ).alias("n"),
-                F.coalesce(F.col("__c.rep_id"), F.col("__a.rep_id")).alias(
-                    "rep_id"
-                ),
-            )
-        else:
-            merged = add
-        merged.localCheckpoint(eager=True).write.mode("overwrite").saveAsTable(
-            caps_table
-        )
+        _merge_caps(caps, add, ["band_idx", "band_val"], caps_table)
         fresh.unpersist()
         bands.unpersist()
 

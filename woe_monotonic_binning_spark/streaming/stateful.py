@@ -212,15 +212,3 @@ def sessionize_stream(
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
-
-def run_append_available_now(result: DataFrame, query_name: str) -> DataFrame:
-    """Drive an append-mode streaming plan to completion into a memory sink."""
-    q = (
-        result.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return result.sparkSession.table(query_name)
