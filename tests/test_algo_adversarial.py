@@ -28,11 +28,11 @@ from woe_monotonic_binning_spark._algo import (
     FitParams,
     fit_variable,
     pava_pool,
-    pava_pool_sweep,
     ztest_merge,
 )
 
 from tests._reference import load_reference
+from tests.pava_oracle import pava_pool_sweep
 from tests.test_fit_parity import assert_bins_equal
 from tests.test_fuzz_parity import _direction_unambiguous, _ztest_ties_unambiguous
 from tests.test_properties import summary_of

@@ -589,13 +589,15 @@ def test_contamination_overlap_counts_distinct_shared_grams(spark):
 def test_contamination_overlap_benchmark_side_broadcasts(spark):
     """The benchmark gram table must reach the join as a broadcast — a
     shuffled corpus-side join is the 100 TB failure mode."""
-    from woe_monotonic_binning_spark.operators.dedup import contamination_overlap
+    from woe_monotonic_binning_spark.operators.dedup import (
+        _contamination_overlap_lazy,
+    )
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     bench = docs.filter(F.col("doc_id") % 50 == 0)
-    # cleanup=False keeps the lazy plan (the default eagerly checkpoints the
-    # result, truncating lineage past the join); caller owns the caches here
-    lazy = contamination_overlap(docs, bench, n=8, cleanup=False)
+    # the lazy plan keeps the join (contamination_overlap eagerly
+    # checkpoints the result, truncating lineage past the join)
+    lazy = _contamination_overlap_lazy(docs, bench, "text", "doc_id", 8, 1)
     plan = lazy._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
     spark.catalog.clearCache()

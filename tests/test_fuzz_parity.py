@@ -243,7 +243,8 @@ def pava_case(draw):
 )
 @given(pava_case())
 def test_pava_worklist_bit_identical_to_sweep(case):
-    from woe_monotonic_binning_spark._algo import pava_pool, pava_pool_sweep
+    from tests.pava_oracle import pava_pool_sweep
+    from woe_monotonic_binning_spark._algo import pava_pool
 
     v, m, sz, st_ = case
     a = pava_pool_sweep(v, m, sz, st_)

@@ -2228,10 +2228,12 @@ def test_srp_threshold_pairs_adaptive_default_finds_planted_dups(spark):
 
 def test_embedding_neardup_max_block_star_fallback(spark):
     """embedding_neardup_pairs with max_block: an over-cap block degrades
-    to anchor-star candidates; under-cap blocks stay exact all-pairs;
-    max_block=None opts back into the SQL-oracle-exact quadratic
-    semantics (the library default is the CAPPED path since round 10,
-    but under-cap blocks like these behave identically either way)."""
+    to anchor-star candidates; a block of exactly max_block rows and
+    under-cap blocks stay exact all-pairs; max_block=None opts back into
+    the SQL-oracle-exact quadratic semantics (the library default is the
+    CAPPED path since round 10, but under-cap blocks like these behave
+    identically either way).  A pair whose members share two blocks is
+    reported once."""
     from woe_monotonic_binning_spark.operators.dedup import embedding_neardup_pairs
 
     k = 10
@@ -2257,6 +2259,26 @@ def test_embedding_neardup_max_block_star_fallback(spark):
     # the round-10 capped DEFAULT (1_000) is identical on under-cap blocks
     dflt = embedding_neardup_pairs(df, "embedding", "vec_id", "blk", 0.9)
     assert dflt.count() == exact.count()
+
+    # cap boundary: a block of exactly max_block rows is NOT over the cap
+    at_cap = embedding_neardup_pairs(
+        df, "embedding", "vec_id", "blk", 0.9, max_block=k
+    )
+    assert {(r.id_a, r.id_b) for r in at_cap.collect() if r.id_a < 100} == {
+        (i, j) for i in range(k) for j in range(i + 1, k)
+    }
+
+    # 100 and 101 also share a second block: still one (100, 101) row
+    two_blocks = df.unionByName(
+        spark.createDataFrame(
+            [(100, [0.0, 1.0, 0.0], "cold2"), (101, [0.0, 1.0, 0.0], "cold2")],
+            "vec_id long, embedding array<double>, blk string",
+        )
+    )
+    uncapped = embedding_neardup_pairs(
+        two_blocks, "embedding", "vec_id", "blk", 0.9, max_block=None
+    ).collect()
+    assert [(r.id_a, r.id_b) for r in uncapped].count((100, 101)) == 1
 
 
 def test_embedding_neardup_default_is_capped(spark):
@@ -2286,10 +2308,9 @@ def test_embedding_neardup_default_is_capped(spark):
     # ...pointing at THIS file (the caller), not at dedup.py internals
     # (round-11 advice: stacklevel threads through the wrapper chain)
     assert warning.filename == __file__
-    # round-11 advice: on the default path the (blk, count) probe table is
-    # checkpointed once and shared, so the returned plan reads the
-    # materialized RDD instead of re-running df's upstream lineage for
-    # the ok/hot branches (visible as an ExistingRDD scan in the plan)
+    # round-11 advice: the returned pairs are checkpointed, so the plan
+    # reads the materialized RDD instead of re-running df's upstream
+    # lineage (visible as an ExistingRDD scan in the plan)
     assert "ExistingRDD" in got._jdf.queryExecution().executedPlan().toString()
     # ...while an EXPLICIT cap (even the same value) is an opt-in and
     # stays silent
@@ -2382,13 +2403,16 @@ def test_salted_join_salt_is_partitioning_invariant(spark):
 def test_pipelines_leave_no_sql_cache_entries(spark):
     """Cache lifecycle contract (round-5 judge): a full near-dup pipeline —
     minhash pairs -> connected components -> keep-best — plus the simhash,
-    SRP and winnowing pair generators must leave the SQL cache EMPTY when
-    they return: every internal persist() is released by
-    _cache.materialize_and_release after the eager materialization, so a
-    long-lived session looping over corpora accumulates no storage."""
+    SRP, embedding and winnowing pair generators and the contamination
+    scans must leave the SQL cache EMPTY when they return: every internal
+    persist() is released by _cache.materialize_and_release after the
+    eager materialization, so a long-lived session looping over corpora
+    accumulates no storage."""
     from woe_monotonic_binning_spark.operators.dedup import (
+        contamination_report,
         decontaminate,
         dedup_keep_best,
+        embedding_neardup_pairs,
         minhash_dedup_pairs,
         simhash_near_pairs,
     )
@@ -2413,7 +2437,13 @@ def test_pipelines_leave_no_sql_cache_entries(spark):
         "embedding", F.col("embedding").cast("array<double>")
     )
     assert srp_threshold_pairs(emb, threshold=0.35).count() >= 0
-    assert decontaminate(docs, docs.filter(F.col("doc_id") % 50 == 0), n=8).count() >= 0
+    for cap in ({}, {"max_block": None}):
+        assert embedding_neardup_pairs(
+            emb, "embedding", "vec_id", "label", 0.35, **cap
+        ).count() >= 0
+    bench = docs.filter(F.col("doc_id") % 50 == 0)
+    assert decontaminate(docs, bench, n=8).count() >= 0
+    assert contamination_report(docs, bench, n=8).count() >= 0
     assert cm.isEmpty(), "a pipeline left cached entries behind"
 
 

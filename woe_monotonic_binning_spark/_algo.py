@@ -239,76 +239,11 @@ def detect_direction(s: GroupSummary) -> bool:
 # ---------------------------------------------------------------------------
 
 
-def pava_pool_sweep(values, means, sizes, stds):
-    """Pool adjacent groups until means are strictly decreasing in table
-    order — the LITERAL transcription of the reference's repeated-sweep
-    control flow (binning.py:133-178).  Retained as the bit-exactness
-    oracle for :func:`pava_pool` (the worklist replay below performs the
-    SAME pooling operations in the SAME order; exact float equality is
-    pinned by tests/test_fuzz_parity.py) — O(k * sweeps) = O(k^2) worst
-    case, so the production path is ``pava_pool``.
-
-    Sweep semantics: repeat full sweeps until one deletes nothing; within
-    a sweep, walk pairs and pool every run of non-decreasing means into
-    its left anchor, using the weighted mean (binning.py:152-153) and the
-    reference's pooled-std conventions (quirk Q12): ``n == 2`` ->
-    population std of the two *means* (binning.py:155-156), else
-    sqrt(weighted mean of variances) (binning.py:158-159).  The surviving
-    group keeps the anchor's value.
-    """
-    v = list(map(float, values))
-    m = list(map(float, means))
-    sz = list(map(float, sizes))
-    st = list(map(float, stds))
-    while True:
-        k = len(m)
-        dead = [False] * k
-        pooled_any = False
-        i = 0
-        while True:
-            j = i + 1
-            if j >= k:
-                break
-            if m[j] < m[i]:
-                i += 1
-                continue
-            while True:  # pool the run starting at j into anchor i
-                n = sz[j] + sz[i]
-                mm = (sz[j] * m[j] + sz[i] * m[i]) / n
-                if n == 2:
-                    ss = abs(m[j] - m[i]) / 2.0  # np.std of the two means, ddof=0
-                else:
-                    ss = math.sqrt((sz[j] * st[j] ** 2 + sz[i] * st[i] ** 2) / n)
-                sz[i], m[i], st[i] = n, mm, ss
-                dead[j] = True
-                pooled_any = True
-                j += 1
-                if j >= k:
-                    break
-                if m[j] < m[i]:
-                    i = j
-                    break
-            if j >= k:
-                break
-        if pooled_any:
-            v = [x for x, d in zip(v, dead) if not d]
-            m = [x for x, d in zip(m, dead) if not d]
-            sz = [x for x, d in zip(sz, dead) if not d]
-            st = [x for x, d in zip(st, dead) if not d]
-        else:
-            break
-    return (
-        np.asarray(v, dtype=np.float64),
-        np.asarray(m, dtype=np.float64),
-        np.asarray(sz, dtype=np.float64),
-        np.asarray(st, dtype=np.float64),
-    )
-
-
 def pava_pool(values, means, sizes, stds):
     """Pool adjacent groups until means are strictly decreasing in table
-    order — bit-identical to :func:`pava_pool_sweep` (the reference's
-    repeated-sweep transcription, binning.py:133-178) but O(k) total.
+    order — bit-identical to the test oracle ``pava_pool_sweep``
+    (tests/pava_oracle.py: the reference's repeated-sweep transcription,
+    binning.py:133-178) but O(k) total.
 
     Why a worklist instead of the textbook stack PAVA: the pooled stats
     are NOT associative under the reference's conventions (float summation
@@ -333,8 +268,8 @@ def pava_pool(values, means, sizes, stds):
     ``n == 2`` -> population std of the two *means* (binning.py:155-156),
     else sqrt(weighted mean of variances) (binning.py:158-159); the
     surviving group keeps the anchor's value.  Exact float equality with
-    ``pava_pool_sweep`` is pinned across the deep fuzz corpus
-    (tests/test_fuzz_parity.py).
+    the ``pava_pool_sweep`` test oracle is pinned across the deep fuzz
+    corpus (tests/test_fuzz_parity.py).
     """
     k = len(means)
     v = list(map(float, values))

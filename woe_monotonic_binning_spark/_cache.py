@@ -1,7 +1,7 @@
 """Cache lifecycle helper for multi-consumer pipeline intermediates.
 
-Several pipelines (MinHash/SimHash bands, SRP bands, winnowing posting
-lists) persist an intermediate that feeds multiple consumers — bucket-size
+Several pipelines (MinHash/SimHash bands, SRP bands, embedding blocks,
+winnowing posting lists) persist an intermediate that feeds multiple consumers — bucket-size
 counts plus both sides of a self-join — so it is computed once instead of
 once per consumer.  Left alone, each call would leak its cached blocks for
 the session lifetime (round-5 judge finding): a long-lived session invoking

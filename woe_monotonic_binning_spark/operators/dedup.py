@@ -17,10 +17,14 @@ Scale design (100 TB corpus, 1000 executors):
 
 from __future__ import annotations
 
+import sys
+import warnings
+
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from .._cache import generate_barrier, materialize_and_release
+from ..functions.vector import cosine_from_norms, norm
 from .text import WS_CHARS as _WS_CHARS
 
 MERSENNE_31 = 2_147_483_647  # 2^31 - 1, prime; keeps a*h+b inside int64
@@ -223,10 +227,11 @@ def _bucket_pairs(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(lazy distinct pairs ``(id_a, id_b)``, id_a < id_b; persisted band
     rows; persisted bucket counts) — the one capped-bucket pair core of
-    MinHash LSH, the SimHash / dHash / aHash pigeonhole and SRP.  ``rows``
-    holds one ``(id, *keys)`` row per document and band; a bucket is one
-    distinct ``keys`` value.  The caller verifies every candidate exactly
-    and releases both persisted tables after its final materialization.
+    MinHash LSH, the SimHash / dHash / aHash pigeonhole, SRP and embedding
+    blocks.  ``rows`` holds one ``(id, *keys)`` row per document and band
+    (or block); a bucket is one distinct ``keys`` value.  The caller
+    verifies every candidate exactly and releases both persisted tables
+    after its final materialization.
 
     Both tables are persisted because each is read three times (the
     counts by both self-join sides and the star; the rows by the counts
@@ -357,6 +362,34 @@ def jaccard_verify(
     return joined.select(
         "id_a", "id_b", F.round(jac, 6).alias("jaccard")
     ).filter(F.col("jaccard") >= threshold)
+
+
+def _cosine_verify(
+    ids: DataFrame, vecs: DataFrame, vec_col: str, id_col: str, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, cosine) for the candidate ``ids`` pairs whose 6-dp
+    cosine (``cosine_from_norms``, bit-identical to ``cosine_similarity``)
+    reaches ``threshold``.  ``vecs`` must hold ONE vector per ``id_col``:
+    it re-joins by ``id_a`` and then by ``id_b``, so a repeated id would
+    repeat its pairs.  Norms are computed once per joined row, so a pair
+    pays one array fold instead of three."""
+    va = vecs.select(
+        F.col(id_col).alias("id_a"),
+        F.col(vec_col).alias("v_a"),
+        norm(F.col(vec_col)).alias("n_a"),
+    )
+    vb = vecs.select(
+        F.col(id_col).alias("id_b"),
+        F.col(vec_col).alias("v_b"),
+        norm(F.col(vec_col)).alias("n_b"),
+    )
+    cos = cosine_from_norms(F.col("v_a"), F.col("v_b"), F.col("n_a"), F.col("n_b"))
+    return (
+        ids.join(va, "id_a")
+        .join(vb, "id_b")
+        .select("id_a", "id_b", F.round(cos, 6).alias("cosine"))
+        .filter(F.col("cosine") >= threshold)
+    )
 
 
 def minhash_dedup_pairs(
@@ -888,17 +921,20 @@ def embedding_neardup_pairs(
     """Embedding-cosine near-dup within blocks (e.g. a cluster/label key).
 
     The blocked self-join keeps the pair count tractable; at scale the block
-    key comes from an LSH or IVF assignment (see similarity.py).
+    key comes from an LSH or IVF assignment (see similarity.py).  ``df``
+    must hold one vector per id; a pair sharing several blocks is reported
+    once.
 
     ``max_block`` (keyword-only) is the zipfian skew guard: blocks holding
     more than ``max_block`` rows degrade to O(k) STAR candidates around the
     block's min-id anchor (exact-cosine verified like any candidate)
     instead of the O(k²) self-join — same fallback as the
-    MinHash/SimHash/SRP siblings.  **Default 1_000 (round 10; was None)**:
-    the builder's own sf1 skew smoke measured a 12x wall-clock blow-up from
-    one hot semantic cluster landing in a single block under the uncapped
-    default, the exact defect class the round-9 MinHash/SimHash default
-    flip fixed — safe-at-scale is now the default here too.  RECALL NOTE:
+    MinHash/SimHash/SRP siblings (star mechanics: ``_bucket_pairs``).
+    **Default 1_000 (round 10; was None)**: the round-10 sf1 skew
+    smoke measured a 12x wall-clock blow-up from one hot semantic cluster
+    landing in a single block under the uncapped default, the exact defect
+    class the round-9 MinHash/SimHash default flip fixed — safe-at-scale
+    is now the default here too.  RECALL NOTE:
     blocks of 1_001+ rows emit only anchor-star candidates, so a pair
     whose members are both far from the block's min-id anchor is missed
     (a mutually-similar hot block still collapses to one connected
@@ -912,112 +948,29 @@ def embedding_neardup_pairs(
     pipeline; any explicit ``max_block`` (including 1_000) is taken as
     opting in and stays silent.
 
-    DYNAMIC-ALLOCATION CAVEAT: the default-cap path eagerly
-    ``localCheckpoint``s the tiny (blk, count) table, pinning it to
-    executor-local blocks; if executors are decommissioned (dynamic
-    allocation, spot loss) between building this plan and running it, the
-    ok/hot branches fail instead of recomputing from lineage.  On such
-    clusters either pass ``max_block`` explicitly (skips the checkpoint
-    and the probe) or run the returned plan promptly.
+    The pair table is eagerly materialized and the block rows and counts
+    are unpersisted before returning (see _cache.py).
     """
-    from ..functions.vector import cosine_from_norms as _cosine_from_norms
-    from ..functions.vector import norm as _norm
-
-    # Norms are precomputed ONCE PER ROW before the self-join and the pair
-    # cosine is try_divide(dot, n_a * n_b) — bit-identical floats to
-    # cosine_similarity (same expressions, same order), at one array
-    # aggregate per PAIR instead of three (the two norm folds dominated
-    # the pair stage: 129s -> measured in the round-9 sf1 embedding skew
-    # smoke before this change).
-    a = df.select(
-        F.col(block_col).alias("blk"),
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("v_a"),
-        _norm(F.col(vec_col)).alias("n_a"),
+    ids, blocks, counts = _bucket_pairs(
+        df.select(F.col(id_col).alias("id_a"), F.col(block_col).alias("blk")),
+        ["blk"],
+        "id_a",
+        sys.maxsize if max_block is None else max_block,
     )
-    b = df.select(
-        F.col(block_col).alias("blk"),
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("v_b"),
-        _norm(F.col(vec_col)).alias("n_b"),
-    )
-    cols = ["id_a", "v_a", "n_a", "id_b", "v_b", "n_b"]
-    if max_block is None:
-        cand = a.join(b, "blk").filter(F.col("id_a") < F.col("id_b")).select(*cols)
-    else:
-        # min(id) rides the same partial/final count pass (round 17, guide
-        # §2.4): the star path below reads the anchor id straight off this
-        # table instead of re-aggregating the hot rows.  Only the 8-byte id
-        # is fused — the anchor's VECTOR still comes from the filter below,
-        # keeping this (checkpointed, broadcast-sized) table tiny.
-        sizes = a.groupBy("blk").agg(
-            F.count("*").alias("__bn"), F.min("id_a").alias("__anchor")
+    hot = counts.filter(F.col("n") > max_block)
+    if isinstance(max_block, _DefaultCap) and not hot.isEmpty():
+        warnings.warn(
+            f"embedding_neardup_pairs: at least one block exceeds the "
+            f"default max_block={int(max_block)}; over-cap blocks emit "
+            "anchor-star candidates only (reduced pair recall, see "
+            "docstring).  Pass max_block explicitly (None for exact "
+            "all-pairs) to silence this.",
+            RuntimeWarning,
+            stacklevel=_warn_stacklevel,
         )
-        if isinstance(max_block, _DefaultCap):
-            # Default path only: materialize the tiny (blk, count) table
-            # ONCE, eagerly, so the isEmpty warning probe below and the
-            # returned plan's ok/hot branches all read it without
-            # re-running df's full upstream lineage (round-11 advice: the
-            # probe used to be a whole extra pass over an expensive
-            # uncached upstream in semantic_dedup/curate_corpus).  Still
-            # eager at plan-construction time — deliberately, because the
-            # warning must reach user code synchronously where
-            # ``stacklevel`` points at the caller; an explicit max_block
-            # skips both the checkpoint and the probe entirely.
-            sizes = sizes.localCheckpoint(eager=True)
-        ok = sizes.filter(F.col("__bn") <= max_block).select("blk")
-        cand = (
-            a.join(ok, "blk")
-            .join(b.join(ok, "blk"), "blk")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select(*cols)
-        )
-        hot = sizes.filter(F.col("__bn") > max_block).select("blk", "__anchor")
-        if isinstance(max_block, _DefaultCap) and not hot.isEmpty():
-            # The DEFAULT cap is actually truncating a block: callers who
-            # never chose a cap get anchor-star recall on their hot blocks
-            # — surface it instead of silently changing results across the
-            # round-10 default flip (an explicit max_block, even 1_000,
-            # stays silent).
-            import warnings
-
-            warnings.warn(
-                f"embedding_neardup_pairs: at least one block exceeds the "
-                f"default max_block={int(max_block)}; over-cap blocks emit "
-                "anchor-star candidates only (reduced pair recall, see "
-                "docstring).  Pass max_block explicitly (None for exact "
-                "all-pairs) to silence this.",
-                RuntimeWarning,
-                stacklevel=_warn_stacklevel,
-            )
-        a_hot = a.join(hot, "blk")
-        anchor_rows = (
-            a_hot.filter(F.col("id_a") == F.col("__anchor"))
-            .select(
-                "blk",
-                F.col("id_a").alias("__aid"),
-                F.col("v_a").alias("__avec"),
-                F.col("n_a").alias("__anorm"),
-            )
-        )
-        star = (
-            a_hot.join(anchor_rows, "blk")
-            .filter(F.col("id_a") != F.col("__aid"))
-            .select(
-                F.col("__aid").alias("id_a"),
-                F.col("__avec").alias("v_a"),
-                F.col("__anorm").alias("n_a"),
-                F.col("id_a").alias("id_b"),
-                F.col("v_a").alias("v_b"),
-                F.col("n_a").alias("n_b"),
-            )
-        )
-        cand = cand.unionByName(star).dropDuplicates(["id_a", "id_b"])
-    cos = _cosine_from_norms(
-        F.col("v_a"), F.col("v_b"), F.col("n_a"), F.col("n_b")
-    )
-    return cand.select("id_a", "id_b", F.round(cos, 6).alias("cosine")).filter(
-        F.col("cosine") >= threshold
+    vecs = df.select(id_col, vec_col).dropDuplicates([id_col])
+    return materialize_and_release(
+        _cosine_verify(ids, vecs, vec_col, id_col, threshold), blocks, counts
     )
 
 
@@ -1058,9 +1011,9 @@ def semantic_dedup(
     assignment, the round-6 documented trade — still shares a block
     (either member's second-nearest cell is usually the other's nearest).
     Membership stays conceptually single-cell; a pair found in both
-    shared cells dedups through the pair table's ``distinct`` (identical
-    (id_a, id_b, cosine) rows).  The pair stage pays ~``pair_probes``²×
-    the single-probe candidate mass — set ``pair_probes=1`` to fall back
+    shared cells is reported once (``_bucket_pairs`` returns distinct
+    candidate pairs).  The pair stage pays ~``pair_probes``²× the
+    single-probe candidate mass — set ``pair_probes=1`` to fall back
     to the paper's exact behavior.  Genuinely far-apart cells can still
     hide a pair (top-2 is a heuristic, not closure) — raise
     ``pair_probes`` with the same cost trade.
@@ -1091,7 +1044,7 @@ def semantic_dedup(
         # the caller of semantic_dedup/curate_corpus, not at this line
         # (round-11 advice)
         _warn_stacklevel=_warn_stacklevel + 1,
-    ).distinct()
+    )
     if order_col is None:
         return dedup_keep_canonical(emb, pairs, id_col)
     return dedup_keep_best(emb, pairs, id_col, order_col, descending)
@@ -1104,7 +1057,6 @@ def contamination_overlap(
     id_col: str = "doc_id",
     n: int = 8,
     min_shared: int = 1,
-    cleanup: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination scan: (id, n_shared) for every corpus doc
     sharing at least ``min_shared`` distinct word ``n``-grams with ANY
@@ -1121,11 +1073,24 @@ def contamination_overlap(
     hashes: the broadcast join is equality on the gram text, so there are
     no collision false-positives and the operator is oracle-exact.
 
-    ``cleanup=True`` (default) eagerly materializes the (tiny) overlap
-    table; since round 17 session 2 the shingle intermediates are in-plan
-    Generate barriers rather than persists, so there are no caches to
-    release and ``cleanup=False`` simply returns the lazy plan.
+    The (tiny) overlap table is eagerly materialized; since round 17 the
+    shingle intermediates are in-plan Generate barriers rather than
+    persists, so there are no caches to release.
     """
+    return materialize_and_release(
+        _contamination_overlap_lazy(corpus, benchmark, text_col, id_col, n, min_shared)
+    )
+
+
+def _contamination_overlap_lazy(
+    corpus: DataFrame,
+    benchmark: DataFrame,
+    text_col: str,
+    id_col: str,
+    n: int,
+    min_shared: int,
+) -> DataFrame:
+    """``contamination_overlap``'s plan before its eager materialization."""
     # Both shingle arrays MUST be materialized before their explode: the
     # gram-building HOF chain otherwise collapses into the generator, which
     # re-evaluates it per emitted row — per-doc cost goes O(grams²) (the
@@ -1148,15 +1113,12 @@ def contamination_overlap(
     corpus_grams = corpus_sh.select(
         F.col(id_col), F.explode("shingles").alias("gram")
     )
-    out = (
+    return (
         corpus_grams.join(F.broadcast(bench_grams), "gram")
         .groupBy(id_col)
         .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
-    if cleanup:
-        return materialize_and_release(out)
-    return out
 
 
 def contamination_report(
@@ -1165,7 +1127,6 @@ def contamination_report(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 8,
-    cleanup: bool = True,
 ) -> DataFrame:
     """The REVERSE view of ``contamination_overlap``: one row per
     BENCHMARK document that leaks into the corpus — how many distinct
@@ -1223,9 +1184,7 @@ def contamination_report(
             ).alias("gram_hit_frac"),
         )
     )
-    if cleanup:
-        return materialize_and_release(out, bench_sh)
-    return out
+    return materialize_and_release(out, bench_sh)
 
 
 def decontaminate(
@@ -1277,25 +1236,34 @@ def decontaminate_semantic(
     match nothing.  The cosine is rounded to 6 dp before the comparison,
     matching ``embedding_neardup_pairs`` so thresholds mean the same
     thing across the embedding operators."""
-    from ..functions.vector import cosine_from_norms, norm
+    return _benchmark_cosine_join(
+        corpus, vec_col, benchmark, vec_col, threshold, "left_anti"
+    )
 
-    c = corpus.withColumn("__c_n", norm(F.col(vec_col)))
+
+def _benchmark_cosine_join(
+    c: DataFrame,
+    c_vec: str,
+    benchmark: DataFrame,
+    vec_col: str,
+    threshold: float,
+    how: str,
+    *b_cols: Column,
+) -> DataFrame:
+    """``c`` joined (``how``) to the broadcast ``benchmark`` on 6-dp
+    cosine >= ``threshold`` — the match of both semantic contamination
+    operators.  Norms are computed once per row on each side, outside
+    the join condition; ``b_cols`` ride along from the benchmark."""
+    c = c.withColumn("__c_n", norm(F.col(c_vec)))
     b = F.broadcast(
         benchmark.select(
+            *b_cols,
             F.col(vec_col).alias("__b_vec"),
             norm(F.col(vec_col)).alias("__b_n"),
         )
     )
-    cond = (
-        F.round(
-            cosine_from_norms(
-                c[vec_col], b["__b_vec"], c["__c_n"], b["__b_n"]
-            ),
-            6,
-        )
-        >= threshold
-    )
-    return c.join(b, cond, "left_anti").drop("__c_n")
+    cos = cosine_from_norms(c[c_vec], b["__b_vec"], c["__c_n"], b["__b_n"])
+    return c.join(b, F.round(cos, 6) >= threshold, how).drop("__c_n")
 
 
 def contamination_report_semantic(
@@ -1319,31 +1287,14 @@ def contamination_report_semantic(
     than vanish.  Same 6-dp round and NULL-on-zero-norm semantics as
     every embedding operator here; note a benchmark that is a subset of
     the corpus self-matches at cosine 1.0, so its floor is 1, not 0."""
-    from ..functions.vector import cosine_from_norms, norm
-
     c = corpus.select(
-        F.col(id_col).alias("__c_id"),
-        F.col(vec_col).alias("__c_vec"),
-        norm(F.col(vec_col)).alias("__c_n"),
-    )
-    b = F.broadcast(
-        benchmark.select(
-            F.col(id_col).alias("__b_id"),
-            F.col(vec_col).alias("__b_vec"),
-            norm(F.col(vec_col)).alias("__b_n"),
-        )
-    )
-    cond = (
-        F.round(
-            cosine_from_norms(
-                c["__c_vec"], b["__b_vec"], c["__c_n"], b["__b_n"]
-            ),
-            6,
-        )
-        >= threshold
+        F.col(id_col).alias("__c_id"), F.col(vec_col).alias("__c_vec")
     )
     hits = (
-        c.join(b, cond, "inner")
+        _benchmark_cosine_join(
+            c, "__c_vec", benchmark, vec_col, threshold, "inner",
+            F.col(id_col).alias("__b_id"),
+        )
         .groupBy("__b_id")
         .agg(F.count_distinct("__c_id").alias("n_corpus_docs"))
     )

@@ -29,7 +29,7 @@ from pyspark.sql.window import Window
 
 from .._cache import materialize_and_release
 from ..functions.vector import cosine_from_norms, dot, norm
-from .dedup import _bucket_pairs
+from .dedup import _bucket_pairs, _cosine_verify
 
 
 def brute_force_topk(
@@ -681,29 +681,4 @@ def _srp_threshold_pairs_lazy(
         "id_a",
         max_bucket,
     )
-    va = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("v_a"),
-        norm(F.col(vec_col)).alias("n_a"),
-    )
-    vb = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("v_b"),
-        norm(F.col(vec_col)).alias("n_b"),
-    )
-    out = (
-        ids.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                cosine_from_norms(
-                    F.col("v_a"), F.col("v_b"), F.col("n_a"), F.col("n_b")
-                ),
-                6,
-            ).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
-    return out, bands, sizes
+    return _cosine_verify(ids, df, vec_col, id_col, threshold), bands, sizes

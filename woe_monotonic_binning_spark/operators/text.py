@@ -994,7 +994,6 @@ def winnow_match_pairs(
     min_shared: int = 3,
     max_df_frac: float = 0.1,
     n_docs: int | None = None,
-    cleanup: bool = True,
 ) -> DataFrame:
     """Doc pairs sharing at least ``min_shared`` winnowing fingerprints.
 
@@ -1020,13 +1019,11 @@ def winnow_match_pairs(
     ``df.count()``; pass ``n_docs`` explicitly if you want the full-corpus
     denominator.
 
-    ``cleanup=True`` (default) eagerly materializes the match table and
-    unpersists the posting-list cache before returning (round-5 ADVICE:
-    each call previously leaked its caches for the session lifetime; see
-    _cache.py — the fingerprint frame is an in-plan Generate barrier
-    since round 17 session 2, so the posting list is the only cache
-    left).  ``cleanup=False`` returns the lazy plan and the caller owns
-    the cache.
+    The match table is eagerly materialized and the posting-list cache
+    unpersisted before returning (round-5 ADVICE: each call previously
+    leaked its caches for the Spark session's lifetime; see _cache.py —
+    the fingerprint frame is an in-plan Generate barrier since round 17,
+    so the posting list is the only cache left).
     """
     # The fingerprint array MUST be materialized before the explode:
     # CollapseProject folds winnow_fingerprints' staged selects into one
@@ -1064,9 +1061,7 @@ def winnow_match_pairs(
         .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
-    if cleanup:
-        return materialize_and_release(out, ex)
-    return out
+    return materialize_and_release(out, ex)
 
 
 def curation_report(
