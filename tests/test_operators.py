@@ -3285,6 +3285,8 @@ def test_decode_audio_codec_hook(spark):
             # 5.1 multichannel (round-12 advice): nch > 2 must still feed
             # channel 1 into sum_pcm_r, not silently NULL it
             return ("ac3", 6, 48000, 10, [11, 22, 33, 44, 55, 66])
+        if raw.startswith(b"FAKEBIG"):
+            return ("mp3", 1, 8000, 1, [2**53 + 1])
         if raw.startswith(b"BOOM"):
             raise ValueError("corrupt payload")
         return None
@@ -3316,6 +3318,16 @@ def test_decode_audio_codec_hook(spark):
     assert (rows[4].sum_pcm, rows[4].sum_pcm_r) == (11, 22)
     base = {r.media_id: r for r in decode_audio(media).collect()}
     assert base[1].fmt is None and base[2].fmt == "wav"
+    # an exact bigint next to a NULL-payload row in ONE partition (one
+    # Arrow batch): a pandas hand-off widens that column to float64 and
+    # rounds 2**53 + 1 down to 2**53
+    big = spark.createDataFrame(
+        [(5, "audio", bytearray(b"FAKEBIG")), (6, "audio", None)],
+        "media_id long, kind string, content binary",
+    ).coalesce(1)
+    got = {r.media_id: r for r in decode_audio(big, codec=stub_codec).collect()}
+    assert got[5].sum_pcm == 2**53 + 1
+    assert got[6].fmt is None and got[6].sum_pcm is None
 
 
 def test_decode_codec_malformed_returns_reject_rows_not_job(spark):
@@ -3378,6 +3390,96 @@ def test_decode_codec_malformed_returns_reject_rows_not_job(spark):
     assert rows[3].fmt == "mp3" and rows[3].sum_pcm == 10
     for mid in (0, 1, 2):
         assert rows[mid].fmt is None and rows[mid].sum_pcm is None
+
+
+_ROW_KERNELS = (
+    "decode_image", "decode_audio", "resize_image", "probe_media",
+    "decode_frames", "sample_frames", "decode_text", "dhash_images",
+    "ahash_audio", "explode_warc_column", "read_tar_shards",
+)
+
+
+def _row_kernel_output(spark, tmp_path, kernel):
+    """One small run of a per-payload kernel: 20 fixture payloads plus a
+    NULL payload (and, for the WARC walk, a blob with zero records)."""
+    import woe_monotonic_binning_spark.operators.multimodal as mm
+    import tests.media_fixtures as mf
+    from woe_monotonic_binning_spark.sources.warc import explode_warc_column
+    from woe_monotonic_binning_spark.sources.webdataset import (
+        read_tar_shards,
+        write_tar_shards,
+    )
+
+    # one input partition, so 7-row Arrow batches cut through it
+    docs = spark.range(0, 20, 1, 1).withColumnRenamed("id", "doc_id")
+
+    def with_null(media):
+        null = media.where("media_id = 0").withColumn(
+            "media_id", F.lit(-1).cast("long")
+        ).withColumn("content", F.lit(None).cast("binary"))
+        return media.unionByName(null)
+
+    if kernel == "explode_warc_column":
+        odd = spark.createDataFrame(
+            [(-1, None), (-2, bytearray(b"\r\n\r\n"))],
+            "doc_id long, content binary",
+        )
+        return explode_warc_column(mf.synthetic_warc_blobs(docs).unionByName(odd))
+    if kernel == "read_tar_shards":
+        members = mf.synthetic_ppm_media(docs).select(
+            F.concat(F.lit("s"), F.col("media_id") % 10).alias("shard"),
+            F.col("media_id").cast("string").alias("sample_key"),
+            F.lit("ppm").alias("ext"),
+            "content",
+        )
+        write_tar_shards(members, str(tmp_path / "shards"))
+        return read_tar_shards(spark, str(tmp_path / "shards"))
+    if kernel in ("decode_frames", "sample_frames"):
+        media = with_null(mf.synthetic_avi_mjpeg_media(docs))
+        if kernel == "sample_frames":
+            return mm.sample_frames(media, every_ms=50, decode=True)
+        return mm.decode_frames(media)
+    if kernel == "decode_text":
+        return mm.decode_text(
+            with_null(mf.synthetic_text_media(docs)), hint_col="charset_hint"
+        )
+    fixture = {
+        "decode_audio": mf.synthetic_wav_media,
+        "probe_media": mf.synthetic_wav_media,
+        "dhash_images": mf.synthetic_gradient_ppm_media,
+        "ahash_audio": mf.synthetic_tone_wav_media,
+    }.get(kernel, mf.synthetic_ppm_media)
+    media = with_null(fixture(docs))
+    if kernel == "resize_image":
+        return mm.resize_image(media, 3, 2)
+    return getattr(mm, kernel)(media)
+
+
+@pytest.mark.parametrize("kernel", _ROW_KERNELS)
+def test_row_kernels_batch_boundary_parity(spark, tmp_path, kernel):
+    """Every per-payload kernel rides the one Arrow row runner
+    (``_rows.map_rows``): cutting the input into 7-row Arrow batches
+    must not change a single output row, NULL-payload rows and
+    zero-record blobs included."""
+    batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    # one scan task reads 8 of the 10 tar shards, so the tar walk's input
+    # batches are cut too (file sources only; the rest ignore it)
+    min_parts = "spark.sql.files.minPartitionNum"
+    prev = {k: spark.conf.get(k, None) for k in (batch, min_parts)}
+    spark.conf.set(min_parts, "1")
+    try:
+        out = _row_kernel_output(spark, tmp_path, kernel)
+        default = sorted(map(tuple, out.collect()), key=repr)
+        spark.conf.set(batch, "7")
+        small = sorted(map(tuple, out.collect()), key=repr)
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert len(default) >= 20
+    assert small == default
 
 
 def _mk_dc_jpeg(w, h, dcs_bits, ac_extra=False):

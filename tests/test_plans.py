@@ -668,24 +668,41 @@ def test_filter_domains_dataframe_blocklist_broadcasts(spark):
 
 
 def test_perceptual_hash_plans_are_map_side(spark):
-    """dhash_images / ahash_audio are embarrassingly parallel: one
-    column-pruned Arrow pass, zero exchanges (round 16)."""
-    from woe_monotonic_binning_spark.operators.multimodal import (
-        ahash_audio,
-        dhash_images,
-    )
-    from tests.media_fixtures import (
-        synthetic_gradient_ppm_media,
-        synthetic_tone_wav_media,
-    )
+    """Every multimodal payload kernel (the perceptual hashes since round
+    16, all nine since the shared Arrow row runner) is embarrassingly
+    parallel: zero exchanges and exactly one Arrow Python pass, whose
+    input is pruned to ``media_id`` + ``content`` (+ the charset hint
+    for decode_text) — ``kind`` and the ``meta`` struct never cross."""
+    import re
+
+    import woe_monotonic_binning_spark.operators.multimodal as mm
+    import tests.media_fixtures as mf
 
     docs = spark.range(16).withColumnRenamed("id", "doc_id")
-    for out in (
-        dhash_images(synthetic_gradient_ppm_media(docs)),
-        ahash_audio(synthetic_tone_wav_media(docs)),
+    ppm = mf.synthetic_ppm_media(docs)
+    wav = mf.synthetic_wav_media(docs)
+    avi = mf.synthetic_avi_mjpeg_media(docs)
+    text = mf.synthetic_text_media(docs)
+    base = ["content", "media_id"]
+    for out, expect in (
+        (mm.decode_image(ppm), base),
+        (mm.decode_audio(wav), base),
+        (mm.resize_image(ppm, 2, 2), base),
+        (mm.probe_media(wav), base),
+        (mm.decode_frames(avi), base),
+        (mm.sample_frames(avi, decode=True), base),
+        (mm.decode_text(text, hint_col="charset_hint"),
+         ["charset_hint"] + base),
+        (mm.dhash_images(mf.synthetic_gradient_ppm_media(docs)), base),
+        (mm.ahash_audio(mf.synthetic_tone_wav_media(docs)), base),
     ):
-        plan = out._jdf.queryExecution().executedPlan().toString()
+        plan = formatted_plan(out)
         assert "Exchange" not in plan, plan[:1500]
+        assert python_eval_count(out, "arrow") == 1, plan[:1500]
+        m = re.search(r"\) MapInArrow\s*\nInput \[\d+\]: \[([^\]]*)\]", plan)
+        assert m, plan[:1500]
+        got = sorted(re.sub(r"#\d+L?$", "", c.strip()) for c in m.group(1).split(","))
+        assert got == expect, plan[:1500]
 
 
 def test_tar_read_plan_is_one_pass(spark, tmp_path):

@@ -283,7 +283,8 @@ def main() -> None:
         .collect(),
         # WARC record walk + HTTP body decoding (round 17): one blob
         # per doc rotating plain/chunked/gzip/deflate framing —
-        # mapInPandas, embarrassingly parallel, skew-neutral by shape
+        # one mapInArrow (the shared row runner), embarrassingly
+        # parallel, skew-neutral by shape
         "warc_decode": lambda d, ctx: ctx["explode_warc"](
             ctx["synthetic_warc"](read_docs(d))
         ).agg(F.sum("n_bytes"), F.count("content")).collect(),

@@ -1,9 +1,11 @@
 """Multimodal column plumbing: opaque binary payloads with typed metadata.
 
-Images/audio/video ride as ``binary`` columns plus a metadata struct; the
-decode steps run as Arrow-batched ``mapInPandas`` so each Python
-worker sees a columnar batch of payloads (the right shape for a real
-decoder or GPU preprocessor).
+Images/audio/video ride as ``binary`` columns plus a metadata struct; every
+decode step runs through the one Arrow row runner ``_rows.map_rows`` (an
+Arrow-batched ``mapInArrow`` over ``media_id`` and ``content`` only), so
+each Python worker sees a columnar batch of payloads (the right shape for a
+real decoder or GPU preprocessor) and the kernel itself is a per-payload
+function yielding typed rows.
 
 Kernel status: ``decode_image`` is a REAL decoder for the
 formats a pure-Python parser can handle — binary PPM (P6), uncompressed
@@ -34,10 +36,10 @@ from __future__ import annotations
 
 import functools
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from .._rows import map_rows
 
 MEDIA_SCHEMA = (
     "media_id bigint, kind string, content binary, "
@@ -949,11 +951,8 @@ def _decode_raster(raw: bytes, codec=None):
     dims, or a raster that is not 3*w*h bytes must reject the row, not
     kill the stage; bytes-like rasters only, since ``bytes(3)`` would
     mint a zero-filled buffer and silently accept an integer return as
-    an all-black image — round-12 review), then the built-in parsers
-    with per-parser try (round-13 review: one corrupt payload among
-    billions downgrades to the honest reject, while MemoryError — a
-    VALID image exhausting the worker — and ImportError — a misbuilt
-    worker missing numpy — re-raise LOUDLY).  Returns ``(parsed, fmt)``
+    an all-black image — round-12 review), then the built-in parsers,
+    each through the ``_tolerant`` crash downgrade.  Returns ``(parsed, fmt)``
     where ``parsed`` is ``(w, h, rgb)`` or ``(w, h, rgb, orientation)``,
     or ``(None, None)``."""
     parsed, fmt = None, None
@@ -981,16 +980,39 @@ def _decode_raster(raw: bytes, codec=None):
             (_parse_png, "png"),
             (_parse_jpeg, "jpeg"),
         ):
-            try:
-                parsed = parse(raw)
-            except (MemoryError, ImportError):
-                raise
-            except Exception:
-                parsed = None
+            parsed = _tolerant(parse, raw)
             if parsed is not None:
                 fmt = name
                 break
     return parsed, fmt
+
+
+def _tolerant(parse, *args, **kw):
+    """``parse(*args, **kw)``, or None when it raises: the per-payload
+    crash downgrade every kernel here applies to the built-in parsers
+    (round-13 review: one corrupt payload among billions downgrades to
+    the honest reject).  MemoryError — a VALID payload exhausting the
+    worker, which a retry may survive — and ImportError — a misbuilt
+    worker missing numpy — re-raise LOUDLY."""
+    try:
+        return parse(*args, **kw)
+    except (MemoryError, ImportError):
+        raise
+    except Exception:
+        return None
+
+
+def _rgb_stats(parsed) -> tuple[int, int, int, int, int, int]:
+    """``(width, height, n_pixels, sum_r, sum_g, sum_b)`` of a decoded
+    raster — exact int64 channel sums over all pixels, so the stats are
+    hash-exact and oracle-checkable (unlike float means)."""
+    import numpy as np
+
+    w, h, px = parsed[:3]
+    sums = np.frombuffer(px, dtype=np.uint8).reshape(-1, 3).sum(
+        axis=0, dtype=np.int64
+    )
+    return w, h, w * h, int(sums[0]), int(sums[1]), int(sums[2])
 
 
 def decode_image(media: DataFrame, codec=None) -> DataFrame:
@@ -1000,7 +1022,7 @@ def decode_image(media: DataFrame, codec=None) -> DataFrame:
     scanline filters — rounds 11-12), and Huffman JPEG — baseline SOF0
     and progressive SOF2 (grayscale/YCbCr up to 4:2:0 — round 13, see
     ``_parse_jpeg`` for the support matrix and tolerance notes), parsed in pure Python (no
-    Pillow / opencv needed) inside an Arrow-batched ``mapInPandas`` —
+    Pillow / opencv needed) inside an Arrow-batched ``mapInArrow`` —
     per row the format header is sniffed, the raster decoded, and exact
     integer channel sums emitted (``sum_r/g/b`` over all pixels;
     integer, so the output is hash-exact and oracle-checkable, unlike
@@ -1033,45 +1055,24 @@ def decode_image(media: DataFrame, codec=None) -> DataFrame:
     NULL stats rather than killing the worker.  Batch sizing via
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` as for every kernel
     here."""
-    import numpy as np
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": pdf["media_id"],
-                "fmt": [], "width": [], "height": [], "n_pixels": [],
-                "sum_r": [], "sum_g": [], "sum_b": [], "orientation": [],
-            }
-            for b in pdf["content"]:
-                parsed, fmt = (
-                    _decode_raster(bytes(b), codec)
-                    if b is not None else (None, None)
-                )
-                if parsed is None:
-                    for k in ("width", "height", "n_pixels", "sum_r",
-                              "sum_g", "sum_b", "orientation"):
-                        out[k].append(None)
-                    out["fmt"].append(None)
-                    continue
-                # _parse_jpeg returns a 4-tuple with the EXIF orientation
-                # (round 14); the other parsers and codec hooks stay
-                # 3-tuples — orientation None.  The raster is reported
-                # UNROTATED (decode reports, resize_image applies).
-                w, h, px = parsed[:3]
-                orient = parsed[3] if len(parsed) == 4 else None
-                arr = np.frombuffer(px, dtype=np.uint8).reshape(-1, 3)
-                sums = arr.sum(axis=0, dtype=np.int64)
-                out["fmt"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["sum_r"].append(int(sums[0]))
-                out["sum_g"].append(int(sums[1]))
-                out["sum_b"].append(int(sums[2]))
-                out["orientation"].append(orient)
-            yield pd.DataFrame(out)
+    def decode(mid, b):
+        parsed, fmt = (
+            _decode_raster(b, codec) if b is not None else (None, None)
+        )
+        if parsed is None:
+            yield (mid,) + (None,) * 8
+            return
+        # _parse_jpeg returns a 4-tuple with the EXIF orientation
+        # (round 14); the other parsers and codec hooks stay
+        # 3-tuples — orientation None.  The raster is reported
+        # UNROTATED (decode reports, resize_image applies).
+        orient = parsed[3] if len(parsed) == 4 else None
+        yield (mid, fmt) + _rgb_stats(parsed) + (orient,)
 
-    return media.mapInPandas(decode, schema=DECODED_IMAGE_SCHEMA)
+    return map_rows(
+        media, ["media_id", "content"], DECODED_IMAGE_SCHEMA, decode
+    )
 
 
 DECODED_AUDIO_SCHEMA = (
@@ -1465,6 +1466,43 @@ def _parse_flac(
     return nch_out, rate_out, n_frames, sums
 
 
+def _decode_pcm(raw: bytes, codec=None):
+    """The per-payload audio dispatch, twin of ``_decode_raster``: the
+    caller's ``codec`` hook first, validated INSIDE the try (round-12
+    review: a codec reporting rate<=0 on a malformed header — a common
+    decoder-wrapper convention — would otherwise reach the duration
+    division and kill the stage; wrong-arity tuples, nch<1 and a sums
+    sequence shorter than the channel count reject the row the same
+    way), then the built-in WAV and FLAC parsers, each through the
+    ``_tolerant`` crash downgrade.  Returns ``(parsed, fmt)`` where
+    ``parsed`` is ``(n_channels, sample_rate, n_frames, sums)``, or
+    ``(None, None)``."""
+    parsed, fmt = None, None
+    if codec is not None:
+        try:
+            got = codec(raw)
+            if got is not None:
+                fmt_, nch_, rate_, nf_, sums_ = got
+                sums_ = [int(x) for x in sums_]
+                if (
+                    int(rate_) > 0
+                    and int(nch_) >= 1
+                    and int(nf_) >= 0
+                    and len(sums_) >= min(int(nch_), 2)
+                ):
+                    fmt = str(fmt_)
+                    parsed = (int(nch_), int(rate_), int(nf_), sums_)
+        except Exception:
+            parsed, fmt = None, None
+    if parsed is None:
+        for parse, name in ((_parse_wav, "wav"), (_parse_flac, "flac")):
+            parsed = _tolerant(parse, raw)
+            if parsed is not None:
+                fmt = name
+                break
+    return parsed, fmt
+
+
 def decode_audio(media: DataFrame, codec=None) -> DataFrame:
     """REAL audio decode for RIFF/WAV 16-bit PCM (round 11) and native
     FLAC (round 14 — see ``_parse_flac`` for the support matrix: constant
@@ -1474,7 +1512,7 @@ def decode_audio(media: DataFrame, codec=None) -> DataFrame:
     duration_ms (floor), and exact per-channel integer sample sums
     (``sum_pcm`` = channel 0, ``sum_pcm_r`` = channel 1 or NULL for mono)
     — integer, so hash-exact and oracle-checkable like ``decode_image``'s
-    sums.  Same Arrow-batched ``mapInPandas`` shape and NULL/unparseable
+    sums.  Same Arrow-batched ``mapInArrow`` shape and NULL/unparseable
     tolerance; lossy compressed audio stays honestly rejected (needs
     codec libraries) — unless you bring one:
 
@@ -1486,75 +1524,22 @@ def decode_audio(media: DataFrame, codec=None) -> DataFrame:
     ``sum_pcm_r``; mono may return a 1-element sequence).  Return
     ``None`` or raise (caught per row) to fall through to the built-in
     parser, matching ``decode_image``'s tolerant contract."""
-    import numpy as np  # noqa: F401 — imported for the worker
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": pdf["media_id"],
-                "fmt": [], "n_channels": [], "sample_rate": [],
-                "n_frames": [], "duration_ms": [], "sum_pcm": [], "sum_pcm_r": [],
-            }
-            for b in pdf["content"]:
-                parsed, fmt = None, None
-                if b is not None:
-                    raw = bytes(b)
-                    if codec is not None:
-                        # validate INSIDE the try (round-12 review): a
-                        # codec reporting rate<=0 on a malformed header —
-                        # a common decoder-wrapper convention — would
-                        # otherwise reach the duration division and kill
-                        # the stage; wrong-arity tuples, nch<1 and a sums
-                        # sequence shorter than the channel count reject
-                        # the row the same way
-                        try:
-                            got = codec(raw)
-                            if got is not None:
-                                fmt_, nch_, rate_, nf_, sums_ = got
-                                sums_ = [int(x) for x in sums_]
-                                if (
-                                    int(rate_) > 0
-                                    and int(nch_) >= 1
-                                    and int(nf_) >= 0
-                                    and len(sums_) >= min(int(nch_), 2)
-                                ):
-                                    fmt = str(fmt_)
-                                    parsed = (int(nch_), int(rate_), int(nf_), sums_)
-                        except Exception:
-                            parsed, fmt = None, None
-                    if parsed is None:
-                        for parse, name in ((_parse_wav, "wav"),
-                                            (_parse_flac, "flac")):
-                            # per-parser crash downgrade + loud
-                            # MemoryError/ImportError, as in decode_image
-                            try:
-                                parsed = parse(raw)
-                            except (MemoryError, ImportError):
-                                raise
-                            except Exception:
-                                parsed = None
-                            if parsed is not None:
-                                fmt = name
-                                break
-                if parsed is None:
-                    for k in ("fmt", "n_channels", "sample_rate", "n_frames",
-                              "duration_ms", "sum_pcm", "sum_pcm_r"):
-                        out[k].append(None)
-                    continue
-                nch, rate, n_frames, sums = parsed
-                out["fmt"].append(fmt)
-                out["n_channels"].append(nch)
-                out["sample_rate"].append(rate)
-                out["n_frames"].append(n_frames)
-                out["duration_ms"].append(n_frames * 1000 // rate)
-                out["sum_pcm"].append(sums[0])
-                # >= 2, not == 2: a multichannel codec (5.1 etc.) supplies
-                # len(sums) >= 2 per the validated contract above, and
-                # channel 1 is still the right feed for sum_pcm_r
-                out["sum_pcm_r"].append(sums[1] if nch >= 2 else None)
-            yield pd.DataFrame(out)
+    def decode(mid, b):
+        parsed, fmt = _decode_pcm(b, codec) if b is not None else (None, None)
+        if parsed is None:
+            yield (mid,) + (None,) * 7
+            return
+        nch, rate, n_frames, sums = parsed
+        # >= 2, not == 2: a multichannel codec (5.1 etc.) supplies
+        # len(sums) >= 2 per the validated contract in _decode_pcm, and
+        # channel 1 is still the right feed for sum_pcm_r
+        yield (mid, fmt, nch, rate, n_frames, n_frames * 1000 // rate,
+               sums[0], sums[1] if nch >= 2 else None)
 
-    return media.mapInPandas(decode, schema=DECODED_AUDIO_SCHEMA)
+    return map_rows(
+        media, ["media_id", "content"], DECODED_AUDIO_SCHEMA, decode
+    )
 
 
 def _apply_exif_orientation(arr, orient: int):
@@ -1603,65 +1588,32 @@ def resize_image(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     if out_w <= 0 or out_h <= 0:
         raise ValueError(f"resize_image: invalid target {out_w}x{out_h}")
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": pdf["media_id"],
-                "fmt": [], "width": [], "height": [], "content": [],
-            }
-            for b in pdf["content"]:
-                parsed, fmt = None, None
-                if b is not None:
-                    raw = bytes(b)
-                    for parse, name in (
-                        (_parse_ppm, "ppm"),
-                        (_parse_bmp, "bmp"),
-                        (_parse_png, "png"),
-                        (_parse_jpeg, "jpeg"),
-                    ):
-                        # same per-parser crash downgrade as decode_image
-                        # (MemoryError/ImportError re-raise — retry and
-                        # loud environment failure, see there)
-                        try:
-                            parsed = parse(raw)
-                        except (MemoryError, ImportError):
-                            raise
-                        except Exception:
-                            parsed = None
-                        if parsed is not None:
-                            fmt = name
-                            break
-                if parsed is None:
-                    out["fmt"].append(None)
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["content"].append(None)
-                    continue
-                w, h, px = parsed[:3]
-                arr = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)
-                # EXIF orientation (round 14): JPEG parse reports the tag;
-                # the resize path APPLIES it before resampling, so the
-                # output raster is upright (the standard thumbnailer
-                # contract).  1=identity 2=mirror 3=rot180 4=flip
-                # 5=transpose 6=rot90CW 7=transverse 8=rot90CCW; 5-8 swap
-                # the source axes before the nearest-neighbor map.
-                orient = parsed[3] if len(parsed) == 4 else None
-                if orient in (2, 3, 4, 5, 6, 7, 8):
-                    arr = _apply_exif_orientation(arr, orient)
-                    h, w = arr.shape[0], arr.shape[1]
-                ys = (np.arange(out_h) * h) // out_h
-                xs = (np.arange(out_w) * w) // out_w
-                res = arr[ys][:, xs]
-                body = res.tobytes()
-                out["fmt"].append(fmt)
-                out["width"].append(out_w)
-                out["height"].append(out_h)
-                out["content"].append(
-                    f"P6\n{out_w} {out_h}\n255\n".encode("ascii") + body
-                )
-            yield pd.DataFrame(out)
+    def resize(mid, b):
+        parsed, fmt = _decode_raster(b) if b is not None else (None, None)
+        if parsed is None:
+            yield (mid, None, None, None, None)
+            return
+        w, h, px = parsed[:3]
+        arr = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)
+        # EXIF orientation (round 14): JPEG parse reports the tag;
+        # the resize path APPLIES it before resampling, so the
+        # output raster is upright (the standard thumbnailer
+        # contract).  1=identity 2=mirror 3=rot180 4=flip
+        # 5=transpose 6=rot90CW 7=transverse 8=rot90CCW; 5-8 swap
+        # the source axes before the nearest-neighbor map.
+        orient = parsed[3] if len(parsed) == 4 else None
+        if orient in (2, 3, 4, 5, 6, 7, 8):
+            arr = _apply_exif_orientation(arr, orient)
+            h, w = arr.shape[0], arr.shape[1]
+        ys = (np.arange(out_h) * h) // out_h
+        xs = (np.arange(out_w) * w) // out_w
+        body = arr[ys][:, xs].tobytes()
+        yield (mid, fmt, out_w, out_h,
+               f"P6\n{out_w} {out_h}\n255\n".encode("ascii") + body)
 
-    return media.mapInPandas(resize, schema=RESIZED_IMAGE_SCHEMA)
+    return map_rows(
+        media, ["media_id", "content"], RESIZED_IMAGE_SCHEMA, resize
+    )
 
 
 PROBE_SCHEMA = (
@@ -1845,40 +1797,14 @@ def probe_media(media: DataFrame) -> DataFrame:
             return _probe_mp4(b)
         return None
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": pdf["media_id"], "container": [], "width": [],
-                "height": [], "n_channels": [], "sample_rate": [],
-                "duration_ms": [], "n_bytes": [],
-            }
-            for b in pdf["content"]:
-                got = None
-                if b is not None:
-                    raw = bytes(b)
-                    try:
-                        got = probe_one(raw)
-                    except (MemoryError, ImportError):
-                        raise
-                    except Exception:
-                        got = None
-                if got is None:
-                    for k in ("container", "width", "height", "n_channels",
-                              "sample_rate", "duration_ms"):
-                        out[k].append(None)
-                    out["n_bytes"].append(len(raw) if b is not None else None)
-                    continue
-                c, w, h, nch, rate, dur = got
-                out["container"].append(c)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_channels"].append(nch)
-                out["sample_rate"].append(rate)
-                out["duration_ms"].append(dur)
-                out["n_bytes"].append(len(raw))
-            yield pd.DataFrame(out)
+    def probe(mid, b):
+        if b is None:
+            yield (mid,) + (None,) * 7
+            return
+        got = _tolerant(probe_one, b) or (None,) * 6
+        yield (mid, *got, len(b))
 
-    return media.mapInPandas(probe, schema=PROBE_SCHEMA)
+    return map_rows(media, ["media_id", "content"], PROBE_SCHEMA, probe)
 
 
 def _avi_video_frames(b: bytes):
@@ -1948,65 +1874,26 @@ def decode_frames(media: DataFrame) -> DataFrame:
     ``_parse_jpeg`` rejects (a non-MJPEG video codec's bitstream) yields
     a per-frame row with NULL dims/sums — frame POSITIONS are container
     facts, pixel stats need the codec.  At 100 TB this is Arrow-batched
-    ``mapInPandas``, embarrassingly parallel, with the same
+    ``mapInArrow``, embarrassingly parallel, with the same
     ``_MAX_DECODE_PIXELS`` per-frame cap as every image kernel."""
-    import numpy as np  # noqa: F401 — imported for the worker
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def decode(mid, b):
+        walked = _tolerant(_avi_video_frames, b) if b is not None else None
+        if walked is None or not walked[1]:
+            yield (mid,) + (None,) * 9
+            return
+        usec, frames = walked
+        for idx, chunk in enumerate(frames):
+            ts = (idx * usec) // 1000 if usec else None
+            parsed = _tolerant(_parse_jpeg, chunk)
+            if parsed is None:
+                yield (mid, idx, ts) + (None,) * 7
+            else:
+                yield (mid, idx, ts, "mjpeg") + _rgb_stats(parsed)
 
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_id", "frame_idx", "ts_ms", "fmt", "width", "height",
-                "n_pixels", "sum_r", "sum_g", "sum_b",
-            )}
-
-            def emit(mid, idx, ts, fmt, w, h, np_, sr, sg, sb):
-                out["media_id"].append(mid)
-                out["frame_idx"].append(idx)
-                out["ts_ms"].append(ts)
-                out["fmt"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(np_)
-                out["sum_r"].append(sr)
-                out["sum_g"].append(sg)
-                out["sum_b"].append(sb)
-
-            for mid, b in zip(pdf["media_id"], pdf["content"]):
-                walked = None
-                if b is not None:
-                    try:
-                        walked = _avi_video_frames(bytes(b))
-                    except (MemoryError, ImportError):
-                        raise
-                    except Exception:
-                        walked = None
-                if walked is None or not walked[1]:
-                    emit(mid, None, None, None, None, None, None,
-                         None, None, None)
-                    continue
-                usec, frames = walked
-                for idx, chunk in enumerate(frames):
-                    ts = (idx * usec) // 1000 if usec else None
-                    try:
-                        parsed = _parse_jpeg(chunk)
-                    except (MemoryError, ImportError):
-                        raise
-                    except Exception:
-                        parsed = None
-                    if parsed is None:
-                        emit(mid, idx, ts, None, None, None, None,
-                             None, None, None)
-                        continue
-                    w, h, px = parsed[:3]
-                    arr = np.frombuffer(px, dtype=np.uint8).reshape(-1, 3)
-                    sums = arr.sum(axis=0, dtype=np.int64)
-                    emit(mid, idx, ts, "mjpeg", w, h, w * h,
-                         int(sums[0]), int(sums[1]), int(sums[2]))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(decode, schema=DECODED_FRAME_SCHEMA)
+    return map_rows(
+        media, ["media_id", "content"], DECODED_FRAME_SCHEMA, decode
+    )
 
 
 def sample_frames(
@@ -2048,55 +1935,29 @@ def sample_frames(
             )
         )
 
-    def decode_sampled(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def decode_sampled(mid, b):
+        walked = _tolerant(_avi_video_frames, b) if b is not None else None
+        if walked is None or not walked[1] or not walked[0]:
+            yield (mid,) + (None,) * 9
+            return
+        usec, frames = walked
+        total_ms = len(frames) * usec // 1000
+        cache: dict[int, tuple] = {}
+        ts = 0
+        while ts < max(total_ms, 1):
+            idx = min(ts * 1000 // usec, len(frames) - 1)
+            if idx not in cache:
+                parsed = _tolerant(_parse_jpeg, frames[idx])
+                cache[idx] = (
+                    (None,) * 7 if parsed is None
+                    else ("mjpeg",) + _rgb_stats(parsed)
+                )
+            yield (mid, idx, ts) + cache[idx]
+            ts += every_ms
 
-        for pdf in batches:
-            rows = []
-            for mid, b in zip(pdf["media_id"], pdf["content"]):
-                walked = None
-                if b is not None:
-                    try:
-                        walked = _avi_video_frames(bytes(b))
-                    except (MemoryError, ImportError):
-                        raise
-                    except Exception:
-                        walked = None
-                if walked is None or not walked[1] or not walked[0]:
-                    rows.append((mid,) + (None,) * 9)
-                    continue
-                usec, frames = walked
-                total_ms = len(frames) * usec // 1000
-                cache: dict[int, tuple] = {}
-                ts = 0
-                while ts < max(total_ms, 1):
-                    idx = min(ts * 1000 // usec, len(frames) - 1)
-                    if idx not in cache:
-                        try:
-                            parsed = _parse_jpeg(frames[idx])
-                        except (MemoryError, ImportError):
-                            raise
-                        except Exception:
-                            parsed = None
-                        if parsed is None:
-                            cache[idx] = (None,) * 7
-                        else:
-                            w, h, px = parsed[:3]
-                            arr = np.frombuffer(px, dtype=np.uint8)
-                            s = arr.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                            cache[idx] = ("mjpeg", w, h, w * h,
-                                          int(s[0]), int(s[1]), int(s[2]))
-                    rows.append((mid, idx, ts) + cache[idx])
-                    ts += every_ms
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "ts_ms", "fmt", "width",
-                         "height", "n_pixels", "sum_r", "sum_g", "sum_b"],
-            )
-
-    return media.mapInPandas(decode_sampled, schema=DECODED_FRAME_SCHEMA)
+    return map_rows(
+        media, ["media_id", "content"], DECODED_FRAME_SCHEMA, decode_sampled
+    )
 
 
 DECODED_TEXT_SCHEMA = (
@@ -2235,14 +2096,12 @@ def decode_text(
     reject), ``had_bom``, ``n_bytes`` (raw payload size).  NULL content
     -> all-NULL row with NULL n_bytes.
 
-    Arrow-batched ``mapInPandas`` like every decode kernel here —
+    Arrow-batched ``mapInArrow`` like every decode kernel here —
     embarrassingly parallel, no shuffle, stateless (stream == batch
     parity pinned in tests); certified end to end through the
     q_multimodal_stats 'text' section over JVM-built mixed-encoding
     payloads (the md5 of the decoded text is exact cross-engine because
     both engines hash the UTF-8 re-encoding)."""
-    cols = ["media_id", "content"] + ([hint_col] if hint_col else [])
-    narrow = media.select(*cols)
     # snapshot driver-side so the table rides the UDF closure (executors
     # re-import the module, so a module-global lookup there would ignore
     # any caller-side table override — the same reason tokenize_bpe
@@ -2251,79 +2110,42 @@ def decode_text(
     resolve = _resolve_charset_hint
     sniff = _sniff_meta_charset
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": pdf["media_id"], "text": [], "encoding": [],
-                   "had_bom": [], "n_bytes": []}
-            hints = pdf[hint_col] if hint_col else None
-            for i, b in enumerate(pdf["content"]):
-                if b is None:
-                    out["text"].append(None)
-                    out["encoding"].append(None)
-                    out["had_bom"].append(None)
-                    out["n_bytes"].append(None)
-                    continue
-                raw = bytes(b)
-                out["n_bytes"].append(len(raw))
-                bom_codec = None
-                for bom, codec in _BOMS:
-                    if raw.startswith(bom):
-                        bom_codec, body = codec, raw[len(bom):]
-                        break
-                if bom_codec is not None:
-                    out["had_bom"].append(True)
-                    try:
-                        out["text"].append(body.decode(bom_codec))
-                        out["encoding"].append(bom_codec)
-                    except UnicodeDecodeError:
-                        out["text"].append(None)
-                        out["encoding"].append(None)
-                    continue
-                out["had_bom"].append(False)
-                hinted = (
-                    resolve(hints.iloc[i], aliases)
-                    if hints is not None else None
-                )
-                if hinted is not None:
-                    py_codec, name = hinted
-                    try:
-                        out["text"].append(raw.decode(py_codec))
-                        out["encoding"].append(name)
-                        continue
-                    except UnicodeDecodeError:
-                        pass  # lying header: fall through, never reject
-                if meta_sniff:
-                    sniffed = sniff(raw, aliases)
-                    if sniffed is not None:
-                        py_codec, name = sniffed
-                        try:
-                            out["text"].append(raw.decode(py_codec))
-                            out["encoding"].append(name)
-                            continue
-                        except UnicodeDecodeError:
-                            pass  # lying meta: degrade like a lying header
-                try:
-                    out["text"].append(raw.decode("utf-8"))
-                    out["encoding"].append("utf-8")
-                    continue
-                except UnicodeDecodeError:
-                    pass
-                if cp1252_fallback:
-                    try:
-                        out["text"].append(raw.decode("cp1252"))
-                        out["encoding"].append("windows-1252")
-                        continue
-                    except UnicodeDecodeError:
-                        pass  # one of the five undefined bytes
-                if latin1_fallback:
-                    out["text"].append(raw.decode("latin-1"))
-                    out["encoding"].append("latin-1")
-                else:
-                    out["text"].append(None)
-                    out["encoding"].append(None)
-            yield pd.DataFrame(out)
+    def strict(raw, got):
+        """``(text, name)`` when the resolved ``(codec, name)`` decodes
+        strictly, else None: a lying source falls through, never
+        rejects."""
+        if got is not None:
+            try:
+                return raw.decode(got[0]), got[1]
+            except UnicodeDecodeError:
+                pass
+        return None
 
-    return narrow.mapInPandas(decode, schema=DECODED_TEXT_SCHEMA)
+    def decode(mid, raw, hint=None):
+        if raw is None:
+            yield (mid, None, None, None, None)
+            return
+        for bom, codec in _BOMS:
+            if raw.startswith(bom):
+                try:
+                    text = raw[len(bom):].decode(codec)
+                except UnicodeDecodeError:
+                    text, codec = None, None
+                yield (mid, text, codec, True, len(raw))
+                return
+        text, encoding = (
+            strict(raw, resolve(hint, aliases))
+            or (meta_sniff and strict(raw, sniff(raw, aliases)))
+            or strict(raw, ("utf-8", "utf-8"))
+            # windows-1252 leaves five bytes undefined: those fall through
+            or (cp1252_fallback and strict(raw, ("cp1252", "windows-1252")))
+            or ((raw.decode("latin-1"), "latin-1") if latin1_fallback
+                else (None, None))
+        )
+        yield (mid, text, encoding, False, len(raw))
+
+    cols = ["media_id", "content"] + ([hint_col] if hint_col else [])
+    return map_rows(media, cols, DECODED_TEXT_SCHEMA, decode)
 
 
 DHASH_SCHEMA = (
@@ -2358,7 +2180,7 @@ def dhash_images(media: DataFrame, codec=None) -> DataFrame:
     Images smaller than the 9x8 grid (an empty pooling block) and
     undecodable payloads yield NULL ``dhash_bands`` — honest reject;
     size/format columns still report what the header said when it
-    parsed.  Arrow-batched ``mapInPandas``: embarrassingly parallel,
+    parsed.  Arrow-batched ``mapInArrow``: embarrassingly parallel,
     no shuffle, the decode fused with the hash (no raster ever leaves
     the worker).  Reference: the classic dHash construction
     (Krawetz, "Kind of Like That", 2013); the reference repo (a WOE
@@ -2368,60 +2190,41 @@ def dhash_images(media: DataFrame, codec=None) -> DataFrame:
     band_bits = int(_DHASH_BAND_BITS)
     n_bands = 64 // band_bits
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": pdf["media_id"],
-                "fmt": [], "width": [], "height": [], "dhash_bands": [],
-            }
-            for b in pdf["content"]:
-                parsed, fmt = (
-                    _decode_raster(bytes(b), codec)
-                    if b is not None else (None, None)
-                )
-                if parsed is None:
-                    out["fmt"].append(None)
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["dhash_bands"].append(None)
-                    continue
-                w, h, px = parsed[:3]
-                out["fmt"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-                if w < 9 or h < 8:
-                    out["dhash_bands"].append(None)  # grid underflows
-                    continue
-                gray = (
-                    np.frombuffer(px, dtype=np.uint8)
-                    .reshape(h, w, 3)
-                    .sum(axis=2, dtype=np.int64)
-                )
-                xe = [(c * w) // 9 for c in range(10)]
-                ye = [(r * h) // 8 for r in range(9)]
-                sums = np.empty((8, 9), dtype=np.int64)
-                cnts = np.empty((8, 9), dtype=np.int64)
-                for r in range(8):
-                    for c in range(9):
-                        blk = gray[ye[r]:ye[r + 1], xe[c]:xe[c + 1]]
-                        sums[r, c] = blk.sum()
-                        cnts[r, c] = blk.size
-                bands = [0] * n_bands
-                for r in range(8):
-                    for c in range(8):
-                        # mean(right) > mean(left), division-free
-                        if (
-                            sums[r, c + 1] * cnts[r, c]
-                            > sums[r, c] * cnts[r, c + 1]
-                        ):
-                            k = r * 8 + c
-                            bands[k // band_bits] |= 1 << (k % band_bits)
-                out["dhash_bands"].append(bands)
-            yield pd.DataFrame(out)
+    def kernel(mid, b):
+        parsed, fmt = (
+            _decode_raster(b, codec) if b is not None else (None, None)
+        )
+        if parsed is None:
+            yield (mid, None, None, None, None)
+            return
+        w, h, px = parsed[:3]
+        if w < 9 or h < 8:
+            yield (mid, fmt, w, h, None)  # grid underflows
+            return
+        gray = (
+            np.frombuffer(px, dtype=np.uint8)
+            .reshape(h, w, 3)
+            .sum(axis=2, dtype=np.int64)
+        )
+        xe = [(c * w) // 9 for c in range(10)]
+        ye = [(r * h) // 8 for r in range(9)]
+        sums = np.empty((8, 9), dtype=np.int64)
+        cnts = np.empty((8, 9), dtype=np.int64)
+        for r in range(8):
+            for c in range(9):
+                blk = gray[ye[r]:ye[r + 1], xe[c]:xe[c + 1]]
+                sums[r, c] = blk.sum()
+                cnts[r, c] = blk.size
+        bands = [0] * n_bands
+        for r in range(8):
+            for c in range(8):
+                # mean(right) > mean(left), division-free
+                if sums[r, c + 1] * cnts[r, c] > sums[r, c] * cnts[r, c + 1]:
+                    k = r * 8 + c
+                    bands[k // band_bits] |= 1 << (k % band_bits)
+        yield (mid, fmt, w, h, bands)
 
-    return media.select("media_id", "content").mapInPandas(
-        kernel, schema=DHASH_SCHEMA
-    )
+    return map_rows(media, ["media_id", "content"], DHASH_SCHEMA, kernel)
 
 
 AHASH_SCHEMA = (
@@ -2450,7 +2253,7 @@ def ahash_audio(media: DataFrame) -> DataFrame:
 
     Payloads that fail to decode, or carry fewer samples than the 65
     windows, honest-reject to NULL bands (``fmt``/``n_samples`` still
-    report what parsed).  Arrow-batched ``mapInPandas``, embarrassingly
+    report what parsed).  Arrow-batched ``mapInArrow``, embarrassingly
     parallel, no shuffle.  Stereo hashes channel 0 (near-duplicate
     stereo recordings match channel-wise); compressed codecs need the
     ``decode_audio`` codec= route and are rejected here."""
@@ -2458,68 +2261,38 @@ def ahash_audio(media: DataFrame) -> DataFrame:
     n_bands = 64 // band_bits
     n_win = int(_AHASH_WINDOWS)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": pdf["media_id"],
-                "fmt": [], "n_samples": [], "ahash_bands": [],
-            }
-            for b in pdf["content"]:
-                fmt = None
-                samples = None
-                if b is not None:
-                    raw = bytes(b)
-                    try:
-                        got = _parse_wav_arr(raw)
-                    except (MemoryError, ImportError):
-                        raise
-                    except Exception:
-                        got = None
-                    if got is not None:
-                        fmt = "wav"
-                        samples = [int(v) for v in got[2][:, 0]]
-                    else:
-                        try:
-                            gf = _parse_flac(raw, keep_samples=True)
-                        except (MemoryError, ImportError):
-                            raise
-                        except Exception:
-                            gf = None
-                        if gf is not None:
-                            fmt = "flac"
-                            samples = gf[4]
-                if samples is None:
-                    out["fmt"].append(fmt)
-                    out["n_samples"].append(None)
-                    out["ahash_bands"].append(None)
-                    continue
-                n = len(samples)
-                out["fmt"].append(fmt)
-                out["n_samples"].append(n)
-                if n < n_win:
-                    out["ahash_bands"].append(None)  # grid underflows
-                    continue
-                edges = [(k * n) // n_win for k in range(n_win + 1)]
-                # python ints: FLAC samples reach 32 bits, squares 2^64 —
-                # arbitrary precision keeps the comparison exact
-                energies = [
-                    sum(v * v for v in samples[edges[k]:edges[k + 1]])
-                    for k in range(n_win)
-                ]
-                cnts = [edges[k + 1] - edges[k] for k in range(n_win)]
-                bands = [0] * n_bands
-                for k in range(64):
-                    if (
-                        energies[k + 1] * cnts[k]
-                        > energies[k] * cnts[k + 1]
-                    ):
-                        bands[k // band_bits] |= 1 << (k % band_bits)
-                out["ahash_bands"].append(bands)
-            yield pd.DataFrame(out)
+    def kernel(mid, b):
+        fmt = samples = None
+        if b is not None:
+            got = _tolerant(_parse_wav_arr, b)
+            if got is not None:
+                fmt, samples = "wav", [int(v) for v in got[2][:, 0]]
+            else:
+                gf = _tolerant(_parse_flac, b, keep_samples=True)
+                if gf is not None:
+                    fmt, samples = "flac", gf[4]
+        if samples is None:
+            yield (mid, fmt, None, None)
+            return
+        n = len(samples)
+        if n < n_win:
+            yield (mid, fmt, n, None)  # grid underflows
+            return
+        edges = [(k * n) // n_win for k in range(n_win + 1)]
+        # python ints: FLAC samples reach 32 bits, squares 2^64 —
+        # arbitrary precision keeps the comparison exact
+        energies = [
+            sum(v * v for v in samples[edges[k]:edges[k + 1]])
+            for k in range(n_win)
+        ]
+        cnts = [edges[k + 1] - edges[k] for k in range(n_win)]
+        bands = [0] * n_bands
+        for k in range(64):
+            if energies[k + 1] * cnts[k] > energies[k] * cnts[k + 1]:
+                bands[k // band_bits] |= 1 << (k % band_bits)
+        yield (mid, fmt, n, bands)
 
-    return media.select("media_id", "content").mapInPandas(
-        kernel, schema=AHASH_SCHEMA
-    )
+    return map_rows(media, ["media_id", "content"], AHASH_SCHEMA, kernel)
 
 
 FEATURES_SCHEMA = "media_id bigint, feature array<double>"

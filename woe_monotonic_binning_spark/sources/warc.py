@@ -13,11 +13,11 @@ Spark-first, completing the crawl front-chain entirely in-engine::
 
 - :func:`read_warc` — ``binaryFile`` scan (one task per WARC file; like
   tar shards, the format ships as many ~1 GB files, so file count IS
-  the parallelism) + a pure-stdlib record walk in Arrow-batched
-  ``mapInPandas``.  Handles plain and gzip WARCs — including the
-  member-per-record gzip framing CommonCrawl uses (stdlib ``gzip``
-  reads concatenated members).  Works unchanged as a Structured
-  Streaming source.
+  the parallelism) + a pure-stdlib record walk on the shared Arrow row
+  runner (``_rows.map_rows``, one ``mapInArrow``).  Handles plain and
+  gzip WARCs — including the member-per-record gzip framing CommonCrawl
+  uses (stdlib ``gzip`` reads concatenated members).  Works unchanged
+  as a Structured Streaming source.
 - :func:`explode_warc_column` — the same record walk over an in-plan
   BINARY COLUMN (one blob per row): the certification surface (the
   oracle can predict records of a JVM-built blob) and the escape hatch
@@ -60,11 +60,10 @@ from __future__ import annotations
 import gzip
 import io
 import zlib
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from .._rows import map_rows
 
 __all__ = [
     "WARC_RECORD_SCHEMA",
@@ -212,46 +211,27 @@ def _decode_http_body(
 
 
 def _explode_kernel(http_payload: bool):
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "shard": [], "record_idx": [], "warc_type": [],
-                "target_uri": [], "http_status": [],
-                "http_content_type": [], "http_transfer_encoding": [],
-                "http_content_encoding": [], "content": [], "n_bytes": [],
-            }
-            for shard, blob in zip(pdf["shard"], pdf["content"]):
-                if blob is None:
-                    continue
-                for idx, (hdrs, block) in enumerate(
-                    _iter_warc_records(bytes(blob))
-                ):
-                    wtype = hdrs.get("warc-type")
-                    status = ctype = te = ce = None
-                    body: bytes | None = block
-                    if http_payload and wtype == "response":
-                        status, http_hdrs, body = _split_http(block)
-                        if http_hdrs is not None:
-                            ctype = http_hdrs.get("content-type")
-                            te = http_hdrs.get("transfer-encoding")
-                            ce = http_hdrs.get("content-encoding")
-                            te = te.lower() if te is not None else None
-                            ce = ce.lower() if ce is not None else None
-                            if te is not None or ce is not None:
-                                body = _decode_http_body(body, te, ce)
-                    out["shard"].append(shard)
-                    out["record_idx"].append(idx)
-                    out["warc_type"].append(wtype)
-                    out["target_uri"].append(hdrs.get("warc-target-uri"))
-                    out["http_status"].append(status)
-                    out["http_content_type"].append(ctype)
-                    out["http_transfer_encoding"].append(te)
-                    out["http_content_encoding"].append(ce)
-                    out["content"].append(body)
-                    out["n_bytes"].append(
-                        len(body) if body is not None else None
-                    )
-            yield pd.DataFrame(out)
+    def explode(shard, blob):
+        if blob is None:
+            return
+        for idx, (hdrs, block) in enumerate(_iter_warc_records(blob)):
+            wtype = hdrs.get("warc-type")
+            status = ctype = te = ce = None
+            body: bytes | None = block
+            if http_payload and wtype == "response":
+                status, http_hdrs, body = _split_http(block)
+                if http_hdrs is not None:
+                    ctype = http_hdrs.get("content-type")
+                    te = http_hdrs.get("transfer-encoding")
+                    ce = http_hdrs.get("content-encoding")
+                    te = te.lower() if te is not None else None
+                    ce = ce.lower() if ce is not None else None
+                    if te is not None or ce is not None:
+                        body = _decode_http_body(body, te, ce)
+            yield (
+                shard, idx, wtype, hdrs.get("warc-target-uri"), status,
+                ctype, te, ce, body, len(body) if body is not None else None,
+            )
 
     return explode
 
@@ -278,8 +258,9 @@ def read_warc(
         .load(path)
         .select(F.col("path").alias("shard"), "content")
     )
-    return files.mapInPandas(
-        _explode_kernel(http_payload), schema=WARC_RECORD_SCHEMA
+    return map_rows(
+        files, ["shard", "content"], WARC_RECORD_SCHEMA,
+        _explode_kernel(http_payload),
     )
 
 
@@ -294,10 +275,10 @@ def explode_warc_column(
     ``shard``.  Same kernel as :func:`read_warc` — certified through
     the q_dedup_lines 'warc' section, which :func:`read_warc` shares
     everything with except the binaryFile scan."""
-    narrow = df.select(
+    cols = [
         F.col(id_col).cast("string").alias("shard"),
         F.col(blob_col).alias("content"),
-    )
-    return narrow.mapInPandas(
-        _explode_kernel(http_payload), schema=WARC_RECORD_SCHEMA
+    ]
+    return map_rows(
+        df, cols, WARC_RECORD_SCHEMA, _explode_kernel(http_payload)
     )

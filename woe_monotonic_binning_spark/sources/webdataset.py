@@ -11,7 +11,8 @@ it onto Spark's execution model:
 - :func:`read_tar_shards` — ``binaryFile`` scan (one task per shard:
   tar is not splittable, but the format's whole design is many
   modest shards, so shard count IS the parallelism) + a stdlib
-  ``tarfile`` walk in Arrow-batched ``mapInPandas``.  One output row
+  ``tarfile`` walk on the shared Arrow row runner (``_rows.map_rows``,
+  one ``mapInArrow``).  One output row
   per member: (shard, sample_key, ext, content, n_bytes).  Works
   unchanged under ``spark.readStream`` (binaryFile is a streaming
   source) — new shards landing in a bucket flow through the same
@@ -39,11 +40,12 @@ from __future__ import annotations
 import io
 import os
 import tarfile
-from collections.abc import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from .._rows import map_rows
 
 __all__ = [
     "TAR_MEMBER_SCHEMA",
@@ -99,25 +101,16 @@ def read_tar_shards(
         .select(F.col("path").alias("shard"), "content")
     )
 
-    def untar(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"shard": [], "sample_key": [], "ext": [],
-                   "content": [], "n_bytes": []}
-            for shard, blob in zip(pdf["shard"], pdf["content"]):
-                with tarfile.open(fileobj=io.BytesIO(bytes(blob))) as tf:
-                    for m in tf:
-                        if not m.isfile():
-                            continue
-                        body = tf.extractfile(m).read()
-                        key, ext = _split_member_name(m.name)
-                        out["shard"].append(shard)
-                        out["sample_key"].append(key)
-                        out["ext"].append(ext)
-                        out["content"].append(body)
-                        out["n_bytes"].append(len(body))
-            yield pd.DataFrame(out)
+    def untar(shard, blob):
+        with tarfile.open(fileobj=io.BytesIO(bytes(blob))) as tf:
+            for m in tf:
+                if not m.isfile():
+                    continue
+                body = tf.extractfile(m).read()
+                key, ext = _split_member_name(m.name)
+                yield shard, key, ext, body, len(body)
 
-    return files.mapInPandas(untar, schema=TAR_MEMBER_SCHEMA)
+    return map_rows(files, ["shard", "content"], TAR_MEMBER_SCHEMA, untar)
 
 
 def assemble_samples(members: DataFrame) -> DataFrame:
