@@ -1345,10 +1345,34 @@ def test_synthetic_flac_lpc_media_certifies_decoder(spark):
         assert r.fmt is None and r.sum_pcm is None
 
 
+def _wav_bytes(rate: int) -> bytes:
+    """A mono 16-bit PCM WAV of four samples whose fmt chunk declares
+    ``rate`` (any uint32, so malformed headers are easy to build)."""
+    import struct
+
+    data = struct.pack("<4h", 5, -2, 7, 10)
+    fmt = struct.pack("<HHIIHH", 1, 1, rate, (2 * rate) & 0xFFFFFFFF, 2, 16)
+    return (
+        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
+        + b"fmt " + struct.pack("<I", 16) + fmt
+        + b"data" + struct.pack("<I", len(data)) + data
+    )
+
+
+def _box(btype: bytes, body: bytes) -> bytes:
+    """One ISO BMFF box with a 32-bit size."""
+    import struct
+
+    return struct.pack(">I", 8 + len(body)) + btype + body
+
+
 def test_probe_media_all_containers(spark):
     """probe_media (round 14): header-only container identification +
     metadata across every fixture family, plus rejects (garbage, NULL,
-    truncated MP4, SOS-before-SOF JPEG) to the NULL-container row."""
+    truncated MP4, SOS-before-SOF JPEG, header values past their output
+    columns) to the NULL-container row."""
+    import struct
+
     from woe_monotonic_binning_spark.operators.multimodal import probe_media
     from tests.media_fixtures import (
         synthetic_avi_media,
@@ -1397,6 +1421,25 @@ def test_probe_media_all_containers(spark):
     # NULL metadata (honest partial probe)
     assert rows[2].container == "mp4" and rows[2].duration_ms is None
     assert rows[3].container is None
+    # header values past their int/bigint columns reject the row and
+    # leave the job running
+    mvhd = b"\x01" + bytes(19) + struct.pack(">IQ", 1, 2**64 - 1)
+    moov = _box(b"moov", _box(b"mvhd", mvhd))
+    overflow = [
+        _wav_bytes(0xFFFFFFFF),
+        b"BM" + bytes(16) + struct.pack("<ii", -(2**31), 2) + bytes(8),
+        b"\x89PNG\r\n\x1a\n\x00\x00\x00\rIHDR" + struct.pack(">II", 2**31, 1),
+        b"P6 12345678901 2 255\n" + bytes(6),
+        _box(b"ftyp", b"isom" + bytes(4)) + moov,
+    ]
+    odd = spark.createDataFrame(
+        [(i, "media", bytearray(b)) for i, b in enumerate(overflow)],
+        "media_id long, kind string, content binary",
+    )
+    for r in probe_media(odd).collect():
+        assert r.container is None and r.width is None, r
+        assert r.sample_rate is None and r.duration_ms is None, r
+        assert r.n_bytes == len(overflow[r.media_id])
 
 
 def test_jpeg_fill_bytes_tolerated_by_both_walks(spark):
@@ -3391,6 +3434,28 @@ def test_decode_codec_malformed_returns_reject_rows_not_job(spark):
     for mid in (0, 1, 2):
         assert rows[mid].fmt is None and rows[mid].sum_pcm is None
 
+    # counts and sums past their int/bigint columns are malformed too:
+    # the row rejects, the job runs on (the codec's and the WAV parser's)
+    def huge_codec(raw):
+        tag = raw[:1]
+        if tag == b"R":
+            return ("mp3", 1, 2**31, 4, [10])
+        if tag == b"N":
+            return ("mp3", 1, 8000, 2**31, [10])  # ~74 h at 8 kHz
+        if tag == b"S":
+            return ("mp3", 1, 8000, 4, [2**63])
+        return None
+
+    huge = spark.createDataFrame(
+        [(i, "audio", bytearray(t)) for i, t in
+         enumerate([b"R", b"N", b"S", _wav_bytes(0xFFFFFFFF), _wav_bytes(8000)])],
+        "media_id long, kind string, content binary",
+    ).coalesce(1)
+    rows = {r.media_id: r for r in decode_audio(huge, codec=huge_codec).collect()}
+    for mid in (0, 1, 2, 3):
+        assert rows[mid].fmt is None and rows[mid].sample_rate is None, mid
+    assert (rows[4].fmt, rows[4].sample_rate, rows[4].sum_pcm) == ("wav", 8000, 20)
+
 
 _ROW_KERNELS = (
     "decode_image", "decode_audio", "resize_image", "probe_media",
@@ -3453,6 +3518,19 @@ def _row_kernel_output(spark, tmp_path, kernel):
     if kernel == "resize_image":
         return mm.resize_image(media, 3, 2)
     return getattr(mm, kernel)(media)
+
+
+def test_map_rows_arity_mismatch_is_loud(spark):
+    """A kernel tuple with one value too many or too few fails the task
+    instead of being cut to the schema."""
+    from woe_monotonic_binning_spark._rows import map_rows
+
+    df = spark.range(3)
+    for extra in ((), (1, 2)):
+        out = map_rows(df, ["id"], "id bigint, x int",
+                       lambda i, extra=extra: iter([(i, *extra)]))
+        with pytest.raises(Exception, match="zip"):
+            out.collect()
 
 
 @pytest.mark.parametrize("kernel", _ROW_KERNELS)

@@ -469,10 +469,11 @@ def test_tar_shards_feed_multimodal_and_stream(spark, tmp_path):
 # -- round 16: WARC (CommonCrawl wire format) ---------------------------------
 
 
-def _warc_record(uri, ctype, body, wtype="response", http_extra=""):
+def _warc_record(uri, ctype, body, wtype="response", http_extra="",
+                 status="200"):
     if wtype == "response":
         block = (
-            f"HTTP/1.1 200 OK\r\nContent-Type: {ctype}\r\n{http_extra}\r\n"
+            f"HTTP/1.1 {status} OK\r\nContent-Type: {ctype}\r\n{http_extra}\r\n"
         ).encode() + body
     else:
         block = body
@@ -658,6 +659,16 @@ def test_warc_undecodable_bodies_honest_reject(spark):
     ).collect()[0]
     assert bytes(row.content) == payload
     assert row.http_content_encoding == "identity"
+    # a status that is not three digits is unparseable: NULL status, the
+    # record itself kept (10 digits would not even fit the int column)
+    odd = [_warc_record(f"http://b/{i}", "text/plain", payload, status=st)
+           for i, st in enumerate(("99999999999", "20", "204"))]
+    rows = explode_warc_column(
+        spark.createDataFrame([(0, bytearray(b"".join(odd)))],
+                              "doc_id long, content binary")
+    ).orderBy("record_idx").collect()
+    assert [r.http_status for r in rows] == [None, None, 204]
+    assert all(bytes(r.content) == payload for r in rows)
 
 
 def test_warc_feeds_full_crawl_chain(spark, tmp_path):

@@ -19,27 +19,45 @@ def map_rows(df: DataFrame, cols, schema: str, row_fn) -> DataFrame:
     ``row_fn(*values)`` once per row inside one Arrow-batched
     ``mapInArrow``; every tuple ``row_fn`` yields becomes one output row
     typed by the DDL ``schema`` (0..n rows per input row).  Output is
-    flushed once per input batch, so a task holds at most one batch of
-    inputs and their rows; ``spark.sql.execution.arrow.maxRecordsPerBatch``
-    sizes it.  ``row_fn`` ships to the workers inside the closure, so it
-    must be picklable there."""
+    flushed every ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows
+    and at the end of each input batch, so a task holds at most one
+    input batch and one batch of output rows, even when one input row
+    explodes into many (an archive walk).  A tuple of the wrong arity,
+    or a value that does not fit its column, fails the task loudly: the
+    kernels turn malformed payloads into honest-reject rows first.
+    ``row_fn`` ships to the workers inside the closure, so it must be
+    picklable there."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import DataType
 
+    batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     arrow_schema = to_arrow_schema(DataType.fromDDL(schema))
+    session_cap = df.sparkSession.conf.get(batch_key)
+
+    def to_batch(rows):
+        columns = zip(*rows, strict=True)
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c, type=f.type)
+             for c, f in zip(columns, arrow_schema, strict=True)],
+            schema=arrow_schema,
+        )
 
     def run(batches):
+        from pyspark import TaskContext
+
+        # a SQL conf set on the session reaches the task as a local
+        # property of the running query; unset, the default read above
+        cap = int(TaskContext.get().getLocalProperty(batch_key) or session_cap)
         for batch in batches:
-            rows = [
-                out
-                for values in zip(*(c.to_pylist() for c in batch.columns))
-                for out in row_fn(*values)
-            ]
-            columns = list(zip(*rows)) or [()] * len(arrow_schema)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
-                schema=arrow_schema,
-            )
+            rows = []
+            for values in zip(*(c.to_pylist() for c in batch.columns)):
+                for out in row_fn(*values):
+                    rows.append(out)
+                    if len(rows) == cap:  # cap <= 0: no limit, as in Spark
+                        yield to_batch(rows)
+                        rows = []
+            if rows:
+                yield to_batch(rows)
 
     return df.select(*cols).mapInArrow(run, schema)

@@ -968,6 +968,7 @@ def _decode_raster(raw: bytes, codec=None):
                     int(w_) > 0
                     and int(h_) > 0
                     and len(px_) == 3 * int(w_) * int(h_)
+                    and _fits(32, int(w_) * int(h_))  # n_pixels int
                 ):
                     fmt = str(fmt_)
                     parsed = (int(w_), int(h_), px_)
@@ -1000,6 +1001,16 @@ def _tolerant(parse, *args, **kw):
         raise
     except Exception:
         return None
+
+
+def _fits(bits: int, *vals) -> bool:
+    """True when every non-NULL value in ``vals`` fits a signed
+    ``bits``-bit output column.  A header field past its column's range
+    (a WAV rate of 0xFFFFFFFF, a BMP width of -2**31) marks a malformed
+    payload: the kernels take the honest-reject row for it, because
+    emitting the value would fail the whole Arrow batch."""
+    lim = 1 << (bits - 1)
+    return all(v is None or -lim <= v < lim for v in vals)
 
 
 def _rgb_stats(parsed) -> tuple[int, int, int, int, int, int]:
@@ -1128,7 +1139,9 @@ def _parse_wav_arr(b: bytes):
             data = body
             break
         i += 8 + ln + (ln & 1)  # RIFF chunks are word-aligned
-    if nch is None or data is None or bits != 16 or nch not in (1, 2) or rate <= 0:
+    if nch is None or data is None or bits != 16 or nch not in (1, 2):
+        return None
+    if not 0 < rate < 2**31:  # must fit the sample_rate int column
         return None
     n_samples = len(data) // 2
     if n_samples % nch != 0:
@@ -1471,10 +1484,10 @@ def _decode_pcm(raw: bytes, codec=None):
     caller's ``codec`` hook first, validated INSIDE the try (round-12
     review: a codec reporting rate<=0 on a malformed header — a common
     decoder-wrapper convention — would otherwise reach the duration
-    division and kill the stage; wrong-arity tuples, nch<1 and a sums
-    sequence shorter than the channel count reject the row the same
-    way), then the built-in WAV and FLAC parsers, each through the
-    ``_tolerant`` crash downgrade.  Returns ``(parsed, fmt)`` where
+    division and kill the stage; wrong-arity tuples, nch<1, a sums
+    sequence shorter than the channel count, and counts or sums past
+    their output columns reject the row the same way), then the built-in
+    WAV and FLAC parsers, each through the ``_tolerant`` crash downgrade.  Returns ``(parsed, fmt)`` where
     ``parsed`` is ``(n_channels, sample_rate, n_frames, sums)``, or
     ``(None, None)``."""
     parsed, fmt = None, None
@@ -1489,6 +1502,8 @@ def _decode_pcm(raw: bytes, codec=None):
                     and int(nch_) >= 1
                     and int(nf_) >= 0
                     and len(sums_) >= min(int(nch_), 2)
+                    and _fits(32, int(nch_), int(rate_), int(nf_))
+                    and _fits(64, *sums_[:2])
                 ):
                     fmt = str(fmt_)
                     parsed = (int(nch_), int(rate_), int(nf_), sums_)
@@ -1721,8 +1736,9 @@ def probe_media(media: DataFrame) -> DataFrame:
     Containers: PNG (IHDR), JPEG (SOF scan via the marker walk), BMP,
     binary PPM, RIFF/WAV (fmt + data), native FLAC (STREAMINFO),
     ISO BMFF MP4/MOV (mvhd + tkhd — round 14), RIFF/AVI (avih — round
-    14).  Unknown/NULL payloads yield a NULL-container row.  The MP4 and
-    AVI probes are certified through the q_multimodal_stats 'probe_mp4'
+    14).  Unknown/NULL payloads, and headers whose values do not fit
+    their output columns, yield a NULL-container row.  The MP4 and AVI
+    probes are certified through the q_multimodal_stats 'probe_mp4'
     / 'probe_avi' sections over JVM-built fixtures (no checksums in
     either container, so the bytes are pure column arithmetic)."""
     import struct
@@ -1801,7 +1817,10 @@ def probe_media(media: DataFrame) -> DataFrame:
         if b is None:
             yield (mid,) + (None,) * 7
             return
-        got = _tolerant(probe_one, b) or (None,) * 6
+        got = _tolerant(probe_one, b)
+        # dims, channels, rate: int columns; duration: bigint
+        if got is None or not (_fits(32, *got[1:5]) and _fits(64, got[5])):
+            got = (None,) * 6
         yield (mid, *got, len(b))
 
     return map_rows(media, ["media_id", "content"], PROBE_SCHEMA, probe)

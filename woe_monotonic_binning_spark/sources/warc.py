@@ -26,7 +26,8 @@ Spark-first, completing the crawl front-chain entirely in-engine::
 - ``http_payload=True`` (default) splits response records' HTTP
   envelope: the body bytes surface in ``content``, the declared
   ``Content-Type`` in ``http_content_type`` (feed it straight to
-  ``decode_text(hint_col=)``), the status code in ``http_status``.
+  ``decode_text(hint_col=)``), the status code in ``http_status``
+  (NULL unless it is three digits).
   Non-response records (request/metadata/warcinfo) pass their block
   through untouched with NULL http columns.
 - **HTTP body decoding** (round 17): real CommonCrawl responses arrive
@@ -136,8 +137,11 @@ def _split_http(block: bytes):
     head = block[:sep]
     status_line = head.split(b"\r\n", 1)[0].split()
     status = None
-    if len(status_line) >= 2 and status_line[1].isdigit():
-        status = int(status_line[1])
+    # a status code is three digits (RFC 9110 §15); anything else is an
+    # unparseable status, not a value for the int column
+    code = status_line[1] if len(status_line) >= 2 else b""
+    if len(code) == 3 and code.isdigit():
+        status = int(code)
     return status, _parse_headers(head), block[sep + 4 :]
 
 
