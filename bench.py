@@ -207,8 +207,10 @@ def _adjudicate(
 # re-run protocol must not burn fresh-JVM samples "resolving" an expected
 # shift.  A query is band-checked only when its action revision matches
 # the prior artifact's (absent = rev 1); the artifact records the revs so
-# the skip is auditable.
-ACTION_REV = {"transform": 2}
+# the skip is auditable.  drift is rev 2 since round 18 moved its body from
+# two scans (expected + actual histograms) to one scan with an
+# `actual_filter`, so the round-17 band timed a different action.
+ACTION_REV = {"transform": 2, "drift": 2}
 
 HEADLINES = [
     "fit_batch",

@@ -1685,7 +1685,7 @@ def test_curate_corpus_tail_params_are_keyword_only(spark):
 
 
 def _chunk_ref(text, chunk_size, overlap, unit):
-    """Independent pure-Python reference for chunk_documents.  Tokenizes
+    r"""Independent pure-Python reference for chunk_documents.  Tokenizes
     on the engine's explicit ASCII class — str.split() would also split
     on Unicode whitespace (NBSP, \u2028, ...) that Java \s does not
     match, making the reference falsely stricter (round-12 review)."""

@@ -744,3 +744,30 @@ def test_byte_kernels_have_no_python_crossing(spark):
     media = media_from_documents(spark.read.parquet(f"{SF}/documents.parquet"))
     assert python_eval_count(byte_stats(media)) == 0
     assert python_eval_count(extract_features(media, dim=16)) == 0
+
+
+def test_warm_curation_compiles_nothing(spark):
+    """A warm curate_corpus call reuses its generated code: get_spark sizes
+    Spark's codegen cache above the ~125 classes one call needs (the
+    100-entry default recompiled ~110 of them on every call).  A handful
+    is allowed: AQE's run-time re-plans (codegen stage ids, unique-key
+    broadcast joins) can still give a few new variants on early calls."""
+    from woe_monotonic_binning_spark import curate_corpus
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2000"
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+
+    def curate():
+        try:
+            out = curate_corpus(docs, near_dup="minhash", near_dup_threshold=0.7)
+            return sorted(map(tuple, out.select("doc_id", "split").collect()))
+        finally:
+            # curate_corpus leaves its survivor caches to the caller; a
+            # cached fragment would change the second call's plans
+            spark.catalog.clearCache()
+
+    first = curate()
+    before = compiles.getCount()
+    assert curate() == first
+    assert compiles.getCount() - before <= 20

@@ -133,7 +133,7 @@ def _quantize_running_sums(batches):
     # factorize variable -> int codes: grouping only, order irrelevant
     # (the prefix sum restarts at every variable boundary either way)
     codes = pa.compute.dictionary_encode(
-        tbl.column("variable").combine_chunks()
+        pa.concat_arrays(tbl.column("variable").chunks)
     ).indices.to_numpy(zero_copy_only=False)
     # NaN here means NULL (melt normalises true NaN to NULL before the
     # summary); np.lexsort places NaN last within each variable group,

@@ -20,6 +20,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """Build the engine's session, or return the one already running.
+
+    ``spark.sql.codegen.cache.maxEntries`` is a static conf: ``getOrCreate``
+    ignores it on an existing session, so if you bring your own session,
+    set it there (e.g. ``--conf spark.sql.codegen.cache.maxEntries=2000``).
+    """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER") or f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -33,6 +39,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # A warm perfbench iteration needs more whole-stage classes
+        # (corpus_curation 138, credit 106) than the default 100-entry cache
+        # keeps, so each one recompiled 128 / 55 of them; at 2000, none.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
