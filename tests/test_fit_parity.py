@@ -92,6 +92,33 @@ def test_degenerate_guard(spark, binning_df):
     assert got.loc[0, "variable"] == "target"
     assert (got.drop(columns="variable").iloc[0] == 0).all()
 
+    # no feature column left to melt: the target alone yields exactly the
+    # degenerate rows, and nothing at all yields an empty bins table (the
+    # reference's batch returns {})
+    only_target = binning_df.select("target")
+    pd.testing.assert_frame_equal(
+        fit_bins(only_target, "target", ["target"]).toPandas(), got
+    )
+    for empty in (
+        fit_bins(binning_df, "target", []),
+        batch_woe_binning(only_target, "target"),
+    ):
+        assert empty.columns == list(BINS_COLUMNS)
+        assert empty.count() == 0
+
+
+@pytest.mark.parametrize("max_distinct", [0, -5])
+def test_max_distinct_below_one_raises(spark, binning_df, max_distinct):
+    """A cap below 1 would snap every value into one bucket, i.e. one bin
+    per variable; every fit entry point rejects it up front."""
+    with pytest.raises(ValueError, match="max_distinct"):
+        fit_bins(binning_df, "target", ["x_mono_up"], max_distinct=max_distinct)
+    with pytest.raises(ValueError, match="max_distinct"):
+        woe_binning(
+            binning_df, "target", "x_mono_up", n_threshold=100,
+            max_distinct=max_distinct,
+        )
+
 
 def test_tpch_lineitem_fit_smoke(spark, sf0001_dir):
     from pyspark.sql import functions as F

@@ -325,10 +325,10 @@ def test_fixture_is_order_sensitive():
 def test_tokenizer_cache_consistency():
     """The executor-side cache kernel returns the same lists as direct
     encoding (cache key is the whole word)."""
-    from woe_monotonic_binning_spark.operators.tokenizer import _encode_arrays
+    from woe_monotonic_binning_spark.operators.tokenizer import _cached
 
     tok = BPETokenizer(train_bpe_from_counts({"abab": 5, "abc": 4}, 6))
-    enc = _encode_arrays(dict(tok.ranks))
+    enc = _cached(tok.encode)
     for w in ("abab", "abc", "abab", "xyz", "abc"):
         assert enc(w) == tok.encode(w)
 

@@ -201,8 +201,21 @@ def quantize_summary(
     construction.  Footprint is the summary itself — sum of distinct
     counts, already a tiny fraction of the raw data (same documented
     pattern as the MinHash posting list).
+
+    Memory bound of the one Python crossing: the step-2 ``mapInArrow``
+    kernel collects its whole range partition of the summary before it
+    sorts, so each Python worker holds about ``summary rows /
+    parallelism`` rows (not one Arrow batch).  ``parallelism=``
+    (default: the session's ``defaultParallelism``) raises the partition
+    count and shrinks that per-task footprint.
+
+    ``max_distinct`` must be at least 1: a cap of 0 or below would snap
+    every value of every variable into one bucket.
     """
     from pyspark.sql.window import Window
+
+    if max_distinct < 1:
+        raise ValueError(f"max_distinct must be >= 1, got {max_distinct}")
 
     spark = summary.sparkSession
     if parallelism is None:
@@ -353,6 +366,16 @@ def fit_bins(
         merge_threshold=merge_threshold,
         sep_value=sep_value,
     )
+    spark = df.sparkSession
+    deg = None
+    if degenerate:
+        deg = spark.createDataFrame(
+            pd.concat([_algo.degenerate_bins(c) for c in degenerate]), schema=BINS_SCHEMA_DDL
+        )
+    if not columns:
+        # an unpivot needs a value column: the degenerate rows alone, or
+        # no bins — the reference's batch returns {} (SURVEY section 3.1)
+        return deg if deg is not None else spark.createDataFrame([], schema=BINS_SCHEMA_DDL)
     long = _melt_features_indexed(df, target, columns)
     summary = summarize(long)
     if max_distinct == "auto":
@@ -362,13 +385,7 @@ def fit_bins(
     bins = summary.groupBy("variable").applyInPandas(
         _fit_udf(params, names=columns), schema=BINS_SCHEMA_DDL
     )
-    if degenerate:
-        spark = df.sparkSession
-        deg = spark.createDataFrame(
-            pd.concat([_algo.degenerate_bins(c) for c in degenerate]), schema=BINS_SCHEMA_DDL
-        )
-        bins = bins.unionByName(deg)
-    return bins
+    return bins if deg is None else bins.unionByName(deg)
 
 
 def woe_binning(

@@ -17,12 +17,14 @@ top of the SAME pre-tokenization:
 - :class:`BPETokenizer` — the learned artifact: an ordered merge list.
   Pure-Python :meth:`~BPETokenizer.encode` (shared by driver, executors
   and the DuckDB oracle twin), JSON ``save``/``load``.
-- :func:`tokenize_bpe` / :func:`bpe_token_count` — distributed apply:
-  pre-tokenization stays a JVM ``regexp_extract_all`` (the single source
-  of truth for the split — no Python regex twin to drift), then an
-  Arrow-batched pandas UDF merges each pre-token with a per-executor
-  cache (Zipf's law makes the hit rate ~1: the merge loop runs per
-  DISTINCT word, not per occurrence).  Output feeds straight into
+- :func:`tokenize_bpe` / :func:`tokenize_ids` / :func:`bpe_token_count`
+  / :func:`unigram_token_count` — ONE distributed apply
+  (:func:`_apply_per_word`): pre-tokenization stays a JVM
+  ``regexp_extract_all`` (the single source of truth for the split — no
+  Python regex twin to drift), then an Arrow-batched pandas UDF runs the
+  tokenizer's per-word method behind a per-executor cache (Zipf's law
+  makes the hit rate ~1: the merge loop runs per DISTINCT word, not per
+  occurrence).  Output feeds straight into
   ``pack_sequences(token_col=...)`` / ``select_to_token_budget`` —
   budget decisions ride learned counts, not the proxy.
 
@@ -44,7 +46,8 @@ tokenizer, this is beyond-reference pipeline surface.
 from __future__ import annotations
 
 import json
-from typing import Iterable, Iterator
+from itertools import chain
+from typing import Callable, Iterable
 
 import pandas as pd
 
@@ -197,6 +200,23 @@ def _gpt2_byte_to_unicode() -> dict[int, str]:
             cs.append(256 + n)
             n += 1
     return dict(zip(bs, map(chr, cs)))
+
+
+# HuggingFace ``tokenizers`` pieces shared by both exports: this module's
+# pre-tokenization as a ``Split`` (invert = regexp_extract_all), and the
+# byte map of a byte-level artifact (pre-tokenizer step and decoder)
+_HF_SPLIT = {
+    "type": "Split",
+    "pattern": {"Regex": _BPE_RE},
+    "behavior": "Removed",
+    "invert": True,
+}
+_HF_BYTE_LEVEL = {
+    "type": "ByteLevel",
+    "add_prefix_space": False,
+    "trim_offsets": False,
+    "use_regex": False,
+}
 
 
 class BPETokenizer:
@@ -384,6 +404,7 @@ class BPETokenizer:
                 vocab[tok] = i
             else:
                 vocab[render(tok)] = i
+        # the specials, then (char-level only) the unk token
         added = [
             {
                 "id": self.token_to_id[s],
@@ -391,16 +412,8 @@ class BPETokenizer:
                 "single_word": False, "lstrip": False, "rstrip": False,
                 "normalized": False, "special": True,
             }
-            for s in self.special_tokens
-        ] + (
-            []
-            if self.byte_level
-            else [{
-                "id": self.unk_id, "content": "<unk>",
-                "single_word": False, "lstrip": False, "rstrip": False,
-                "normalized": False, "special": True,
-            }]
-        )
+            for s in self.special_tokens + (() if self.byte_level else ("<unk>",))
+        ]
         doc = {
             "version": "1.0",
             "truncation": None,
@@ -416,33 +429,10 @@ class BPETokenizer:
             # split, add_prefix_space=False leaves the bytes untouched)
             "pre_tokenizer": {
                 "type": "Sequence",
-                "pretokenizers": [
-                    {
-                        "type": "Split",
-                        "pattern": {"Regex": _BPE_RE},
-                        "behavior": "Removed",
-                        "invert": True,
-                    },
-                    {
-                        "type": "ByteLevel",
-                        "add_prefix_space": False,
-                        "trim_offsets": False,
-                        "use_regex": False,
-                    },
-                ],
-            } if self.byte_level else {
-                "type": "Split",
-                "pattern": {"Regex": _BPE_RE},
-                "behavior": "Removed",
-                "invert": True,
-            },
+                "pretokenizers": [_HF_SPLIT, _HF_BYTE_LEVEL],
+            } if self.byte_level else _HF_SPLIT,
             "post_processor": None,
-            "decoder": {
-                "type": "ByteLevel",
-                "add_prefix_space": False,
-                "trim_offsets": False,
-                "use_regex": False,
-            } if self.byte_level else None,
+            "decoder": _HF_BYTE_LEVEL if self.byte_level else None,
             "model": {
                 "type": "BPE",
                 "dropout": None,
@@ -486,6 +476,71 @@ def pretokens(text: Column) -> Column:
     return F.regexp_extract_all(text, F.lit(_BPE_RE), F.lit(0))
 
 
+def _word_type_counts(
+    df: DataFrame, text_col: str, max_word_types: int, min_count: int
+) -> dict[str, int]:
+    """The trainers' one distributed pass: explode pre-tokens, count by
+    word (map-side partial aggregation), drop types below ``min_count``
+    and keep the top ``max_word_types`` by (count desc, word) — a
+    deterministic cut, run as TakeOrderedAndProject (no global sort)."""
+    counts = (
+        df.select(F.explode(pretokens(F.col(text_col))).alias("word"))
+        .groupBy("word")
+        .count()
+    )
+    if min_count > 1:
+        counts = counts.where(F.col("count") >= min_count)
+    rows = (
+        counts.orderBy(F.col("count").desc(), F.col("word"))
+        .limit(int(max_word_types))
+        .collect()
+    )
+    return {r["word"]: r["count"] for r in rows}
+
+
+def _cached(word_fn: Callable[[str], object]) -> Callable[[str], object]:
+    """``word_fn`` behind a word cache of at most 2,000,000 entries (then
+    cleared).  Built once on the driver and pickled with the UDF, so each
+    worker process keeps it across Arrow batches and reused tasks; keyed
+    on the original word, so a byte-level proxy also pays once per type."""
+    cache: dict[str, object] = {}
+
+    def cached(word: str):
+        got = cache.get(word)
+        if got is None:
+            got = cache[word] = word_fn(word)
+            if len(cache) > 2_000_000:
+                cache.clear()
+        return got
+
+    return cached
+
+
+def _concat(parts: Iterable[list]) -> list:
+    return list(chain.from_iterable(parts))
+
+
+def _apply_per_word(
+    df: DataFrame,
+    text_col: str,
+    out_col: str,
+    ddl: str,
+    word_fn: Callable[[str], object],
+    fold: Callable[[Iterable[object]], object],
+) -> DataFrame:
+    """The one learned-tokenizer apply: JVM :func:`pretokens`, then one
+    Arrow-batched pandas UDF that maps each document's pre-tokens through
+    the cached ``word_fn`` and ``fold``-s the per-word results into the
+    ``ddl``-typed ``out_col`` value.  NULL text -> NULL."""
+    enc = _cached(word_fn)
+
+    @F.pandas_udf(ddl)
+    def per_word(words: pd.Series) -> pd.Series:
+        return words.map(lambda ws: None if ws is None else fold(map(enc, ws)))
+
+    return df.withColumn(out_col, per_word(pretokens(F.col(text_col))))
+
+
 def train_bpe(
     df: DataFrame,
     text_col: str = "text",
@@ -496,13 +551,10 @@ def train_bpe(
     vocab_size: int | None = None,
     special_tokens: tuple[str, ...] = (),
 ) -> BPETokenizer:
-    """Train on a corpus DataFrame.  Distributed part: explode pre-tokens,
-    count by word (map-side partial aggregation — the shuffle moves
-    word-type partials, not occurrences), keep the ``max_word_types``
-    most frequent types (ties to the lexicographically smaller word, so
-    the cut — and therefore the learned merges — is deterministic), which
-    Spark executes as TakeOrderedAndProject (per-partition top-k, no
-    global sort materialization).  Driver part: the classic merge loop
+    """Train on a corpus DataFrame.  Distributed part: the bounded,
+    deterministic word-type count of :func:`_word_type_counts` (top
+    ``max_word_types`` types by count, ties to the smaller word, so the
+    learned merges are deterministic).  Driver part: the classic merge loop
     over the collected (word, count) table — bounded by
     ``max_word_types`` regardless of corpus size.  The frequency cut is
     the standard trainer posture (rare types contribute no pair worth
@@ -518,26 +570,15 @@ def train_bpe(
     training may stop earlier when no pair repeats, so ``vocab_size``
     is a ceiling, not a promise.  ``special_tokens`` reserve the lowest
     ids (see :class:`BPETokenizer`)."""
-    counts = (
-        df.select(F.explode(pretokens(F.col(text_col))).alias("word"))
-        .groupBy("word")
-        .count()
-    )
-    if min_count > 1:
-        counts = counts.where(F.col("count") >= min_count)
-    rows = (
-        counts.orderBy(F.col("count").desc(), F.col("word"))
-        .limit(int(max_word_types))
-        .collect()
-    )
+    wc = _word_type_counts(df, text_col, max_word_types, min_count)
     if byte_level:
-        wc: dict[str, int] = {}
-        for r in rows:
-            p = _byte_proxy(r["word"])
-            wc[p] = wc.get(p, 0) + r["count"]
+        proxied: dict[str, int] = {}
+        for w, n in wc.items():
+            p = _byte_proxy(w)
+            proxied[p] = proxied.get(p, 0) + n
+        wc = proxied
         alphabet = None
     else:
-        wc = {r["word"]: r["count"] for r in rows}
         alphabet = sorted({c for w in wc for c in w})
     if vocab_size is not None:
         base = 256 if byte_level else len(alphabet) + 1
@@ -556,26 +597,6 @@ def train_bpe(
     )
 
 
-def _encode_arrays(
-    ranks: dict[tuple[str, str], int], byte_level: bool = False
-) -> "callable":
-    """Kernel factory: array<string> pre-tokens -> list of per-word token
-    LISTS, with a per-executor-process cache over distinct words (keyed
-    on the ORIGINAL word, so the byte proxy also pays once per type)."""
-    cache: dict[str, list[str]] = {}
-
-    def enc(word: str) -> list[str]:
-        got = cache.get(word)
-        if got is None:
-            w = _byte_proxy(word) if byte_level else word
-            got = cache[word] = encode_word(w, ranks)
-            if len(cache) > 2_000_000:  # bound executor memory, keep hot set
-                cache.clear()
-        return got
-
-    return enc
-
-
 def tokenize_bpe(
     df: DataFrame,
     tokenizer: BPETokenizer,
@@ -587,26 +608,9 @@ def tokenize_bpe(
     UDF with a distinct-word cache (Zipf => the merge loop runs roughly
     once per word TYPE per executor, not per occurrence).  NULL text ->
     NULL tokens."""
-    ranks = dict(tokenizer.ranks)  # plain dict: small, pickles cheaply
-    # the cache closure is built ONCE on the driver and pickled with the
-    # UDF, so each executor worker process keeps it across Arrow batches
-    # (and across tasks under worker reuse) — per-batch caches would
-    # re-encode the hot vocabulary every few thousand rows
-    enc = _encode_arrays(ranks, tokenizer.byte_level)
-
-    @F.pandas_udf("array<string>")
-    def apply_merges(words: pd.Series) -> pd.Series:
-        def one(ws):
-            if ws is None:
-                return None
-            out: list[str] = []
-            for w in ws:
-                out.extend(enc(w))
-            return out
-
-        return words.map(one)
-
-    return df.withColumn(out_col, apply_merges(pretokens(F.col(text_col))))
+    return _apply_per_word(
+        df, text_col, out_col, "array<string>", tokenizer.encode, _concat
+    )
 
 
 def tokenize_ids(
@@ -619,55 +623,31 @@ def tokenize_ids(
     the tokenizer's deterministic id space — what ``materialize_packs``'d
     training sequences actually serialize.  Characters outside the
     training alphabet become ``UNK_ID`` (honest, visible — never a
-    silent drop).  Same kernel shape and per-worker cache as
-    :func:`tokenize_bpe`; NULL text -> NULL ids."""
-    ranks = dict(tokenizer.ranks)
-    t2i = dict(tokenizer.token_to_id)
-    unk = tokenizer.unk_id  # None byte-level: lookups are total there
-    enc = _encode_arrays(ranks, tokenizer.byte_level)
-
-    @F.pandas_udf("array<int>")
-    def apply_ids(words: pd.Series) -> pd.Series:
-        def one(ws):
-            if ws is None:
-                return None
-            out: list[int] = []
-            for w in ws:
-                out.extend(t2i.get(t, unk) for t in enc(w))
-            return out
-
-        return words.map(one)
-
-    return df.withColumn(out_col, apply_ids(pretokens(F.col(text_col))))
+    silent drop; :meth:`BPETokenizer.encode_ids`).  Same kernel and
+    per-worker cache as :func:`tokenize_bpe`; NULL text -> NULL ids."""
+    return _apply_per_word(
+        df, text_col, out_col, "array<int>", tokenizer.encode_ids, _concat
+    )
 
 
 def bpe_token_count(
     df: DataFrame,
-    tokenizer: BPETokenizer,
+    tokenizer: "BPETokenizer | UnigramTokenizer",
     text_col: str = "text",
     out_col: str = "n_tokens_bpe",
 ) -> DataFrame:
-    """Add ``out_col`` (long): learned-BPE token count — the real-count
+    """Add ``out_col`` (long): learned token count — the real-count
     drop-in for ``pack_sequences(token_col=...)`` /
     ``select_to_token_budget(token_col=...)`` (verdict r14: budget and
     packing decisions should ride learned counts, not the regex proxy).
-    Same kernel shape as :func:`tokenize_bpe` but sums lengths instead of
-    materializing token arrays — the counting pass moves no token
-    strings.  NULL text -> NULL count."""
-    ranks = dict(tokenizer.ranks)
-    # per-worker cache, see tokenize_bpe
-    enc = _encode_arrays(ranks, tokenizer.byte_level)
-
-    @F.pandas_udf("long")
-    def count_tokens(words: pd.Series) -> pd.Series:
-        def one(ws):
-            if ws is None:
-                return None
-            return sum(len(enc(w)) for w in ws)
-
-        return words.map(one)
-
-    return df.withColumn(out_col, count_tokens(pretokens(F.col(text_col))))
+    Same kernel as :func:`tokenize_bpe` but sums per-word lengths instead
+    of materializing token arrays — the counting pass moves no token
+    strings.  Either tokenizer class works (a :class:`UnigramTokenizer`
+    counts Viterbi pieces).  NULL text -> NULL count."""
+    return _apply_per_word(
+        df, text_col, out_col, "long",
+        lambda w: len(tokenizer.encode(w)), sum,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -843,9 +823,7 @@ class UnigramTokenizer:
             self.token_to_id[p] = len(self.token_to_id)
 
     def encode(self, word: str) -> list[str]:
-        return viterbi_segment(
-            word, self.piece_logp, self.max_piece_len
-        )[0]
+        return self.encode_with_logp(word)[0]
 
     def encode_with_logp(self, word: str) -> tuple[list[str], int]:
         return viterbi_segment(word, self.piece_logp, self.max_piece_len)
@@ -895,20 +873,13 @@ class UnigramTokenizer:
             [p, self.piece_logp[p] / _UNIGRAM_SCALE]
             for p in sorted(self.piece_logp)
         ]
-        from .text import _BPE_RE
-
         doc = {
             "version": "1.0",
             "truncation": None,
             "padding": None,
             "added_tokens": [],
             "normalizer": None,
-            "pre_tokenizer": {
-                "type": "Split",
-                "pattern": {"Regex": _BPE_RE},
-                "behavior": "Removed",
-                "invert": True,
-            },
+            "pre_tokenizer": _HF_SPLIT,
             "post_processor": None,
             "decoder": None,
             "model": {
@@ -938,27 +909,16 @@ def train_unigram(
     seed_size: int = 4_000,
 ) -> UnigramTokenizer:
     """Distributed front end of :func:`train_unigram_from_counts` —
-    the SAME bounded word-type shuffle as :func:`train_bpe` (explode
-    pre-tokens, map-side-combined count, deterministic top cut), then
+    the SAME bounded word-type shuffle as :func:`train_bpe`
+    (:func:`_word_type_counts`: explode pre-tokens, map-side-combined
+    count, deterministic top cut), then
     the hard-EM loop over the collected table on the driver.  The two
     trainers deliberately share the distributed pass: at 100 TB the
     corpus scan dominates and is identical; only the bounded driver
     loop differs."""
-    counts = (
-        df.select(F.explode(pretokens(F.col(text_col))).alias("word"))
-        .groupBy("word")
-        .count()
-    )
-    if min_count > 1:
-        counts = counts.where(F.col("count") >= min_count)
-    rows = (
-        counts.orderBy(F.col("count").desc(), F.col("word"))
-        .limit(int(max_word_types))
-        .collect()
-    )
     return UnigramTokenizer(
         train_unigram_from_counts(
-            {r["word"]: r["count"] for r in rows},
+            _word_type_counts(df, text_col, max_word_types, min_count),
             vocab_size=vocab_size,
             max_piece_len=max_piece_len,
             seed_size=seed_size,
@@ -976,21 +936,14 @@ def tokenize_unigram(
 ) -> DataFrame:
     """Distributed apply — the :func:`tokenize_bpe` shape: JVM
     pre-tokenization (one source of truth), Arrow-batched pandas UDF
-    running Viterbi with a per-executor distinct-word cache (Zipf: the
-    dp runs per word TYPE, not per occurrence).  ``with_logp`` adds
+    running Viterbi behind the shared per-executor word cache
+    (:func:`_cached`; Zipf: the dp runs per word TYPE, not per
+    occurrence).  ``with_logp`` adds
     ``{out_col}_logp`` — the document's total integer log-mass, the
     likelihood the certification section pins.  NULL text -> NULL."""
-    logp_table = dict(tokenizer.piece_logp)
-    max_len = tokenizer.max_piece_len
-    cache: dict[str, tuple[list[str], int]] = {}
-
-    def seg(word: str) -> tuple[list[str], int]:
-        got = cache.get(word)
-        if got is None:
-            got = cache[word] = viterbi_segment(word, logp_table, max_len)
-            if len(cache) > 2_000_000:
-                cache.clear()
-        return got
+    # a struct-typed pandas_udf must return a DataFrame, so this apply
+    # keeps its own UDF; the per-word cache is the shared one
+    seg = _cached(tokenizer.encode_with_logp)
 
     @F.pandas_udf("struct<toks: array<string>, logp: long>")
     def apply_viterbi(words: pd.Series) -> pd.DataFrame:
@@ -1025,33 +978,11 @@ def unigram_token_count(
     text_col: str = "text",
     out_col: str = "n_tokens_unigram",
 ) -> DataFrame:
-    """Add ``out_col`` (long): unigram-LM token count — the
-    :func:`bpe_token_count` twin for Viterbi segmentation, so budget
-    and packing decisions can meter unigram counts
+    """Add ``out_col`` (long): unigram-LM token count (Viterbi pieces per
+    document), so budget and packing decisions can meter unigram counts
     (``pack_sequences(token_col=...)`` / ``select_to_token_budget`` /
-    ``curate_corpus(bpe_tokenizer=<a UnigramTokenizer>)``).  Counts
-    only — no token strings move.  NULL text -> NULL count."""
-    logp_table = dict(tokenizer.piece_logp)
-    max_len = tokenizer.max_piece_len
-    cache: dict[str, int] = {}
-
-    def n_pieces(word: str) -> int:
-        got = cache.get(word)
-        if got is None:
-            got = cache[word] = len(
-                viterbi_segment(word, logp_table, max_len)[0]
-            )
-            if len(cache) > 2_000_000:
-                cache.clear()
-        return got
-
-    @F.pandas_udf("long")
-    def count_tokens(words: pd.Series) -> pd.Series:
-        def one(ws):
-            if ws is None:
-                return None
-            return sum(n_pieces(w) for w in ws)
-
-        return words.map(one)
-
-    return df.withColumn(out_col, count_tokens(pretokens(F.col(text_col))))
+    ``curate_corpus(bpe_tokenizer=<a UnigramTokenizer>)``).
+    :func:`bpe_token_count` under this function's default ``out_col`` —
+    that kernel counts either tokenizer's pieces.  Counts only — no
+    token strings move.  NULL text -> NULL count."""
+    return bpe_token_count(df, tokenizer, text_col, out_col)

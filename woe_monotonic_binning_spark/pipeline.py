@@ -33,6 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ._cache import generate_barrier
 from .operators.dedup import (
     DEFAULT_MAX_BLOCK,
     dedup_keep_best,
@@ -42,31 +43,6 @@ from .operators.dedup import (
 )
 from .operators.sampling import mix_sources, split_column
 from .operators.text import quality_score
-
-
-def _expr_barrier(df: DataFrame, col: str) -> DataFrame:
-    """Materialize ``col`` once per row via a 1-element ``explode`` —
-    a value-level no-op (``explode(array(x))`` emits exactly one row
-    holding ``x``, NULL included) whose Generate node downstream
-    operators can only reference as an OUTPUT ATTRIBUTE.
-
-    Why (round 17, guide §1.2/§2.4): Spark substitutes projected
-    expressions into filter predicates when pushing filters down, and
-    performs no subexpression elimination inside predicates — so a
-    filter on a column derived from an expensive chain (the 5-regex PII
-    scrub, the multi-signal quality score) re-evaluates the WHOLE chain
-    once per textual reference (the round-8 gopher blow-up).  The
-    previous fix was a corpus-sized MEMORY_AND_DISK persist of the
-    scrubbed text; the Generate barrier buys the same single evaluation
-    with zero storage: the chain computes once inside the Generate's
-    input and every consumer — including a pushed-down filter — reads
-    the generated attribute.  Verified plan shape: one regex chain below
-    ``Generate explode(...)``, attribute references above, all inside one
-    WholeStageCodegen span.  Shared with the decontamination/winnowing
-    operators since round 17 session 2 — see ``_cache.generate_barrier``."""
-    from ._cache import generate_barrier
-
-    return generate_barrier(df, col)
 
 
 def _media_dedup_gate(docs, media, id_col, pairs_fn):
@@ -224,9 +200,9 @@ def curate_corpus(
     "fill the recipe to N tokens" step (``select_to_token_budget`` over a
     transient token count); unnamed sources pass through.
     ``bpe_tokenizer`` (round 15) — a trained
-    ``operators.tokenizer.BPETokenizer``: when given, the budget fill
-    meters REAL learned-BPE counts (``bpe_token_count``) instead of the
-    regex proxy ``token_count_bpe``.
+    ``operators.tokenizer.BPETokenizer`` (or ``UnigramTokenizer``): when
+    given, the budget fill meters REAL learned counts
+    (``bpe_token_count``) instead of the regex proxy ``token_count_bpe``.
     ``quality_model`` (round 15) — a trained
     ``quality.QualityClassifierModel``: when given, the quality gate
     scores ``sigmoid(w . gopher_signals + b)`` (the DCLM-style learned
@@ -276,7 +252,7 @@ def curate_corpus(
     first cache one stage later (it used to hold the full scrubbed
     corpus; it now holds post-filter rows only) — the once-per-row
     evaluation of the scrub and quality-score expression chains is now
-    guaranteed by in-plan Generate barriers (see ``_expr_barrier``)
+    guaranteed by in-plan Generate barriers (``generate_barrier``)
     instead of storage, so ``cache_survivors=False`` no longer pays the
     regex re-inlining blow-up either.  The default ``near_dup='minhash'``
     stage (and ``'simhash'``, same eager contract) runs eagerly at call
@@ -390,7 +366,7 @@ def curate_corpus(
         # the A/B (gate leg to survivor materialization, sf0.1, min of 3
         # in-process) read scrub-cache 1.70s vs barrier+scored-cache
         # 1.28s — see OPTIMIZATION_r17.md.
-        docs = _expr_barrier(docs, text_col)
+        docs = generate_barrier(docs, text_col)
     if dedup_lines:
         from .operators.text import remove_repeated_lines
 
@@ -477,7 +453,7 @@ def curate_corpus(
     # multi-signal score expression (pushed-down copy) on every row in
     # addition to the projection's copy — same mechanism as the scrub
     # barrier above, same zero-storage fix.
-    scored = _expr_barrier(scored, "quality").filter(
+    scored = generate_barrier(scored, "quality").filter(
         F.col("quality") >= quality_threshold
     )
     gate_cache = None
@@ -578,20 +554,11 @@ def curate_corpus(
         if bpe_tokenizer is not None:
             # learned counts (round 15): the trained table rides the
             # Arrow kernel; budgets meter REAL tokens, not the proxy.
-            # Round 17: a trained UnigramTokenizer is accepted too —
-            # same kernel shape, Viterbi piece counts.
-            from .operators.tokenizer import (
-                UnigramTokenizer,
-                bpe_token_count,
-                unigram_token_count,
-            )
+            # A trained UnigramTokenizer counts on the same kernel
+            # (Viterbi pieces).
+            from .operators.tokenizer import bpe_token_count
 
-            counter = (
-                unigram_token_count
-                if isinstance(bpe_tokenizer, UnigramTokenizer)
-                else bpe_token_count
-            )
-            counted = counter(
+            counted = bpe_token_count(
                 mixed, bpe_tokenizer, text_col, out_col="__toks"
             )
         else:
