@@ -4,6 +4,8 @@ and the streaming twin must reproduce the batch aggregation."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -265,6 +267,36 @@ def test_exact_dedup_shapes_agree(spark):
     assert digest.exceptAll(generic).count() == 0
 
 
+# connected_components labels a graph of at most L pairs on the driver
+# (L from the broadcast threshold) and a larger one with the distributed
+# loop; a threshold of -1 always takes the loop.  The tests below loop over
+# both routes inside one test each, so their ids stay stable.
+CC_ROUTES = ("driver", "distributed")
+
+
+@contextmanager
+def _cc_route(spark, route):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    if route == "distributed":
+        spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _group_jobs(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return (its result, job count)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_connected_components_transitive_closure(spark):
     """A~B~C~D~E chains collapse to one cluster labelled by the min id;
     disjoint clusters stay disjoint; pointer jumping converges well inside
@@ -276,10 +308,15 @@ def test_connected_components_transitive_closure(spark):
         chain + [(100, 101), (101, 102), (100, 102), (200, 201)],
         "id_a long, id_b long",
     )
-    cc = {r.id: r.component for r in connected_components(pairs, max_iter=10).collect()}
-    assert all(cc[i] == 1 for i in range(1, 41))
-    assert all(cc[i] == 100 for i in (100, 101, 102))
-    assert cc[200] == cc[201] == 200
+    for route in CC_ROUTES:
+        with _cc_route(spark, route):
+            cc = {
+                r.id: r.component
+                for r in connected_components(pairs, max_iter=10).collect()
+            }
+        assert all(cc[i] == 1 for i in range(1, 41)), route
+        assert all(cc[i] == 100 for i in (100, 101, 102)), route
+        assert cc[200] == cc[201] == 200, route
 
 
 def test_connected_components_duplicate_edges_match_distinct(spark):
@@ -292,20 +329,22 @@ def test_connected_components_duplicate_edges_match_distinct(spark):
 
     clean = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)]
     noisy = clean * 3 + [(b, a) for a, b in clean] + [(3, 2), (11, 10)]
-    cc_clean = {
-        r.id: r.component
-        for r in connected_components(
-            spark.createDataFrame(clean, "id_a long, id_b long"), max_iter=10
-        ).collect()
-    }
-    cc_noisy = {
-        r.id: r.component
-        for r in connected_components(
-            spark.createDataFrame(noisy, "id_a long, id_b long"), max_iter=10
-        ).collect()
-    }
-    assert cc_noisy == cc_clean
-    assert cc_clean[3] == 1 and cc_clean[22] == 20
+    for route in CC_ROUTES:
+        with _cc_route(spark, route):
+            cc_clean = {
+                r.id: r.component
+                for r in connected_components(
+                    spark.createDataFrame(clean, "id_a long, id_b long"), max_iter=10
+                ).collect()
+            }
+            cc_noisy = {
+                r.id: r.component
+                for r in connected_components(
+                    spark.createDataFrame(noisy, "id_a long, id_b long"), max_iter=10
+                ).collect()
+            }
+        assert cc_noisy == cc_clean, route
+        assert cc_clean[3] == 1 and cc_clean[22] == 20, route
 
 
 def test_connected_components_fused_min_step_matches_join(spark):
@@ -314,7 +353,8 @@ def test_connected_components_fused_min_step_matches_join(spark):
     == least(own, min-neighbor)).  Pin the algebra directly — one old-style
     join step vs one fused step over the same label table must emit the
     identical stepped table — and pin end-to-end labels against a
-    driver-side union-find ground truth on random graphs."""
+    driver-side union-find ground truth on random graphs, on both
+    routes."""
     import random
 
     from pyspark.sql import functions as F
@@ -377,26 +417,34 @@ def test_connected_components_fused_min_step_matches_join(spark):
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
         truth = {x: find(x) for x in parent}
-        got = {
-            r.id: r.component
-            for r in connected_components(
-                spark.createDataFrame(es, "id_a long, id_b long"), max_iter=25
-            ).collect()
-        }
-        assert got == truth
+        for route in CC_ROUTES:
+            with _cc_route(spark, route):
+                got = {
+                    r.id: r.component
+                    for r in connected_components(
+                        spark.createDataFrame(es, "id_a long, id_b long"), max_iter=25
+                    ).collect()
+                }
+            assert got == truth, (seed, route)
 
 
 def test_connected_components_nonconvergence_raises(spark):
-    """An undersized max_iter must fail LOUDLY: returning partially-merged
-    labels would make the canonical-keep filter silently drop the wrong docs.
-    The 40-node chain needs ~log2(39) pointer-jumping rounds, so max_iter=1
-    (plus the one confirming round) cannot reach the fixed point."""
+    """An undersized max_iter must fail LOUDLY on the distributed route:
+    returning partially-merged labels would make the canonical-keep filter
+    silently drop the wrong docs.  The 40-node chain needs ~log2(39)
+    pointer-jumping rounds, so max_iter=1 (plus the one confirming round)
+    cannot reach the fixed point.  max_iter bounds distributed rounds only:
+    on the driver route the same call returns the exact labels."""
     from woe_monotonic_binning_spark.operators.dedup import connected_components
 
     chain = [(i, i + 1) for i in range(1, 40)]
     pairs = spark.createDataFrame(chain, "id_a long, id_b long")
-    with pytest.raises(RuntimeError, match="max_iter"):
-        connected_components(pairs, max_iter=1)
+    with _cc_route(spark, "distributed"):
+        with pytest.raises(RuntimeError, match="max_iter"):
+            connected_components(pairs, max_iter=1)
+    with _cc_route(spark, "driver"):
+        cc = {r.id: r.component for r in connected_components(pairs, max_iter=1).collect()}
+    assert cc == {i: 1 for i in range(1, 41)}
 
 
 def test_connected_components_converges_exactly_at_max_iter(spark):
@@ -409,8 +457,66 @@ def test_connected_components_converges_exactly_at_max_iter(spark):
     pairs = spark.createDataFrame(
         [(100, 101), (101, 102), (100, 102)], "id_a long, id_b long"
     )
-    cc = {r.id: r.component for r in connected_components(pairs, max_iter=1).collect()}
-    assert cc == {100: 100, 101: 100, 102: 100}
+    for route in CC_ROUTES:
+        with _cc_route(spark, route):
+            cc = {
+                r.id: r.component
+                for r in connected_components(pairs, max_iter=1).collect()
+            }
+        assert cc == {100: 100, 101: 100, 102: 100}, route
+
+
+def test_connected_components_null_ids_are_not_edges(spark):
+    """A pair with a NULL id on either side is no edge: (1, NULL) and
+    (NULL, 4) add neither a junk (NULL, 1) row nor nodes 1 and 4, on both
+    routes.  An empty pair table gives an empty result of the same schema."""
+    from woe_monotonic_binning_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame([(1, None), (2, 3), (None, 4)], "id_a long, id_b long")
+    empty = spark.createDataFrame([], "id_a long, id_b long")
+    for route in CC_ROUTES:
+        with _cc_route(spark, route):
+            got = sorted(tuple(r) for r in connected_components(pairs).collect())
+            none = connected_components(empty)
+            assert none.schema.simpleString() == "struct<id:bigint,component:bigint>"
+            assert none.count() == 0, route
+        assert got == [(2, 2), (3, 2)], route
+
+
+def test_connected_components_job_counts_per_route(spark):
+    """CC on the 40-node chain: the driver route is the size probe's one
+    job (the distributed loop ran 50 on the default session); with the
+    threshold at -1 the loop runs exactly as many jobs as before the driver
+    route existed (40)."""
+    from woe_monotonic_binning_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 40)], "id_a long, id_b long"
+    )
+    _, driver = _group_jobs(spark, "wmb_cc_driver", lambda: connected_components(pairs))
+    with _cc_route(spark, "distributed"):
+        _, loop = _group_jobs(
+            spark, "wmb_cc_distributed", lambda: connected_components(pairs)
+        )
+    assert driver <= 2, f"driver route ran {driver} jobs"
+    assert loop == 40, f"distributed route ran {loop} jobs"
+
+
+def test_curate_corpus_minhash_job_count(spark):
+    """One curate_corpus(near_dup="minhash") call on the sf0.001 documents
+    runs 21 Spark jobs; 14 fewer than when its connected components ran the
+    distributed loop (35)."""
+    from woe_monotonic_binning_spark import curate_corpus
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    spark.catalog.clearCache()
+    try:
+        _, jobs = _group_jobs(
+            spark, "wmb_curate_minhash", lambda: curate_corpus(docs, near_dup="minhash")
+        )
+    finally:
+        spark.catalog.clearCache()
+    assert jobs == 21, f"curate_corpus ran {jobs} jobs"
 
 
 def test_dedup_keep_canonical_collapses_planted_dups(spark, docs_with_dups):

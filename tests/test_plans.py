@@ -183,6 +183,19 @@ def test_dedup_keep_canonical_no_forced_broadcast(spark):
     assert forced_broadcast_hint_count(hinted) == 1
 
 
+def test_connected_components_driver_route_is_local_table(spark):
+    """On the driver route CC's labels come back as an Arrow-built local
+    table: a LocalTableScan and no ExistingRDD scan.  A row-list hand-back
+    scans a Python RDD instead, which starts the Python worker daemon and
+    its workers (+344 MB RSS on a 4-core host)."""
+    from woe_monotonic_binning_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame([(0, 1), (1, 2), (10, 11)], "id_a long, id_b long")
+    plan = formatted_plan(connected_components(pairs))
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+
+
 def test_minhash_pipeline_stays_jvm_side(spark):
     from woe_monotonic_binning_spark.operators.dedup import (
         minhash_signatures,

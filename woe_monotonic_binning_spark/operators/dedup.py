@@ -17,9 +17,12 @@ Scale design (100 TB corpus, 1000 executors):
 
 from __future__ import annotations
 
+import logging
+import re
 import sys
 import warnings
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
@@ -28,6 +31,8 @@ from ..functions.vector import cosine_from_norms, norm
 from .text import WS_CHARS as _WS_CHARS
 
 MERSENNE_31 = 2_147_483_647  # 2^31 - 1, prime; keeps a*h+b inside int64
+
+_log = logging.getLogger(__name__)
 
 
 class _DefaultCap(int):
@@ -685,13 +690,31 @@ def connected_components(
     deduplicating a corpus needs the transitive closure — A~B and B~C must
     collapse to one cluster even though (A, C) was never emitted.  The
     component label is the minimum doc id in the cluster (deterministic).
+    A pair with a NULL id on either side is not an edge and is dropped
+    before anything else.
 
-    Algorithm: min-label propagation with pointer jumping, the DataFrame
-    rendering of the alternating-star methods published for MapReduce CC
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    each round every node adopts the min label in its neighborhood, then
-    labels are flattened one level (``label <- label(label)``), giving
-    O(log n) rounds on chain-shaped components instead of O(diameter).
+    Two routes, one answer.  One bounded action (``limit(2L + 1)`` of the
+    symmetrized edge checkpoint, fetched as Arrow) probes the graph's
+    size.  With at most ``L`` pairs the graph is labelled on the DRIVER by
+    a vectorised union-find (:func:`_label_on_driver`) and handed back as
+    a local table — one Spark job for the whole call.  ``L`` is the
+    session's ``spark.sql.autoBroadcastJoinThreshold`` at 16 bytes per
+    ``(long, long)`` pair (655,360 pairs at the 10 MB default): the size
+    the engine already treats as small enough to route through the
+    driver.  A threshold <= 0 skips the probe and always runs the
+    distributed loop below; there is no knob of its own.  Every call logs
+    its route, pair count, ``L`` and (distributed) round count at INFO on
+    this module's logger.
+
+    Distributed algorithm: min-label propagation with pointer jumping, the
+    DataFrame rendering of the alternating-star methods published for
+    MapReduce CC (Kiveris et al., "Connected Components in MapReduce and
+    Beyond") — each round every node adopts the min label in its
+    neighborhood, then labels are flattened one level (``label <-
+    label(label)``), giving O(log n) rounds on chain-shaped components
+    instead of O(diameter).  Its fixed point is the component min id, so
+    both routes emit identical rows.  ``max_iter`` bounds the distributed
+    rounds only; the driver route has no round budget.
 
     Scale design: state is only ``(long id, long label)`` for nodes that
     appear in some pair — a tiny fraction of the corpus — and each round is
@@ -704,7 +727,8 @@ def connected_components(
     instead of two (checkpoint job + checksum job — measured ~25% off the
     whole CC stage at sf0.1; exact output parity).  Safe because every
     round's state is always consumed through an action before the next
-    round builds on it, and the lineage is deterministic.
+    round builds on it, and the lineage is deterministic.  The size probe
+    materializes the edge checkpoint, so the pair plan still runs once.
     """
     # No edge-level distinct (round 17, guide §2.4): every label step is a
     # MIN aggregation over the neighborhood, and min over a multiset equals
@@ -724,6 +748,7 @@ def connected_components(
     # plans/r18/dedup_cc_round_after.txt shows the ExistingRDD scan with
     # UnknownPartitioning(0)), so every round re-shuffled anyway and the
     # up-front repartition+sort was pure waste.
+    pairs = pairs.filter(F.col(id_a).isNotNull() & F.col(id_b).isNotNull())
     edges = (
         pairs.select(
             F.col(id_a).cast("long").alias("src"), F.col(id_b).cast("long").alias("dst")
@@ -733,6 +758,16 @@ def connected_components(
         )
         .localCheckpoint(eager=False)
     )
+    limit = _driver_pair_limit(pairs.sparkSession)
+    if limit > 0:
+        # every pair is two edge rows, so 2L + 1 rows tell "more than L"
+        probe = edges.limit(2 * limit + 1).toArrow()
+        if probe.num_rows <= 2 * limit:
+            _log.info(
+                "connected_components: %d pairs <= L=%d -> driver union-find",
+                probe.num_rows // 2, limit,
+            )
+            return _label_on_driver(pairs.sparkSession, probe)
 
     def _jump(stepped: DataFrame) -> DataFrame:
         # pointer jumping: follow one level of indirection.  Labels are
@@ -788,6 +823,7 @@ def connected_components(
     ).first()
     converged = first["c"] == 0
     prev_sum = first["s"]
+    rounds = 1
     # max_iter bounds the PRODUCTIVE (checksum-decreasing) rounds; one extra
     # round is allowed so a graph that reaches its fixed point exactly on the
     # max_iter-th productive round can still observe the stationary checksum
@@ -795,6 +831,7 @@ def connected_components(
     # round of the budget (with >= 1 real edge it always decreases the
     # checksum, so it can never be the stationary observation).
     for _ in range(max_iter if not converged else 0):
+        rounds += 1
         # Min-label step FUSED into one aggregation (round 18, guide §2.4):
         # min over (neighbor labels UNION the node's own label) equals
         # least(own label, min neighbor label), so unioning the label table
@@ -840,7 +877,53 @@ def connected_components(
             f"within max_iter={max_iter} (+1 confirming) rounds; raise "
             "max_iter — pointer jumping needs ~log2(longest chain) rounds"
         )
+    _log.info(
+        "connected_components: %s pairs, L=%d -> distributed, %d rounds",
+        f"> {limit}" if limit > 0 else "unprobed", limit, rounds,
+    )
     return labels.select("id", F.col("label").alias("component"))
+
+
+# Bytes one (long, long) pair takes in a hash relation: converts the
+# broadcast threshold into the driver route's pair bound.
+_PAIR_BYTES = 16
+
+
+def _driver_pair_limit(spark) -> int:
+    """``L`` of :func:`connected_components`: the session's broadcast
+    threshold (a Spark byte string, binary units) over 16 bytes a pair;
+    <= 0 when the threshold is."""
+    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold").strip().lower()
+    n, unit = re.fullmatch(r"(-?\d+)([kmgtp]?)b?", raw).groups()
+    return int(n) * (1 << 10 * " kmgtp".index(unit or " ")) // _PAIR_BYTES
+
+
+def _label_on_driver(spark, edges) -> DataFrame:
+    """Label a symmetrized ``(src, dst)`` Arrow edge table on the driver.
+
+    Union-find over dense node indices, vectorised: each pass hooks every
+    root onto the smallest root across its edges, then compresses every
+    path to its root; a pass that changes nothing ends it.  Parents start
+    as the node itself and only ever decrease, so each component's root is
+    its min id — the fixed point of the distributed loop.  The result goes
+    back as an Arrow-built local table (``LocalTableScan``): a row list
+    would be scanned through a Python RDD and start the worker daemon."""
+    import pyarrow as pa
+
+    ids, dst = np.unique(edges.column("dst").to_numpy(), return_inverse=True)
+    src = np.searchsorted(ids, edges.column("src").to_numpy())
+    parent = np.arange(len(ids))
+    while True:
+        hooked = parent.copy()
+        np.minimum.at(hooked, parent[src], parent[dst])
+        while not np.array_equal(jumped := hooked[hooked], hooked):
+            hooked = jumped
+        if np.array_equal(hooked, parent):
+            break
+        parent = hooked
+    return spark.createDataFrame(
+        pa.table({"id": ids, "component": ids[parent]}), "id long, component long"
+    )
 
 
 def dedup_assign_components(
@@ -854,8 +937,10 @@ def dedup_assign_components(
     all documents (billions of rows at 100 TB), far past Spark's broadcast
     limits.  So this is a plain equi-join on the id: AQE promotes it to a
     broadcast join at runtime when the table actually is small, and falls
-    back to a shuffle join when it isn't.  No user-forced ``F.broadcast``
-    (plan-pinned in
+    back to a shuffle join when it isn't.  A graph under the broadcast
+    threshold comes back from ``connected_components`` as a small local
+    table, which the planner sizes (and broadcasts) on its own; still no
+    user-forced ``F.broadcast`` (plan-pinned in
     tests/test_plans.py::test_dedup_keep_canonical_no_forced_broadcast)."""
     cc = connected_components(pairs).withColumnRenamed("id", id_col)
     return df.join(cc, id_col, "left").withColumn(
