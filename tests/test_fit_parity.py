@@ -120,6 +120,20 @@ def test_max_distinct_below_one_raises(spark, binning_df, max_distinct):
         )
 
 
+@pytest.mark.parametrize("parallelism", [0, -3])
+def test_quantize_parallelism_below_one_raises(spark, parallelism):
+    """0 used to fail inside the JVM's range partitioner; it must not be
+    read as "unset" either."""
+    from woe_monotonic_binning_spark.fit import quantize_summary
+
+    summary = spark.createDataFrame(
+        [("x", 1.0, 1.0, 0.0, 0.0)],
+        "variable string, value double, size double, bads double, sumsq double",
+    )
+    with pytest.raises(ValueError, match="parallelism"):
+        quantize_summary(summary, 4, parallelism=parallelism)
+
+
 def test_tpch_lineitem_fit_smoke(spark, sf0001_dir):
     from pyspark.sql import functions as F
 
@@ -331,6 +345,137 @@ def test_quantize_arrow_cumsum_matches_window(spark):
             .reset_index(drop=True)
         )
         pd.testing.assert_frame_equal(got, exp, check_exact=True)
+
+
+def _quantize_under_group(spark, summary, parallelism, group):
+    """Run ``quantize_summary`` and then its output under two fresh job
+    groups; return (sorted rows, jobs of the call, MapInArrow tasks)."""
+    from woe_monotonic_binning_spark.fit import quantize_summary
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup(f"{group}_call", group)
+    try:
+        capped = quantize_summary(summary, 16, parallelism=parallelism)
+    finally:
+        sc.setJobGroup(None, None)
+    sc.setJobGroup(group, group)
+    try:
+        rows = sorted(map(tuple, capped.collect()), key=repr)
+    finally:
+        sc.setJobGroup(None, None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    tasks = []
+    for jid in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(jid).stageIds:
+            info = tracker.getStageInfo(sid)
+            # a map stage re-listed by a later job is skipped: no tasks ran
+            if info is None or info.numCompletedTasks == 0:
+                continue
+            clusters = store.operationGraphForStage(sid).rootCluster().childClusters()
+            if any(clusters.apply(i).name() == "MapInArrow" for i in range(clusters.size())):
+                tasks.append(info.numTasks)
+    assert len(tasks) == 1, tasks
+    return rows, len(tracker.getJobIdsForGroup(f"{group}_call")), tasks[0]
+
+
+def test_quantize_guard_task_count_and_log(spark, caplog):
+    """Under AQE a small summary's range shuffle coalesces to ONE
+    partition: the guard's MapInArrow runs one Python task (one per core,
+    8 here, when the count was defaultParallelism).  An explicit
+    parallelism keeps its count, and the rows never depend on it.  Each
+    call logs its partition count and what chose it, and reading that count
+    starts no Spark job: the call runs the range sample, the shuffle map
+    stage and the checkpoint, three jobs, as it did before the log."""
+    import logging
+
+    caplog.set_level(logging.INFO, logger="woe_monotonic_binning_spark.fit")
+    rows = [("hi", float(v), 1.0 + v % 3, float(v % 2), float(v % 2)) for v in range(600)]
+    rows += [("lo", float(v), 2.0, 1.0, 1.0) for v in range(5)]
+    rows.append(("hi", None, 4.0, 1.0, 1.0))
+    summary = spark.createDataFrame(
+        rows, "variable string, value double, size double, bads double, sumsq double"
+    )
+    auto, jobs, tasks = _quantize_under_group(spark, summary, None, "wmb_quantize_aqe")
+    assert (jobs, tasks) == (3, 1)
+    five, _, tasks = _quantize_under_group(spark, summary, 5, "wmb_quantize_five")
+    assert tasks == 5
+    one, _, tasks = _quantize_under_group(spark, summary, 1, "wmb_quantize_one")
+    assert tasks == 1
+    assert auto == five == one
+    assert sum(1 for r in auto if r[0] == "hi") <= 17  # 16 buckets + NULL
+    lines = [
+        r.getMessage() for r in caplog.records
+        if r.name == "woe_monotonic_binning_spark.fit"
+    ]
+    assert lines == [
+        "quantize_summary: 1 range partitions (aqe)",
+        "quantize_summary: 5 range partitions (parallelism=5)",
+        "quantize_summary: 1 range partitions (parallelism=1)",
+    ]
+
+
+@pytest.mark.parametrize(
+    "key, value",
+    [
+        ("spark.sql.adaptive.enabled", "false"),
+        ("spark.sql.adaptive.coalescePartitions.enabled", "false"),
+        ("spark.sql.shuffle.partitions", "2"),
+    ],
+)
+def test_quantize_guard_falls_back_to_default_parallelism(spark, caplog, key, value):
+    """Without AQE coalescing an uncounted range shuffle would run
+    spark.sql.shuffle.partitions Python tasks, and below defaultParallelism
+    initial partitions AQE would make them larger than an even split; the
+    guard uses defaultParallelism in both cases."""
+    import logging
+
+    from woe_monotonic_binning_spark.fit import quantize_summary
+
+    caplog.set_level(logging.INFO, logger="woe_monotonic_binning_spark.fit")
+    prev = spark.conf.get(key)
+    summary = spark.createDataFrame(
+        [("x", float(v), 1.0, 0.0, 0.0) for v in range(40)],
+        "variable string, value double, size double, bads double, sumsq double",
+    )
+    spark.conf.set(key, value)
+    try:
+        quantize_summary(summary, 4)
+    finally:
+        spark.conf.set(key, prev)
+    n = spark.sparkContext.defaultParallelism
+    assert [r.getMessage() for r in caplog.records] == [
+        f"quantize_summary: {n} range partitions (defaultParallelism)"
+    ]
+
+
+def test_fit_batch_boundary_parity(spark, binning_df):
+    """Both of the fit's Python crossings, the quantize kernel and the
+    per-variable applyInPandas, give the same bins when their input is cut
+    into 7-row Arrow batches; a small summary is one range partition, so
+    the quantize kernel sees it as many batches."""
+    cols = [c for c in FEATURES if c in binning_df.columns]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+
+    def fit():
+        return (
+            fit_bins(binning_df, "target", cols, n_threshold=50, max_distinct=16)
+            .toPandas()
+            .sort_values(["variable", "interval_start_include"])
+            .reset_index(drop=True)
+        )
+
+    try:
+        default = fit()
+        spark.conf.set(key, "7")
+        small = fit()
+    finally:
+        spark.conf.set(key, prev)
+    assert len(default) >= len(cols)
+    pd.testing.assert_frame_equal(small, default, check_exact=True)
 
 
 def test_merge_bins_survives_row_reorder_and_rejects_multi_variable(spark):

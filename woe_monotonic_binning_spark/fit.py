@@ -25,6 +25,7 @@ that bounded too (documented deviation, SURVEY section 4d).
 
 from __future__ import annotations
 
+import logging
 import math
 from typing import Iterable, Sequence
 
@@ -33,6 +34,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from . import _algo
 from ._algo import BINS_COLUMNS, FitParams
+
+_log = logging.getLogger(__name__)
 
 # max_distinct="auto" resolution: 8192 buckets keeps any per-variable
 # applyInPandas input under ~1 MB while leaving quantile resolution far
@@ -154,6 +157,19 @@ def _quantize_running_sums(batches):
     yield from out.to_batches()
 
 
+def _aqe_coalesces(spark) -> bool:
+    """True when AQE will coalesce an uncounted range shuffle down from at
+    least ``defaultParallelism`` initial partitions."""
+    conf = spark.conf
+    initial = conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum", None)
+    initial = initial or conf.get("spark.sql.shuffle.partitions")
+    return (
+        conf.get("spark.sql.adaptive.enabled").lower() == "true"
+        and conf.get("spark.sql.adaptive.coalescePartitions.enabled").lower() == "true"
+        and int(initial) >= spark.sparkContext.defaultParallelism
+    )
+
+
 def quantize_summary(
     summary: DataFrame, max_distinct: int, parallelism: int | None = None
 ) -> DataFrame:
@@ -186,7 +202,7 @@ def quantize_summary(
        no Exchange, no external sort, one columnar boundary crossing of
        the narrow summary rows;
     3. per-(variable, partition) subtotals (a tiny aggregation: at most
-       ``parallelism x #variables`` rows) cumulate across partitions into
+       ``partitions x #variables`` rows) cumulate across partitions into
        offsets — range partitioning guarantees partition order == value
        order — and broadcast-join back.
 
@@ -204,29 +220,58 @@ def quantize_summary(
 
     Memory bound of the one Python crossing: the step-2 ``mapInArrow``
     kernel collects its whole range partition of the summary before it
-    sorts, so each Python worker holds about ``summary rows /
-    parallelism`` rows (not one Arrow batch).  ``parallelism=``
-    (default: the session's ``defaultParallelism``) raises the partition
-    count and shrinks that per-task footprint.
+    sorts, so each Python worker holds one partition (not one Arrow
+    batch).  By default adaptive query execution (AQE) sizes the
+    partitions: the range shuffle has no fixed count, and AQE coalesces
+    neighbouring ranges to about ``shuffle bytes / defaultParallelism``,
+    but not below ``spark.sql.adaptive.coalescePartitions.minPartitionSize``
+    (1 MB of shuffle data by default).  So a task holds about the larger
+    of an even ``defaultParallelism`` split and 1 MB of shuffle data: a
+    large summary still gets about ``defaultParallelism`` partitions, and
+    a small one is a single partition, so one Python task (each task costs
+    a worker ~0.2 s of fixed CPU, and an Arrow-loaded worker keeps ~140 MB
+    of RSS).  Merging neighbours keeps partition order == value order, and
+    the fit's sizes are integral counts, so the prefix sums (and the
+    buckets) are exact under any split.  Without AQE partition coalescing,
+    or with fewer initial shuffle partitions
+    (``spark.sql.adaptive.coalescePartitions.initialPartitionNum``, else
+    ``spark.sql.shuffle.partitions``) than ``defaultParallelism``, the
+    count is ``defaultParallelism``; ``parallelism=n`` (n >= 1) fixes it at
+    n.  Each call logs the checkpointed partition count, and what chose it
+    (``aqe``, ``parallelism=n`` or ``defaultParallelism``), at INFO on this
+    module's logger.
 
     ``max_distinct`` must be at least 1: a cap of 0 or below would snap
-    every value of every variable into one bucket.
+    every value of every variable into one bucket.  ``parallelism``, when
+    given, must be at least 1 too.
     """
     from pyspark.sql.window import Window
 
     if max_distinct < 1:
         raise ValueError(f"max_distinct must be >= 1, got {max_distinct}")
+    if parallelism is not None and parallelism < 1:
+        raise ValueError(f"parallelism must be >= 1, got {parallelism}")
 
     spark = summary.sparkSession
-    if parallelism is None:
+    if parallelism is not None:
+        chosen = f"parallelism={parallelism}"
+    elif _aqe_coalesces(spark):
+        chosen = "aqe"
+    else:
         parallelism = spark.sparkContext.defaultParallelism
+        chosen = "defaultParallelism"
+    partitions = () if parallelism is None else (parallelism,)
     nn_size = F.when(F.col("value").isNotNull(), F.col("size")).otherwise(F.lit(0.0))
 
     rp = (
         summary.select("variable", "value", "size", "bads", "sumsq")
-        .repartitionByRange(parallelism, "variable", "value")
+        .repartitionByRange(*partitions, "variable", "value")
         .withColumn("__pid", F.spark_partition_id())
         .localCheckpoint(eager=True)
+    )
+    # the checkpoint's partitions are already materialized: no Spark job
+    _log.info(
+        "quantize_summary: %d range partitions (%s)", rp.rdd.getNumPartitions(), chosen
     )
     sub = rp.groupBy("variable", "__pid").agg(
         F.sum(nn_size).alias("__ptot"),
