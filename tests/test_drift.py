@@ -589,6 +589,39 @@ def test_quantile_grid_top_edge_catches_plus_inf(spark):
     assert bins_only.iloc[-1]["actual_count"] == 1  # +inf
 
 
+def test_fitted_bins_send_plus_inf_out_of_range_like_the_encoder(spark):
+    """A fitted ascending bins table ends in a +inf cut, but pd.cut's top
+    edge is right-open: apply_bins encodes +inf as NULL.  psi_report and
+    bin_histogram must therefore count +inf in out_of_range, not in the
+    top fitted bin — only psi_report_quantile's grid has an open top
+    edge (pinned above)."""
+    from woe_monotonic_binning_spark.fit import fit_bins
+    from woe_monotonic_binning_spark.transform import apply_bins
+
+    rng = np.random.default_rng(13)
+    x = rng.normal(0.0, 1.0, 2000)
+    target = (rng.random(2000) < 1.0 / (1.0 + np.exp(2.0 * x))).astype(int)
+    train = spark.createDataFrame(pd.DataFrame({"x": x, "target": target}))
+    bins = fit_bins(train, "target").toPandas()
+    top = bins.dropna(subset=["interval_end_exclude"]).iloc[-1]
+    assert top["interval_end_exclude"] == float("inf")  # ascending table
+    score = spark.createDataFrame(
+        [(float("inf"),), (float("-inf"),), (0.0,)], "x double"
+    )
+    encoded = {
+        r["x"]: r["x_bin"]
+        for r in apply_bins(score, bins, keep_columns=["x"]).collect()
+    }
+    assert encoded[float("inf")] is None and encoded[0.0] is not None
+    detail = psi_report(train, score, bins).toPandas()
+    oor = detail[detail["bucket"] == "out_of_range"]
+    assert int(oor["actual_count"].sum()) == sum(v is None for v in encoded.values())
+    fitted = detail[detail["bucket"] == "bin"].sort_values("bin")
+    assert int(fitted.iloc[-1]["actual_count"]) == 0
+    # -inf and 0.0 are in range (the first start is -inf), as encoded
+    assert int(fitted["actual_count"].sum()) == 2
+
+
 def test_period_col_name_validation_is_loud(spark):
     """Round-7 advice: a period column named like an internal drift column
     ('variable', 'bin', 'count', ...) or containing a dot would shadow a

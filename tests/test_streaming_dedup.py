@@ -33,6 +33,14 @@ def dup_stream_path(spark, tmp_path_factory):
     return path
 
 
+def _table_files(spark, table):
+    """Data files of a managed table in the session warehouse."""
+    import glob
+
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    return glob.glob(f"{warehouse}/{table}/*.parquet")
+
+
 def _stream(spark, path):
     schema = spark.read.parquet(path).schema
     return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(path)
@@ -379,6 +387,8 @@ def test_streaming_simhash_dedup_drops_near_dups_across_batches(spark, tmp_path)
         q.awaitTermination()
         kept = {r.doc_id for r in spark.read.parquet(out).collect()}
         assert kept == {0, 1, 3, 12}
+        # two appends of at most one file per bucket each
+        assert len(_table_files(spark, table)) <= 2 * 4
         # the store carries exactly the survivors' postings: 4 bands each
         spark.catalog.refreshTable(table)
         store = spark.table(table)
@@ -520,6 +530,9 @@ def test_streaming_srp_dedup_drops_embedding_near_dups_across_batches(
         start("ckpt").awaitTermination()
         kept = {r.vec_id for r in spark.read.parquet(out).collect()}
         assert kept == {0, 1, 3, 11, 12}
+        # two appends of at most one file per bucket each, per store table
+        for suffix in ("_postings", "_vecs"):
+            assert len(_table_files(spark, f"{table}{suffix}")) <= 2 * 4
         for suffix in ("_postings", "_vecs", "_caps"):
             spark.catalog.refreshTable(f"{table}{suffix}")
         post = spark.table(f"{table}_postings")
@@ -670,6 +683,8 @@ def test_compact_digest_store_roundtrip(spark, tmp_path):
         n_rows = spark.table(table).count()
         n_distinct = spark.table(table).distinct().count()
         assert len(files_before) > 4  # per-batch appends accumulated
+        # each append writes at most one file per bucket
+        assert len(files_before) <= 3 * 4
 
         compact_digest_store(spark, table)
 
@@ -814,6 +829,65 @@ def test_out_layout_guard_rejects_pre_upgrade_append_files(spark, tmp_path):
     (out / "part-00000.parquet").write_bytes(b"")
     with pytest.raises(ValueError, match="_commit_id=legacy-0"):
         _check_out_layout(str(out), spark)
+
+
+@pytest.mark.parametrize(
+    "sink", ["flat_digest", "bucketed_digest", "simhash", "srp", "psi_monitor"]
+)
+def test_every_sink_refuses_legacy_out_layout_before_starting(spark, tmp_path, sink):
+    """Each effectively-once sink starts through one start-up, so each one
+    refuses an out_path holding root-level parquet files from the
+    pre-_commit_id sink — at call time, before any query starts."""
+    import pandas as pd
+
+    from woe_monotonic_binning_spark.drift import baseline_fractions
+    from woe_monotonic_binning_spark.streaming.dedup import (
+        streaming_dedup_against_bucketed_store,
+        streaming_dedup_against_store,
+        streaming_simhash_dedup_against_store,
+        streaming_srp_dedup_against_store,
+    )
+    from woe_monotonic_binning_spark.streaming.drift import streaming_psi_monitor
+
+    src = str(tmp_path / "src")
+    rows = spark.createDataFrame(
+        [(0, "alpha text", [1.0, 0.0], 0.5)],
+        "doc_id long, text string, embedding array<double>, x double",
+    )
+    rows.write.parquet(src)
+    stream = spark.readStream.schema(rows.schema).parquet(src)
+    out = tmp_path / "out"
+    out.mkdir()
+    (out / "part-00000.parquet").write_bytes(b"")
+    bins = pd.DataFrame(
+        {
+            "variable": ["x", "x"],
+            "interval_start_include": [0.0, 1.0],
+            "interval_end_exclude": [1.0, 2.0],
+            "woe": [-0.5, 0.5],
+            "iv_components": [0.5, 0.5],
+        }
+    )
+    start = {
+        "flat_digest": lambda: streaming_dedup_against_store(
+            stream, str(tmp_path / "store"), str(out)
+        ),
+        "bucketed_digest": lambda: streaming_dedup_against_bucketed_store(
+            stream, "wmb_test_guard_digest", str(out)
+        ),
+        "simhash": lambda: streaming_simhash_dedup_against_store(
+            stream, "wmb_test_guard_simhash", str(out)
+        ),
+        "srp": lambda: streaming_srp_dedup_against_store(
+            stream, "wmb_test_guard_srp", str(out)
+        ),
+        "psi_monitor": lambda: streaming_psi_monitor(
+            stream, bins, baseline_fractions(rows, bins), str(out)
+        ),
+    }[sink]
+    with pytest.raises(ValueError, match="_commit_id=legacy-0"):
+        start()
+    assert not spark.streams.active
 
 
 def test_query_token_handles_uri_checkpoints(monkeypatch, tmp_path):

@@ -39,6 +39,7 @@ Scale posture (the 100 TB read):
 
 from __future__ import annotations
 
+import sys
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -160,19 +161,11 @@ def _bin_index_expr(value: Column, cuts: Sequence[float]) -> Column:
     lo = F.lit(cs[0])
     in_range = (value >= lo) if ascending else (value > lo)
     # beyond the TOP cut the inner chain matches nothing (the encoder maps
-    # it to NULL, pd.cut right-open semantics) — fall through to the
-    # out-of-range bucket instead of a NULL bin.  Exception: an explicit
-    # +inf top cut declares the edge bin OPEN (the quantile-grid path), and
-    # a literal +inf value must land in it, not out-of-range (`value <
-    # lit(inf)` is false for +inf itself — round-7 review).
-    fall_through = (
-        F.lit(n - 1)
-        if ascending and cs[-1] == float("inf")
-        else F.lit(OUT_OF_RANGE)
-    )
+    # it to NULL, pd.cut right-open semantics) — including +inf under a
+    # fitted +inf top cut — so it falls through to the out-of-range bucket
     return (
         F.when(value.isNull() | F.isnan(value), F.lit(MISSING))
-        .when(in_range, F.coalesce(expr, fall_through))
+        .when(in_range, F.coalesce(expr, F.lit(OUT_OF_RANGE)))
         .otherwise(F.lit(OUT_OF_RANGE))
     )
 
@@ -337,7 +330,17 @@ def psi_report_quantile(
             )
         cuts = [float("-inf"), *inner, float("inf")]
         specs.append((col, cuts, [0.0] * (len(cuts) - 1)))
-    return _psi_detail(expected, actual, specs, min_frac)
+
+    def open_top(df: DataFrame) -> DataFrame:
+        # the grid's top edge is OPEN: +inf, which `value < inf` never
+        # catches, scores as the largest finite double (round-7 review)
+        return df.withColumns({
+            c: F.when(F.col(c).cast("double") == float("inf"), F.lit(sys.float_info.max))
+            .otherwise(F.col(c).cast("double"))
+            for c in value_cols
+        })
+
+    return _psi_detail(open_top(expected), open_top(actual), specs, min_frac)
 
 
 def _psi_detail(

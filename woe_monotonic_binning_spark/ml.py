@@ -26,10 +26,11 @@ import os
 from pyspark.ml import Estimator, Model
 from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.ml.util import (
+    DefaultParamsReadable,
     DefaultParamsReader,
+    DefaultParamsWritable,
     DefaultParamsWriter,
     MLReadable,
-    MLReader,
     MLWritable,
     MLWriter,
 )
@@ -128,7 +129,7 @@ def _nan_none(x: float) -> float | None:
     return None if x != x else x
 
 
-class WOEBinner(_WOEParams, Estimator, MLReadable, MLWritable):
+class WOEBinner(_WOEParams, Estimator, DefaultParamsReadable, DefaultParamsWritable):
     """Estimator: learns monotonic WOE bins for each input column.
 
     >>> binner = WOEBinner(targetCol="target", inputCols=["x1", "x2"])
@@ -189,13 +190,6 @@ class WOEBinner(_WOEParams, Estimator, MLReadable, MLWritable):
         model._resetUid(self.uid)
         self._copyValues(model)
         return model
-
-    def write(self) -> MLWriter:
-        return _ParamsOnlyWriter(self)
-
-    @classmethod
-    def read(cls) -> "_ParamsOnlyReader":
-        return _ParamsOnlyReader(cls)
 
 
 class WOEBinnerModel(_WOEParams, Model, MLReadable, MLWritable):
@@ -279,47 +273,16 @@ class WOEBinnerModel(_WOEParams, Model, MLReadable, MLWritable):
         return _ModelReader(cls)
 
 
-class _ParamsOnlyWriter(MLWriter):
-    def __init__(self, instance) -> None:
-        super().__init__()
-        self.instance = instance
+class _ModelWriter(DefaultParamsWriter):
+    """The params metadata plus the bins table as parquet under ``bins``."""
 
-    def saveImpl(self, path: str) -> None:
-        DefaultParamsWriter.saveMetadata(self.instance, path, self.sc)
-
-
-class _ParamsOnlyReader(MLReader):
-    def __init__(self, cls) -> None:
-        super().__init__()
-        self.cls = cls
-
-    def load(self, path: str):
-        metadata = DefaultParamsReader.loadMetadata(path, self.sc)
-        instance = self.cls()
-        instance._resetUid(metadata["uid"])
-        DefaultParamsReader.getAndSetParams(instance, metadata)
-        return instance
-
-
-class _ModelWriter(MLWriter):
     def saveImpl(self, path: str) -> None:  # noqa: D102
-        DefaultParamsWriter.saveMetadata(self.instance, path, self.sc)
+        super().saveImpl(path)
         self.instance.binsTable.write.mode("overwrite").parquet(os.path.join(path, "bins"))
 
-    def __init__(self, instance) -> None:
-        super().__init__()
-        self.instance = instance
 
-
-class _ModelReader(MLReader):
-    def __init__(self, cls) -> None:
-        super().__init__()
-        self.cls = cls
-
-    def load(self, path: str) -> "WOEBinnerModel":
-        metadata = DefaultParamsReader.loadMetadata(path, self.sc)
-        bins = self.sparkSession.read.parquet(os.path.join(path, "bins"))
-        instance = self.cls(bins)
-        instance._resetUid(metadata["uid"])
-        DefaultParamsReader.getAndSetParams(instance, metadata)
+class _ModelReader(DefaultParamsReader):
+    def load(self, path: str) -> "WOEBinnerModel":  # noqa: D102
+        instance = super().load(path)
+        instance._bins = self.sparkSession.read.parquet(os.path.join(path, "bins"))
         return instance

@@ -578,6 +578,14 @@ def simhash_near_pairs(
     )
 
 
+def _hamming(a: str, b: str) -> Column:
+    """Hamming distance of two band arrays: popcount of the per-band xor
+    (also the streaming SimHash store's cross-batch verify)."""
+    return F.expr(
+        f"aggregate(zip_with({a}, {b}, (x, y) -> bit_count(x ^ y)), 0, (acc, v) -> acc + v)"
+    )
+
+
 def _banded_near_pairs(
     fp: DataFrame,
     bands_col: str,
@@ -603,14 +611,10 @@ def _banded_near_pairs(
     )
     fa = fp.select(F.col(id_col).alias("id_a"), F.col(bands_col).alias("ba"))
     fb = fp.select(F.col(id_col).alias("id_b"), F.col(bands_col).alias("bb"))
-    # hamming distance via popcount of per-band xor
-    hamming = F.expr(
-        "aggregate(zip_with(ba, bb, (x, y) -> bit_count(x ^ y)), 0, (acc, v) -> acc + v)"
-    )
     out = (
         cand.join(fa, "id_a")
         .join(fb, "id_b")
-        .select("id_a", "id_b", hamming.alias("hamming"))
+        .select("id_a", "id_b", _hamming("ba", "bb").alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
     )
     return out, banded, counts

@@ -98,16 +98,21 @@ def write_bucketed_table(
     writer.saveAsTable(table_name)
 
 
+def _describe(spark: SparkSession, table_name: str) -> dict[str, str]:
+    """``DESCRIBE FORMATTED`` rows as ``{name: value}``."""
+    return {
+        r.col_name.strip(): (r.data_type or "").strip()
+        for r in spark.sql(f"DESCRIBE FORMATTED {table_name}").collect()
+    }
+
+
 def bucket_spec(
     spark: SparkSession, table_name: str
 ) -> tuple[int, list[str], list[str]]:
     """(num_buckets, bucket_cols, sort_cols) of a bucketed table, read back
     from the catalog — so maintenance helpers (compaction) can preserve a
     table's layout without the caller re-stating it."""
-    info = {
-        r.col_name.strip(): (r.data_type or "").strip()
-        for r in spark.sql(f"DESCRIBE FORMATTED {table_name}").collect()
-    }
+    info = _describe(spark, table_name)
     if "Num Buckets" not in info:
         raise ValueError(f"{table_name!r} is not a bucketed table")
 
@@ -151,11 +156,7 @@ def compact_bucketed_table(
     (round-8 review); pass an explicit format only to convert."""
     n, bucket_cols, sort_cols = bucket_spec(spark, table_name)
     if fmt is None:
-        info = {
-            r.col_name.strip(): (r.data_type or "").strip()
-            for r in spark.sql(f"DESCRIBE FORMATTED {table_name}").collect()
-        }
-        provider = (info.get("Provider") or "").strip().lower()
+        provider = _describe(spark, table_name).get("Provider", "").lower()
         if not provider:
             # A table with no Provider row (e.g. Hive-serde) would fall
             # back to parquet and silently convert the table's format —
@@ -170,15 +171,10 @@ def compact_bucketed_table(
         df = df.distinct()
     staging = f"{table_name}__compact"
     spark.sql(f"DROP TABLE IF EXISTS {staging}")
-    writer = (
-        df.repartition(n, *[df[c] for c in bucket_cols])
-        .write.mode("overwrite")
-        .format(fmt)
-        .bucketBy(n, *bucket_cols)
+    write_bucketed_table(
+        df.repartition(n, *[df[c] for c in bucket_cols]),
+        staging, bucket_cols, n, sort_cols, fmt=fmt,
     )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(staging)
     spark.sql(f"DROP TABLE {table_name}")
     spark.sql(f"ALTER TABLE {staging} RENAME TO {table_name}")
 

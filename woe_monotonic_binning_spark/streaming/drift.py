@@ -29,6 +29,7 @@ from pyspark.sql.streaming import StreamingQuery
 from .. import drift as _drift
 from ..drift import MISSING, OUT_OF_RANGE, bin_histogram  # noqa: F401 (re-export)
 from ..transform import _bins_to_pandas, compile_bin_exprs
+from .dedup import _start_sink
 
 
 def streaming_psi_monitor(
@@ -56,14 +57,13 @@ def streaming_psi_monitor(
     micro-batches are skipped (no population, no signal — alerting on
     "no data" belongs to the source's own lag metrics, not PSI).
 
-    Delivery: effectively-once (round-8 verdict #6) — each micro-batch
-    owns the ``_commit_id=<query-token>-<batch-id>`` partition of
-    ``metrics_path`` and writes it with dynamic partition overwrite (the
-    same pattern as the dedup survivor sinks, streaming/dedup.py), so a
-    foreachBatch replay rewrites that batch's partition in place instead
-    of appending duplicate ``(batch_id, variable)`` metric rows.  Readers
-    see one extra ``_commit_id`` partition column — drop it, or keep it
-    as write lineage."""
+    Delivery: effectively-once (round-8 verdict #6) — the monitor starts
+    through the dedup survivor sinks' ``_start_sink`` (streaming/dedup.py),
+    so each micro-batch owns the ``_commit_id=<query-token>-<batch-id>``
+    partition of ``metrics_path`` and a replay rewrites it in place
+    instead of appending duplicate ``(batch_id, variable)`` metric rows.
+    Readers see one extra ``_commit_id`` partition column — drop it, or
+    keep it as write lineage."""
     specs = compile_bin_exprs(
         _bins_to_pandas(bins), iv_threshold, bin_threshold, remove_100_corr
     )
@@ -112,13 +112,7 @@ def streaming_psi_monitor(
         for r in baseline.itertuples(index=False)
     ]
 
-    from .dedup import _check_out_layout, _query_token
-    from .dedup import _write_survivors_idempotent as _write_metrics_idempotent
-
-    _check_out_layout(metrics_path, stream.sparkSession)
-    token = _query_token(checkpoint_dir)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
+    def _process(batch_df: DataFrame, batch_id: int, commit) -> None:
         from pyspark.sql.window import Window
 
         spark = batch_df.sparkSession
@@ -161,11 +155,8 @@ def streaming_psi_monitor(
                 _drift._status(F.col("psi")).alias("status"),
             )
         )
-        _write_metrics_idempotent(metrics, metrics_path, token, batch_id)
+        commit(metrics)
 
-    writer = stream.writeStream.foreachBatch(_process)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start_sink(
+        stream, metrics_path, checkpoint_dir, _process, trigger_available_now
+    )
