@@ -26,17 +26,52 @@ def docs_with_dups(spark):
     return base.unionByName(extra).cache()
 
 
+# connected_components and minhash_dedup_pairs handle an input that fits
+# the broadcast threshold on the driver and a larger one with their
+# distributed plans; a threshold of -1 always takes the distributed plan.
+# The tests below loop over both routes inside one test each, so their ids
+# stay stable.
+CC_ROUTES = ("driver", "distributed")
+
+
+@contextmanager
+def _cc_route(spark, route):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    if route == "distributed":
+        spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _group_jobs(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return (its result, job count)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_minhash_finds_planted_near_dups(spark, docs_with_dups):
     from woe_monotonic_binning_spark.operators.dedup import minhash_dedup_pairs
 
-    pairs = minhash_dedup_pairs(docs_with_dups, "text", "doc_id", threshold=0.5).collect()
-    found = {(p.id_a, p.id_b) for p in pairs}
-    for d in range(3):
-        assert (d, d + 100000) in found, f"exact dup of {d} missed"
-        assert (d, d + 200000) in found, f"near dup of {d} missed"
-    # jaccard of the exact pair must be 1.0
-    exact = [p for p in pairs if p.id_a < 3 and p.id_b == p.id_a + 100000]
-    assert all(abs(p.jaccard - 1.0) < 1e-9 for p in exact)
+    for route in CC_ROUTES:
+        with _cc_route(spark, route):
+            pairs = minhash_dedup_pairs(
+                docs_with_dups, "text", "doc_id", threshold=0.5
+            ).collect()
+        found = {(p.id_a, p.id_b) for p in pairs}
+        for d in range(3):
+            assert (d, d + 100000) in found, f"{route}: exact dup of {d} missed"
+            assert (d, d + 200000) in found, f"{route}: near dup of {d} missed"
+        # jaccard of the exact pair must be 1.0
+        exact = [p for p in pairs if p.id_a < 3 and p.id_b == p.id_a + 100000]
+        assert exact and all(abs(p.jaccard - 1.0) < 1e-9 for p in exact), route
 
 
 def test_simhash_finds_planted_dups(spark, docs_with_dups):
@@ -107,24 +142,32 @@ def test_minhash_bucket_cap_degrades_to_star_not_drop(spark):
     rows = [(i, base) for i in range(k)]
     rows.append((500, "a completely different document about other things " * 5))
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = minhash_dedup_pairs(docs, "text", "doc_id", threshold=0.7, max_bucket=k - 2)
-    got = {(p.id_a, p.id_b) for p in pairs.collect()}
-    # exactly the star around the min-id anchor; pre-round-9 drop
-    # semantics produced the EMPTY set here
-    cluster_pairs = {(a, b) for a, b in got if a < 500 and b < 500}
-    assert cluster_pairs == {(0, i) for i in range(1, k)}
-    # and the component resolution still collapses the whole cluster
-    kept = dedup_keep_canonical(docs, pairs, "doc_id")
-    kept_ids = {r.doc_id for r in kept.collect()}
-    assert kept_ids == {0, 500}
-    # at the boundary (max_bucket == k) the buckets are NOT over the cap:
-    # the full quadratic cluster
-    at_cap = minhash_dedup_pairs(docs, "text", "doc_id", threshold=0.7, max_bucket=k)
-    at_cap_pairs = {
-        (p.id_a, p.id_b) for p in at_cap.collect() if p.id_a < 500 and p.id_b < 500
-    }
-    assert len(at_cap_pairs) == k * (k - 1) // 2
-    assert at_cap_pairs == {(i, j) for i in range(k) for j in range(i + 1, k)}
+    for route in CC_ROUTES:
+        with _cc_route(spark, route):
+            pairs = minhash_dedup_pairs(
+                docs, "text", "doc_id", threshold=0.7, max_bucket=k - 2
+            )
+            got = {(p.id_a, p.id_b) for p in pairs.collect()}
+            # exactly the star around the min-id anchor; pre-round-9 drop
+            # semantics produced the EMPTY set here
+            cluster_pairs = {(a, b) for a, b in got if a < 500 and b < 500}
+            assert cluster_pairs == {(0, i) for i in range(1, k)}, route
+            # and the component resolution still collapses the whole cluster
+            kept = dedup_keep_canonical(docs, pairs, "doc_id")
+            kept_ids = {r.doc_id for r in kept.collect()}
+            assert kept_ids == {0, 500}, route
+            # at the boundary (max_bucket == k) the buckets are NOT over the
+            # cap: the full quadratic cluster
+            at_cap = minhash_dedup_pairs(
+                docs, "text", "doc_id", threshold=0.7, max_bucket=k
+            )
+            at_cap_pairs = {
+                (p.id_a, p.id_b)
+                for p in at_cap.collect()
+                if p.id_a < 500 and p.id_b < 500
+            }
+        assert len(at_cap_pairs) == k * (k - 1) // 2, route
+        assert at_cap_pairs == {(i, j) for i in range(k) for j in range(i + 1, k)}, route
 
 
 @pytest.mark.certification  # slow battery; see pytest.ini (round 18)
@@ -229,17 +272,19 @@ def test_minhash_hashed_shingle_pair_parity(spark, docs_with_dups):
 
     sf001_docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     for df, threshold in ((docs_with_dups, 0.5), (sf001_docs, 0.5)):
-        new = {
-            (r.id_a, r.id_b, r.jaccard)
-            for r in minhash_dedup_pairs(
-                df, "text", "doc_id", threshold=threshold
-            ).collect()
-        }
         old = {
             (r.id_a, r.id_b, r.jaccard)
             for r in old_pipeline(df, threshold).collect()
         }
-        assert new == old and len(new) > 0
+        for route in CC_ROUTES:
+            with _cc_route(spark, route):
+                new = {
+                    (r.id_a, r.id_b, r.jaccard)
+                    for r in minhash_dedup_pairs(
+                        df, "text", "doc_id", threshold=threshold
+                    ).collect()
+                }
+            assert new == old and len(new) > 0, route
     spark.catalog.clearCache()
 
 
@@ -265,36 +310,6 @@ def test_exact_dedup_shapes_agree(spark):
     assert generic.count() == digest.count()
     assert generic.exceptAll(digest).count() == 0
     assert digest.exceptAll(generic).count() == 0
-
-
-# connected_components labels a graph of at most L pairs on the driver
-# (L from the broadcast threshold) and a larger one with the distributed
-# loop; a threshold of -1 always takes the loop.  The tests below loop over
-# both routes inside one test each, so their ids stay stable.
-CC_ROUTES = ("driver", "distributed")
-
-
-@contextmanager
-def _cc_route(spark, route):
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(key)
-    if route == "distributed":
-        spark.conf.set(key, "-1")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
-
-
-def _group_jobs(spark, group, fn):
-    """Run ``fn`` under a fresh job group; return (its result, job count)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_connected_components_transitive_closure(spark):
@@ -504,8 +519,9 @@ def test_connected_components_job_counts_per_route(spark):
 
 def test_curate_corpus_minhash_job_count(spark):
     """One curate_corpus(near_dup="minhash") call on the sf0.001 documents
-    runs 21 Spark jobs; 14 fewer than when its connected components ran the
-    distributed loop (35)."""
+    runs 14 Spark jobs: 21 when its MinHash candidates came from the
+    distributed band/bucket join, and 35 when its connected components also
+    ran the distributed loop."""
     from woe_monotonic_binning_spark import curate_corpus
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -516,7 +532,139 @@ def test_curate_corpus_minhash_job_count(spark):
         )
     finally:
         spark.catalog.clearCache()
-    assert jobs == 21, f"curate_corpus ran {jobs} jobs"
+    assert jobs == 14, f"curate_corpus ran {jobs} jobs"
+
+
+def test_minhash_job_counts_per_route(spark):
+    """One minhash_dedup_pairs call on the sf0.001 documents: the driver
+    route runs 8 jobs (the size probe, the Arrow fetch and the verify);
+    with the threshold at -1 the distributed route runs exactly as many as
+    before the driver route existed (17)."""
+    from woe_monotonic_binning_spark.operators.dedup import minhash_dedup_pairs
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+
+    def call():
+        return minhash_dedup_pairs(docs, "text", "doc_id", threshold=0.5)
+
+    spark.catalog.clearCache()
+    _, driver = _group_jobs(spark, "wmb_minhash_driver", call)
+    with _cc_route(spark, "distributed"):
+        _, loop = _group_jobs(spark, "wmb_minhash_distributed", call)
+    assert driver <= 8, f"driver route ran {driver} jobs"
+    assert loop == 17, f"distributed route ran {loop} jobs"
+
+
+def test_minhash_driver_signatures_match_spark(spark, docs_with_dups):
+    """The driver route's numpy signatures equal minhash_signatures row for
+    row, a NULL text included; an empty and a NULL hash set get the -1 and
+    -2 sentinels that stand for Spark's NULL signatures."""
+    import pyarrow as pa
+
+    from woe_monotonic_binning_spark.operators.dedup import (
+        _hashed_shingles,
+        _signatures_on_driver,
+        minhash_signatures,
+        shingled,
+    )
+
+    docs = docs_with_dups.select("doc_id", "text").unionByName(
+        spark.createDataFrame([(900001, None)], "doc_id long, text string")
+    )
+    sh = shingled(docs, "text", "doc_id")
+    want = {r.doc_id: r.signature for r in minhash_signatures(sh, "doc_id").collect()}
+    table = _hashed_shingles(sh, "doc_id").toArrow()
+    sig = _signatures_on_driver(table.column("shingles").combine_chunks(), 64)
+    got = dict(zip(table.column("doc_id").to_pylist(), sig.tolist()))
+    assert len(got) == docs.count() and got == want
+    sets = pa.array([[], None, [5, 7]], pa.list_(pa.int64()))
+    spark_sig = minhash_signatures(
+        spark.createDataFrame([(1, [])], "doc_id long, shingles array<string>"),
+        "doc_id",
+        4,
+    ).first().signature
+    assert spark_sig == [None] * 4
+    edge = _signatures_on_driver(sets, 4).tolist()
+    assert edge[0] == [-1] * 4 and edge[1] == [-2] * 4
+    assert all(0 <= v < 2**31 - 1 for v in edge[2])
+
+
+def test_minhash_null_and_duplicate_id_route_parity(spark):
+    """NULL ids count toward a bucket's size but are never paired, and
+    equal (duplicate) ids never pair with each other, on both routes: the
+    same verified rows for a cap above, equal to and below the hot bucket's
+    size (13 rows: 12 docs plus one NULL id)."""
+    from woe_monotonic_binning_spark.operators.dedup import minhash_dedup_pairs
+
+    base = " ".join(f"tok{i} common words here" for i in range(30))
+    other = "a completely different document " * 5
+    k = 12
+    rows = [(i, base) for i in range(k)] + [
+        (None, base),
+        (None, None),
+        (3, other),
+        (3, None),
+        (500, other),
+        (501, None),
+        (502, ""),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    for cap in (1_000, k + 1, k):
+        got = {}
+        for route in CC_ROUTES:
+            with _cc_route(spark, route):
+                got[route] = sorted(
+                    tuple(r)
+                    for r in minhash_dedup_pairs(
+                        docs, "text", "doc_id", threshold=0.5, max_bucket=cap
+                    ).collect()
+                )
+        assert got["driver"] == got["distributed"], cap
+        pairs = {(a, b) for a, b, _ in got["driver"]}
+        assert all(a is not None and b is not None and a < b for a, b in pairs)
+        # duplicate id 3 pairs through each of its rows; two NULL texts
+        # have identical shingle sets
+        assert {(3, 500), (3, 501)} <= pairs
+        cluster = {(a, b) for a, b in pairs if b < k}
+        if cap > k:
+            assert cluster == {(i, j) for i in range(k) for j in range(i + 1, k)}
+        else:
+            assert cluster == {(0, i) for i in range(1, k)}
+
+
+def test_minhash_route_log_and_threshold_fallbacks(spark, caplog):
+    """Every minhash_dedup_pairs call logs one INFO line: route, hash count,
+    the hash bound L and the candidates.  A threshold too small for the
+    candidates (16 KiB: 1,024 pairs for 1,056 candidate rows) or for the
+    hashes (1 KiB: L = 128) falls back to the distributed route, as -1
+    does without a probe; all four give the same pairs."""
+    import logging
+
+    from woe_monotonic_binning_spark.operators.dedup import minhash_dedup_pairs
+
+    base = " ".join(f"tok{i} common words here" for i in range(30))
+    docs = spark.createDataFrame(
+        [(i, base) for i in range(12)], "doc_id long, text string"
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    caplog.set_level(logging.INFO, logger="woe_monotonic_binning_spark.operators.dedup")
+    got = []
+    try:
+        for threshold in ("10485760b", "16k", "1k", "-1"):
+            spark.conf.set(key, threshold)
+            got.append(
+                sorted(tuple(r) for r in minhash_dedup_pairs(docs, "text", "doc_id").collect())
+            )
+    finally:
+        spark.conf.set(key, prev)
+    assert [r.getMessage() for r in caplog.records] == [
+        "minhash_dedup_pairs: 1068 hashes <= L=1310720 -> driver, 66 candidates",
+        "minhash_dedup_pairs: 1068 hashes <= L=2048 -> distributed, candidates > 1024",
+        "minhash_dedup_pairs: 1068 hashes > L=128 -> distributed, candidates not counted",
+        "minhash_dedup_pairs: unprobed hashes, L=-1 -> distributed, candidates not counted",
+    ]
+    assert len(got[0]) == 66 and all(g == got[0] for g in got)
 
 
 def test_dedup_keep_canonical_collapses_planted_dups(spark, docs_with_dups):
@@ -575,15 +723,17 @@ def test_minhash_jaccard_estimates_match_exact(spark, docs_with_dups):
         ngram_jaccard_pairs,
     )
 
-    mh = {
-        (p.id_a, p.id_b): p.jaccard
-        for p in minhash_dedup_pairs(
-            docs_with_dups, "text", "doc_id", threshold=0.8
-        ).collect()
-    }
-    # verification step outputs exact jaccard, so every reported pair >= 0.8
-    assert mh
-    assert all(j >= 0.8 for j in mh.values())
+    for route in CC_ROUTES:
+        with _cc_route(spark, route):
+            mh = {
+                (p.id_a, p.id_b): p.jaccard
+                for p in minhash_dedup_pairs(
+                    docs_with_dups, "text", "doc_id", threshold=0.8
+                ).collect()
+            }
+        # verification step outputs exact jaccard, so every reported pair >= 0.8
+        assert mh, route
+        assert all(j >= 0.8 for j in mh.values()), route
 
 
 def test_ivf_recall_vs_brute_force(spark):
@@ -2837,10 +2987,12 @@ def test_minhash_band_parameters_validated(spark):
         [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta")],
         "doc_id long, text string",
     )
-    with pytest.raises(ValueError, match="divide"):
-        minhash_dedup_pairs(docs, "text", "doc_id", num_hashes=8, bands=16)
-    with pytest.raises(ValueError, match="divide"):
-        minhash_dedup_pairs(docs, "text", "doc_id", num_hashes=60, bands=16)
+    for route in CC_ROUTES:
+        with _cc_route(spark, route):
+            with pytest.raises(ValueError, match="divide"):
+                minhash_dedup_pairs(docs, "text", "doc_id", num_hashes=8, bands=16)
+            with pytest.raises(ValueError, match="divide"):
+                minhash_dedup_pairs(docs, "text", "doc_id", num_hashes=60, bands=16)
     with pytest.raises(ValueError, match="unit"):
         from woe_monotonic_binning_spark.operators.dedup import shingled
 

@@ -196,6 +196,52 @@ def test_connected_components_driver_route_is_local_table(spark):
     assert "ExistingRDD" not in plan
 
 
+def test_minhash_driver_route_verifies_local_candidates(spark, monkeypatch):
+    """On the driver route minhash_dedup_pairs verifies an Arrow-built
+    candidate table (a LocalTableScan) and bands nothing in Spark (no
+    Generate); with the threshold at -1 the distributed route explodes the
+    bands and builds no local table."""
+    from woe_monotonic_binning_spark.operators import dedup
+
+    plans = []
+    release = dedup.materialize_and_release
+
+    def capture(result, *intermediates):
+        plans.append(formatted_plan(result))
+        return release(result, *intermediates)
+
+    monkeypatch.setattr(dedup, "materialize_and_release", capture)
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    dedup.minhash_dedup_pairs(docs, "text", "doc_id", threshold=0.5)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        dedup.minhash_dedup_pairs(docs, "text", "doc_id", threshold=0.5)
+    finally:
+        spark.conf.set(key, prev)
+    driver, distributed = plans
+    assert "LocalTableScan" in driver and "Generate" not in driver
+    assert "Generate" in distributed and "LocalTableScan" not in distributed
+
+
+def test_engine_local_tables_are_arrow_built(spark, li):
+    """The engine's own small tables are built from Arrow and plan as a
+    LocalTableScan: WOEBinnerModel's bins copy and psi_report's bin
+    scaffold and fitted-WOE table.  A row list would plan as an ExistingRDD
+    scan of a Python RDD, one Python task per core on every read."""
+    from woe_monotonic_binning_spark.drift import psi_report
+    from woe_monotonic_binning_spark.ml import WOEBinner
+
+    model = WOEBinner(
+        targetCol="target", inputCols=FEATURES, nThreshold=100.0, ivThreshold=0.0
+    ).fit(li)
+    bins_plan = formatted_plan(model.binsTable)
+    assert "LocalTableScan" in bins_plan and "ExistingRDD" not in bins_plan
+    detail = formatted_plan(psi_report(li, li, model.binsTable, iv_threshold=0.0))
+    assert "LocalTableScan" in detail and "ExistingRDD" not in detail
+
+
 def test_minhash_pipeline_stays_jvm_side(spark):
     from woe_monotonic_binning_spark.operators.dedup import (
         minhash_signatures,

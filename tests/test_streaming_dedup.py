@@ -370,15 +370,17 @@ def test_streaming_simhash_dedup_drops_near_dups_across_batches(spark, tmp_path)
     try:
         src = tmp_path / "src"
         out = str(tmp_path / "out")
+        # two files per micro-batch, so each batch runs at least two
+        # tasks and the per-append file bound below sees a multi-task append
         for rows in (batch1, batch2):
-            spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-                1
+            spark.createDataFrame(rows, "doc_id long, text string").repartition(
+                2
             ).write.mode("append").parquet(str(src))
             _time.sleep(1.1)
         schema = spark.read.parquet(str(src)).schema
         stream = (
             spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
+            .option("maxFilesPerTrigger", 2)
             .parquet(str(src))
         )
         q = streaming_simhash_dedup_against_store(
@@ -509,17 +511,19 @@ def test_streaming_srp_dedup_drops_embedding_near_dups_across_batches(
         b1, b2 = _srp_stream_corpus()
         src = tmp_path / "src"
         out = str(tmp_path / "out")
+        # two files per micro-batch, so each batch runs at least two
+        # tasks and the per-append file bound below sees a multi-task append
         for rows in (b1, b2):
             spark.createDataFrame(
                 rows, "vec_id long, embedding array<double>"
-            ).coalesce(1).write.mode("append").parquet(str(src))
+            ).repartition(2).write.mode("append").parquet(str(src))
             _time.sleep(1.1)
         schema = spark.read.parquet(str(src)).schema
 
         def start(ckpt):
             stream = (
                 spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
+                .option("maxFilesPerTrigger", 2)
                 .parquet(str(src))
             )
             return streaming_srp_dedup_against_store(

@@ -27,7 +27,6 @@ def map_rows(df: DataFrame, cols, schema: str, row_fn) -> DataFrame:
     kernels turn malformed payloads into honest-reject rows first.
     ``row_fn`` ships to the workers inside the closure, so it must be
     picklable there."""
-    import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import DataType
 
@@ -36,12 +35,7 @@ def map_rows(df: DataFrame, cols, schema: str, row_fn) -> DataFrame:
     session_cap = df.sparkSession.conf.get(batch_key)
 
     def to_batch(rows):
-        columns = zip(*rows, strict=True)
-        return pa.RecordBatch.from_arrays(
-            [pa.array(c, type=f.type)
-             for c, f in zip(columns, arrow_schema, strict=True)],
-            schema=arrow_schema,
-        )
+        return _record_batch(rows, arrow_schema)
 
     def run(batches):
         from pyspark import TaskContext
@@ -61,3 +55,29 @@ def map_rows(df: DataFrame, cols, schema: str, row_fn) -> DataFrame:
                 yield to_batch(rows)
 
     return df.select(*cols).mapInArrow(run, schema)
+
+
+def local_table(spark, rows, schema: str) -> DataFrame:
+    """A DataFrame of the Python tuples ``rows``, typed by the DDL
+    ``schema`` and built from an Arrow table, so it plans as a
+    ``LocalTableScan``.  ``spark.createDataFrame(<list>)`` plans as a
+    Python RDD instead: every read of it runs one Python task per
+    default-parallelism slot."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    struct = DataType.fromDDL(schema)
+    batch = _record_batch(list(rows), to_arrow_schema(struct))
+    return spark.createDataFrame(pa.Table.from_batches([batch]), struct)
+
+
+def _record_batch(rows, arrow_schema):
+    """One Arrow record batch of the tuples ``rows``, typed by ``arrow_schema``."""
+    import pyarrow as pa
+
+    columns = list(zip(*rows, strict=True)) or [() for _ in arrow_schema]
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema, strict=True)],
+        schema=arrow_schema,
+    )

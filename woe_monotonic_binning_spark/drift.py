@@ -44,6 +44,7 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ._rows import local_table
 from .transform import _bins_to_pandas, compile_bin_exprs
 
 #: bin-index sentinels for the two non-fitted buckets
@@ -216,8 +217,8 @@ def _scaffold(spark, specs) -> DataFrame:
             rows.append((v, i, cs[i], cs[i + 1]))
         rows.append((v, OUT_OF_RANGE, None, None))
         rows.append((v, MISSING, None, None))
-    return spark.createDataFrame(
-        rows, "variable string, bin int, interval_lo double, interval_hi double"
+    return local_table(
+        spark, rows, "variable string, bin int, interval_lo double, interval_hi double"
     )
 
 
@@ -606,7 +607,8 @@ def characteristic_stability(
         # pinned; released after the eager materialisation below
         hist = hist.persist()
     scaffold = _scaffold(spark, specs)
-    fitted = spark.createDataFrame(
+    fitted = local_table(
+        spark,
         [
             (v, i, float(w))
             for v, cuts, woes in specs

@@ -33,6 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from . import _algo
+from ._rows import local_table
 from ._algo import BINS_COLUMNS, FitParams
 
 _log = logging.getLogger(__name__)
@@ -420,7 +421,7 @@ def fit_bins(
     if not columns:
         # an unpivot needs a value column: the degenerate rows alone, or
         # no bins — the reference's batch returns {} (SURVEY section 3.1)
-        return deg if deg is not None else spark.createDataFrame([], schema=BINS_SCHEMA_DDL)
+        return deg if deg is not None else local_table(spark, [], BINS_SCHEMA_DDL)
     long = _melt_features_indexed(df, target, columns)
     summary = summarize(long)
     if max_distinct == "auto":

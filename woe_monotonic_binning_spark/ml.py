@@ -184,8 +184,9 @@ class WOEBinner(_WOEParams, Estimator, DefaultParamsReadable, DefaultParamsWrita
         # lineage is the full distributed fit — without this, every
         # model.transform() / model.save() would re-run the fit over the
         # training data.  A local-relation copy pays the fit exactly once and
-        # is immune to catalog.clearCache().
-        bins = dataset.sparkSession.createDataFrame(bins.collect(), schema=bins.schema)
+        # is immune to catalog.clearCache().  Built from Arrow: a row list
+        # would plan as a Python RDD scan on every read.
+        bins = dataset.sparkSession.createDataFrame(bins.toArrow(), schema=bins.schema)
         model = WOEBinnerModel(bins)
         model._resetUid(self.uid)
         self._copyValues(model)

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from .._cache import materialize_and_release
+from .._rows import local_table
 from ..functions.vector import cosine_from_norms, dot, norm
 from .dedup import _bucket_pairs, _cosine_verify
 
@@ -115,7 +116,8 @@ def train_centroids(
 
 
 def _centroid_df(spark, centroids: list[list[float]]) -> DataFrame:
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cell int, c_vec array<double>",
     )

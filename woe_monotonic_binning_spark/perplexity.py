@@ -48,6 +48,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ._rows import local_table
 from .operators.text import _WORD_RE
 
 __all__ = [
@@ -245,17 +246,7 @@ def train_ngram_lm(
     )
     vocab = {r["w"] for r in vocab_rows}
     vmap = {w: 1 for w in vocab}  # one-row broadcast membership map
-    spark = df.sparkSession
-    from pyspark.sql.types import (
-        IntegerType, MapType, StringType, StructField, StructType,
-    )
-
-    vrow = spark.createDataFrame(
-        [(vmap,)],
-        StructType([
-            StructField("__v", MapType(StringType(), IntegerType()))
-        ]),
-    )
+    vrow = local_table(df.sparkSession, [(vmap,)], "__v map<string, int>")
     toks = _tokens(F.col(text_col))
     mapped = F.transform(
         toks,

@@ -222,6 +222,5 @@ def write_tar_shards(
     manifest = slim.groupBy("shard").applyInPandas(
         pack, schema=_MANIFEST_SCHEMA
     )
-    # eager: the manifest collect IS the write barrier
-    rows = manifest.collect()
-    return df.sparkSession.createDataFrame(rows, _MANIFEST_SCHEMA)
+    # eager: the manifest fetch IS the write barrier
+    return df.sparkSession.createDataFrame(manifest.toArrow(), _MANIFEST_SCHEMA)

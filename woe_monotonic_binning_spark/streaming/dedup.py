@@ -40,6 +40,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from .._rows import local_table
+
 
 def streaming_exact_dedup(
     stream: DataFrame,
@@ -364,7 +366,7 @@ def streaming_dedup_against_store(
         except AnalysisException:  # first batch: store does not exist yet
             # Deliberately NARROW: an unreadable/corrupt store must raise,
             # not silently restart dedup from an empty digest set.
-            ref = spark.createDataFrame([], "digest string")
+            ref = local_table(spark, [], "digest string")
         fresh = dedup_against_reference(batch_df, ref, text_col, id_col).persist()
         commit(fresh)
         fresh.select(
@@ -422,7 +424,7 @@ def streaming_dedup_against_bucketed_store(
         if spark.catalog.tableExists(store_table):
             ref = spark.table(store_table).select("digest")
         else:
-            ref = spark.createDataFrame([], "digest string")
+            ref = local_table(spark, [], "digest string")
         fresh = dedup_against_reference(batch_df, ref, text_col, id_col).persist()
         commit(fresh)
         digests = fresh.select(

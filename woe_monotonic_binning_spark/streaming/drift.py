@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from .. import drift as _drift
+from .._rows import local_table
 from ..drift import MISSING, OUT_OF_RANGE, bin_histogram  # noqa: F401 (re-export)
 from ..transform import _bins_to_pandas, compile_bin_exprs
 from .dedup import _start_sink
@@ -117,8 +118,8 @@ def streaming_psi_monitor(
 
         spark = batch_df.sparkSession
         hist = bin_histogram(batch_df, specs)
-        base = spark.createDataFrame(
-            base_records, "variable string, bin int, expected_frac double"
+        base = local_table(
+            spark, base_records, "variable string, bin int, expected_frac double"
         )
         # batch total as a window over the baseline-joined frame — a
         # groupBy+join of `hist` would evaluate the batch-scan lineage
